@@ -3,13 +3,10 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
-/** Fresh-child-JVM spawn shared by every measurement-escalation path
-  * (Bench's drift re-measure, ScaleCheck's deep tier): same-process
+/** Fresh-child-JVM spawn for ScaleCheck's deep tier: same-process
   * re-runs cannot escape a degraded JVM (GC/heap state, allocator
   * fragmentation, codegen-cache pollution), so the controlled condition
-  * is a child on THIS classpath. One implementation so the
-  * heap-inheritance, spawn and capture logic cannot drift between the
-  * two callers (r13 briefly had two copies that already differed). */
+  * is a child on THIS classpath. */
 private[graft] object ChildJvm {
 
   /** Run `mainClass` with `args` in a fresh JVM inheriting this JVM's

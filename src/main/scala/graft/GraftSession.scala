@@ -2,36 +2,26 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** THE engine-owned Spark session configuration — one definition for
+/** The engine-owned Spark session configuration: one definition for
   * every main that plans or serves declared queries (Bench, QBench,
-  * Explain, StageProf, Verify, ScaleCheck, probes, demos).
-  *
-  * Hoisted in r15 from four hand-copied harness blocks: planner
-  * behavior (AQE, join strategy) is engine policy, not harness policy,
-  * and per-main copies let "what the bench measures" drift from "what
-  * the engine ships" (a Verify or serving session silently planned
-  * different joins than the bench graded).
+  * Explain, StageProf, Verify, ScaleCheck, demos and the serving
+  * surfaces). Planner behavior is engine policy, so what the bench
+  * measures is what every other surface ships.
   *
   * Config rationale:
   *   - shuffle partitions = core count (local mode has no reason for
   *     200); at cluster scale AQE coalescing is the partition-count
   *     governor either way.
   *   - AQE + partition coalescing on (the reference enables the same).
-  *   - Join strategy (guide §3.1/§9): sort-merge → shuffled-hash ONLY
-  *     via AQE's runtime rewrite, which checks the ACTUAL post-shuffle
-  *     partition bytes against the 64 MB threshold — scale-safe
-  *     regardless of estimates, because an SHJ build side (unlike
-  *     sort-merge) cannot spill. r14 additionally shipped the STATIC
-  *     preference (`preferSortMergeJoin=false`), which decides from
-  *     ESTIMATED sizes and could OOM on a bad cardinality estimate at
-  *     scale; an r15 same-window A/B over the join-heavy queries
-  *     (d17/d19/d9/q3/q13/q34) measured the static flag at zero gain
-  *     (AQE-only was flat-to-faster on every one), so the default is
-  *     back to Spark's and only the byte-checked rewrite remains.
-  *     `GRAFT_PREFER_SMJ=false` re-enables the static preference for
-  *     A/B measurement. Operators that KNOW a side is a bounded
-  *     aggregate still force SHJ with an explicit `shuffle_hash` hint
-  *     (d14/d16/d17's df semi-joins).
+  *   - Join strategy: sort-merge → shuffled-hash ONLY via AQE's runtime
+  *     rewrite, which checks the ACTUAL post-shuffle partition bytes
+  *     against the 64 MB threshold. That is scale-safe regardless of
+  *     estimates, because an SHJ build side (unlike sort-merge) cannot
+  *     spill. The static `preferSortMergeJoin=false` is NOT set: it
+  *     decides from ESTIMATED sizes and could OOM on a bad cardinality
+  *     estimate. Operators that KNOW a side is a bounded aggregate
+  *     force SHJ with an explicit `shuffle_hash` hint (d14/d16/d17's df
+  *     semi-joins).
   *   - UTC session zone: the events loader refuses anything else (the
   *     TIMESTAMP_NTZ cast reads naive values in the session zone).
   */
@@ -48,8 +38,6 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("GRAFT_PREFER_SMJ", "true"))
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -24,8 +24,8 @@ object QBench {
         val dt = (System.nanoTime() - t0) / 1e9
         (dt, rows)
       }
-      // Locale.ROOT: Bench's fresh-JVM escalation regex-parses this line,
-      // and a comma-decimal default locale would break the times= parse.
+      // Locale.ROOT: a comma-decimal default locale would break a
+      // parse of the times= list.
       def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.2f", v)
       println(s"QBENCH $n rows=${times.head._2} times=${times.map(t => fmt(t._1)).mkString(",")}")
     }

@@ -568,11 +568,11 @@ object DeepProbe {
     def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
     time(baseDir) // codegen/JIT warm-up
     val base = (1 to 2).map(_ => time(baseDir)).min
-    // min-of-2 for the deep wall too (r13's committed single-sample
-    // walls swung ~3× between same-code runs): ambient contention only
-    // ever ADDS time, so of two same-code runs the faster is the more
-    // representative — the bench's keep-the-faster doctrine. Marginal
-    // cost ≈ one extra deep wall per probe; the corpus is already built.
+    // min-of-2 for the deep wall too (single-sample walls swing ~3×
+    // between same-code runs): ambient contention only ever ADDS time,
+    // so of two same-code runs the faster is the more representative.
+    // Marginal cost ≈ one extra deep wall per probe; the corpus is
+    // already built.
     val deep = (1 to 2).map(_ => time(deepDir)).min
     // The child's own machine-speed calibration (Bench's fixed
     // CPU-bound probe), so a cross-session wall comparison has a

@@ -73,15 +73,18 @@ object Tables {
   /** Materialize a cached frame with ONE pass before a plan reads it
     * from multiple LEAF stages of the same job. Concurrent leaf stages
     * race to populate a cold cache and recompute overlapping partitions
-    * (the BlockManager "already exists on this machine" churn in every
-    * sweep log) — for a corpus-heavy cache that is up to one duplicate
-    * tokenize/hash pass per extra reader. One count job = one build;
-    * the count costs a job submission, so callers apply it only where
-    * ≥2 same-job leaf stages read the cache (measured per site, r15).
-    * `graft.cache.prime=off` re-enables the racing layout for A/Bs. */
-  private[graft] def prime(df: DataFrame): DataFrame =
-    if (sys.props.getOrElse("graft.cache.prime", "on") == "off") df
-    else { df.count(); df }
+    * (the BlockManager "already exists on this machine" churn); for a
+    * corpus-heavy cache that is up to one duplicate tokenize/hash pass
+    * per extra reader. One count job = one build, but it costs a job
+    * submission, so the rule per site is:
+    *   - prime only a build that SATURATES the machine, where racing
+    *     readers duplicate CPU-bound work (d4's char-gram cache);
+    *   - leave a cache unprimed when its racing readers back-fill idle
+    *     cores instead (d13's word shingles, c2's fused corpus frame);
+    *   - overlap independent work only into an IDLE driver window (c5's
+    *     lexical drop set during Lloyd's collects), never beside a
+    *     CPU-saturating job (d17's connected components). */
+  private[graft] def prime(df: DataFrame): DataFrame = { df.count(); df }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

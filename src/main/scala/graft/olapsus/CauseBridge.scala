@@ -17,10 +17,11 @@ import org.apache.spark.sql.DataFrame
   * combine). New-group id assignment keeps the reference's semantics
   * (dense ids in signature order continuing from max+1, sim.py:214-227)
   * but NOT its single-partition `row_number()` window: ids come from
-  * [[graft.operators.Ranks.globalRowNumber]] — range-partition by
-  * signature, rank within partitions in parallel, shift by per-partition
-  * offsets — so no task ever sorts more than its own partition. The
-  * single-writer assumption (read-before-write merge) is unchanged.
+  * [[graft.operators.Ranks.globalRowNumber]] — one parallel range sort
+  * by signature, numbered by partition offset plus local position — so
+  * no task ever sorts more than its own partition, and the bridge rows,
+  * the signature rows and the fact mapping all read the same numbering.
+  * The single-writer assumption (read-before-write merge) is unchanged.
   */
 object CauseBridge {
 

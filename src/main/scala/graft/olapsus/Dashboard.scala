@@ -47,7 +47,13 @@ object Dashboard {
   def start(wh: Warehouse, port: Int): HttpServer = {
     wh.registerViews()
     val server = HttpServer.create(new InetSocketAddress("localhost", port), 0)
-    server.setExecutor(Executors.newFixedThreadPool(4))
+    // Daemon workers: a stopped server leaves no thread that keeps the
+    // JVM alive (DashServe blocks on its own main thread instead).
+    server.setExecutor(Executors.newFixedThreadPool(4, (r: Runnable) => {
+      val t = new Thread(r, "dashboard-worker")
+      t.setDaemon(true)
+      t
+    }))
 
     def params(ex: HttpExchange): Map[String, String] = {
       val q = Option(ex.getRequestURI.getRawQuery).getOrElse("")

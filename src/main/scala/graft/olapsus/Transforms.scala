@@ -15,6 +15,11 @@ import org.apache.spark.sql.{Column, DataFrame}
   *  - SIM takes CODMUN* as-is (6-digit files, sim.py:118-125) while
   *    SINASC substrings 7-digit codes to 6 (sinasc.py:49-56).
   *
+  * An impossible date or a non-numeric code decodes to NULL, as it did
+  * under the reference's non-ANSI Spark (`try_to_date` / `try_cast`;
+  * the ANSI `to_date` / `cast` would fail the whole batch). The NULL
+  * then follows the dataset's null policy downstream.
+  *
   * All pure `DataFrame => DataFrame` projections — whole-stage codegen,
   * no UDFs, trivially partition-parallel.
   */
@@ -51,24 +56,24 @@ object Transforms {
 
   private def blankToNullInt(c: Column, digits6: Boolean): Column = {
     val base = when(c.isNull || trim(c) === "", lit(null))
-    if (digits6) base.otherwise(substring(c.cast("string"), 1, 6).cast("int"))
-    else base.otherwise(c.cast("int"))
+    if (digits6) base.otherwise(substring(c.cast("string"), 1, 6).try_cast("int"))
+    else base.otherwise(c.try_cast("int"))
   }
 
   /** SINASC (births) raw → clean. */
   def sinasc(df: DataFrame): DataFrame =
-    df.withColumn("data_nascimento", to_date(col("DTNASC").cast("string"), "ddMMyyyy"))
+    df.withColumn("data_nascimento", try_to_date(col("DTNASC").cast("string"), "ddMMyyyy"))
       .withColumn("tempo_nascimento", normalizeHora(col("HORANASC"), blankInvalid = true))
       .withColumn("cod_mun_nasc", blankToNullInt(col("CODMUNNASC"), digits6 = true))
       .withColumn("cod_mun_res", blankToNullInt(col("CODMUNRES"), digits6 = true))
-      .withColumn("idade_mae", col("IDADEMAE").cast("int"))
+      .withColumn("idade_mae", col("IDADEMAE").try_cast("int"))
       .withColumn("raca_mae_desc", decodeMap(col("RACACORMAE"), racaMap, "Ignorado"))
       .withColumn("esc_mae_desc", decodeMap(col("ESCMAE"), escolaridadeMap, "Ignorado"))
       .withColumn("estciv_mae_desc", decodeMap(col("ESTCIVMAE"), estadoCivilMap, "Ignorado"))
       .withColumn("sexo_rn_desc",
         when(col("SEXO") === "1", "M").when(col("SEXO") === "2", "F").otherwise("I"))
       .withColumn("raca_rn_desc", decodeMap(col("RACACOR"), racaMap, "Ignorado"))
-      .withColumn("peso_gramas", col("PESO").cast("int"))
+      .withColumn("peso_gramas", col("PESO").try_cast("int"))
       .withColumn("parto_desc", decodeMap(col("PARTO"), partoMap, "Ignorado"))
       .withColumn("gestacao_desc", decodeMap(col("GESTACAO"), gestacaoMap, "Ignorado"))
       .withColumn("gravidez_desc", decodeMap(col("GRAVIDEZ"), gravidezMap, "Ignorado"))
@@ -77,8 +82,8 @@ object Transforms {
     * (the bridge keys on it, sim.py:323). */
   def sim(df: DataFrame): DataFrame = {
     val withBase = df
-      .withColumn("data_obito", to_date(col("DTOBITO").cast("string"), "ddMMyyyy"))
-      .withColumn("data_nascimento", to_date(col("DTNASC").cast("string"), "ddMMyyyy"))
+      .withColumn("data_obito", try_to_date(col("DTOBITO").cast("string"), "ddMMyyyy"))
+      .withColumn("data_nascimento", try_to_date(col("DTNASC").cast("string"), "ddMMyyyy"))
       .withColumn("tempo_obito", normalizeHora(col("HORAOBITO"), blankInvalid = false))
       .withColumn("sexo_desc",
         when(col("SEXO") === "1" || col("SEXO") === "M", "Masculino")
@@ -89,8 +94,8 @@ object Transforms {
       .withColumn("esc_desc", decodeMap(col("ESC"), escolaridadeMap, "Ignorado"))
       // Coded age (sim.py:91-102): unit digit <4 ⇒ 0 years, 4 ⇒ value,
       // 5 ⇒ value+100, else unknown.
-      .withColumn("id_unid", substring(lpad(col("IDADE"), 3, "0"), 1, 1).cast("int"))
-      .withColumn("id_val", substring(lpad(col("IDADE"), 3, "0"), 2, 2).cast("int"))
+      .withColumn("id_unid", substring(lpad(col("IDADE"), 3, "0"), 1, 1).try_cast("int"))
+      .withColumn("id_val", substring(lpad(col("IDADE"), 3, "0"), 2, 2).try_cast("int"))
       .withColumn("idade_anos",
         when(col("id_unid") < 4, 0)
           .when(col("id_unid") === 4, col("id_val"))

@@ -117,37 +117,42 @@ object Curation extends OpModule {
     // table would re-attach kept to every row and pay a presentation
     // sort the anti-join never reads.
     //
-    // Overlap (guide §2.6, r15): semDroppedIds' construction BLOCKS the
-    // driver on Lloyd's synchronous collect rounds while the cores sit
-    // mostly idle; the lexical subtree is completely independent of the
-    // embedding side, so a second driver thread materializes its cached
-    // drop set during that window (FIFO scheduling back-fills the idle
-    // cores with the shingle/band stages). The join() below means the
-    // final query always reads a fully-built cache — same frames, same
-    // result, the serial lex-after-training wall is what disappears.
+    // Overlap: semDroppedIds' construction BLOCKS the driver on Lloyd's
+    // synchronous collect rounds while the cores sit mostly idle; the
+    // lexical subtree is completely independent of the embedding side,
+    // so a second driver thread materializes its cached drop set during
+    // that window (FIFO scheduling back-fills the idle cores with the
+    // shingle/band stages). The join below means the final query always
+    // reads a fully-built cache — same frames, same result.
     def buildLex() = {
       val l = Dedup.d2Pairs(spark, dir)
         .select(col("doc_b").as("doc_id")).distinct().cache()
       l.count() // fully materialized: the final query reads, never rebuilds
       l
     }
-    val overlap = sys.props.getOrElse("graft.c5.overlap", "on") != "off"
-    val (lex, semBase) =
-      if (!overlap) (buildLex(), Dedup.semDroppedIds(spark, dir, Similarity.KC))
-      else {
-        // Construction AND materialization both live on the second
-        // thread: buildLex's count() is eager, so an inline call would
-        // run the whole lexical chain before training ever starts.
-        val lexF = java.util.concurrent.CompletableFuture.supplyAsync(() => buildLex())
-        val s =
-          try Dedup.semDroppedIds(spark, dir, Similarity.KC)
-          catch { case t: Throwable =>
-            // Don't leak running lex jobs into a caller's next attempt.
-            try lexF.join() catch { case _: Throwable => () }
-            throw t
-          }
-        (lexF.join(), s) // a lex-side failure rethrows here, as inline would
+    // Construction AND materialization both live on the second thread:
+    // buildLex's count() is eager, so an inline call would run the whole
+    // lexical chain before training ever starts. A thread created per
+    // call (not a pooled one) inherits this thread's Spark local
+    // properties (job group, scheduler pool, ...).
+    val lexF = java.util.concurrent.CompletableFuture.supplyAsync(() => buildLex(),
+      (r: Runnable) => {
+        val t = new Thread(r, "c5-lex-prefetch")
+        t.setDaemon(true)
+        t.start()
+      })
+    val semBase =
+      try Dedup.semDroppedIds(spark, dir, Similarity.KC)
+      catch { case t: Throwable =>
+        // Don't leak running lex jobs into a caller's next attempt.
+        try lexF.join() catch { case _: Throwable => () }
+        throw t
       }
+    // A lex-side failure rethrows with its own type, as inline would.
+    val lex =
+      try lexF.join()
+      catch { case e: java.util.concurrent.CompletionException if e.getCause != null =>
+        throw e.getCause }
     val sem = semBase.select(col("vec_id").as("doc_id"))
     curate(spark, dir, lex.unionByName(sem).distinct())
   })
@@ -284,35 +289,29 @@ object Curation extends OpModule {
                            - n_docs, 0) AS BIGINT) AS n_dropped
       FROM census
       ORDER BY lang, stage_idx
-    """))((spark, dir) =>
-    if (sys.props.getOrElse("graft.c2.fuse", "on") == "off")
-      funnel(spark, dir,
-        Dedup.d2Pairs(spark, dir).select(col("doc_b").as("doc_id")).distinct())
-    else {
-      // Fused corpus frame (r15, guide §2.4): the funnel's flag frame and
-      // d2's shingle chain each scanned + tokenized the corpus in their
-      // own cached pass — the ONLY c-family query where BOTH subtrees
-      // already paid a cache write (c1/c5's curate base is a pipelined
-      // uncached min_by; fusing it was measured at +10-25% and reverted).
-      // One pass computes flags AND the shingle hash array; the pair
-      // chain feeds from the same cache through the d2PairsFromShingles
-      // seam, so the shingle definition cannot drift. Two-step select:
-      // CollapseProject would otherwise inline `w` into each consumer
-      // and tokenize three times per row.
-      val fused = Tables.spread(Tables.documents(spark, dir))
-        .select(col("doc_id"), col("lang"), col("text"),
-          TextFns.tokens(col("text")).as("w"))
-        .select(col("doc_id"), col("lang"),
-          (size(col("w")) >= 20).as("q"), md5(col("text")).as("h"),
-          when(size(col("w")) >= 3, Dedup.shingleHashCol(col("w"))).as("sh"))
-        .cache()
-      // NOT primed (r15, measured flat-to-worse 2.01→2.04 — the racing
-      // readers here pipeline rather than saturate; only d4's prime won).
-      val pairs = Dedup.d2PairsFromShingles(
-        fused.filter(col("sh").isNotNull).select(col("doc_id"), col("sh")))
-      funnelFrom(fused.select("doc_id", "lang", "q", "h"),
-        pairs.select(col("doc_b").as("doc_id")).distinct())
-    })
+    """))((spark, dir) => {
+    // Fused corpus frame: the funnel's flag frame and d2's shingle chain
+    // would each scan + tokenize the corpus in their own cached pass.
+    // One pass computes flags AND the shingle hash array; the pair chain
+    // feeds from the same cache through the d2PairsFromShingles seam, so
+    // the shingle definition cannot drift. (c1/c5's curate base is a
+    // pipelined uncached min_by, so fusing does not pay there.) Two-step
+    // select: CollapseProject would otherwise inline `w` into each
+    // consumer and tokenize three times per row.
+    val fused = Tables.spread(Tables.documents(spark, dir))
+      .select(col("doc_id"), col("lang"), col("text"),
+        TextFns.tokens(col("text")).as("w"))
+      .select(col("doc_id"), col("lang"),
+        (size(col("w")) >= 20).as("q"), md5(col("text")).as("h"),
+        when(size(col("w")) >= 3, Dedup.shingleHashCol(col("w"))).as("sh"))
+      .cache()
+    // Not primed: the racing readers pipeline rather than saturate (the
+    // [[Tables.prime]] rule).
+    val pairs = Dedup.d2PairsFromShingles(
+      fused.filter(col("sh").isNotNull).select(col("doc_id"), col("sh")))
+    funnelFrom(fused.select("doc_id", "lang", "q", "h"),
+      pairs.select(col("doc_b").as("doc_id")).distinct())
+  })
 
   /** c2's per-stage attrition census with the near-dup drop set
     * injected — shared by the inline oracle query and

@@ -174,15 +174,11 @@ object Dedup extends OpModule {
     * scale. */
   private[operators] def d2Pairs(spark: SparkSession, dir: String): DataFrame =
     d2PairsFromShingles(
-      // NOT primed (r15, measured): three leaf stages of the final job
-      // race to populate this cache cold (minhash map side + both
-      // exact-Jaccard attach sides — the BlockManager already-exists
-      // churn), but the duplicated shingle work back-fills otherwise
-      // idle cores, while an eager materialization barrier serializes
-      // the chain: priming measured d2 0.98→1.21 s, c1 1.62→1.96 s
-      // same-JVM interleaved. The race is the cheaper evil here; the
-      // prime ships only where the duplicated work saturates the box
-      // (d4's char-gram stream — see gramIntersections).
+      // Not primed: three leaf stages of the final job race to populate
+      // this cache cold (minhash map side + both exact-Jaccard attach
+      // sides), but the duplicated shingle work back-fills otherwise
+      // idle cores, while an eager build barrier would serialize the
+      // chain (the [[Tables.prime]] rule).
       shingled(Tables.spread(Tables.documents(spark, dir)))
         .cache()) // reused for exact-Jaccard rescoring of the candidates
 
@@ -1004,17 +1000,12 @@ object Dedup extends OpModule {
     * no-hint invariant. */
   private def gramIntersections(gramRows: DataFrame,
       primeGrams: Boolean = false): DataFrame = {
-    // primeGrams (r15): THREE leaf stages of the final job read this
-    // cache (the sizes aggregate's map side plus both self-join sides)
-    // and race to populate it cold — duplicated gram-hash+window work
-    // (StageProf: two concurrent stages writing identical shuffle
-    // bytes, run 14.5 s + 8.1 s). Whether one eager build beats the
-    // race depends on the gram stream's weight: d4's char-5-gram
-    // stream saturates the box and priming measured −15% (2.59→2.21 s
-    // same-JVM interleaved); d13's word-5-shingle stream is light
-    // enough that the racing duplicates back-fill idle cores and the
-    // prime's barrier measured +7% (1.70→1.82 s) — so d4 primes and
-    // d13 does not.
+    // primeGrams: THREE leaf stages of the final job read this cache
+    // (the sizes aggregate's map side plus both self-join sides) and
+    // race to populate it cold. Per the [[Tables.prime]] rule, d4's
+    // char-5-gram stream saturates the machine and primes; d13's
+    // word-5-shingle stream is light enough that the racing duplicates
+    // back-fill idle cores, so d13 does not.
     val cached = gramRows
       .withColumn("dfb",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("bg")))
@@ -1169,12 +1160,33 @@ object Dedup extends OpModule {
     * maximal ≥[[SpanMinTokens]]-token shared run, (doc_a, doc_b,
     * start_a, start_b, span_tokens) with doc_a < doc_b. Shared with
     * d15's trim census so the cut plan is definitionally the spans. */
-  private def spanTable(spark: SparkSession, dir: String): DataFrame =
-    spanTableWith(spark, dir, "aggshj")
+  private def spanTable(spark: SparkSession, dir: String): DataFrame = {
+    // Fused hash: one codegen'd loop hashes every SpanN-gram position —
+    // no per-position gram string, no md5-hex/conv parse (same value;
+    // the oracle chain is untouched).
+    val occ0 = Tables.spread(Tables.documents(spark, dir))
+      .select(col("doc_id"), TextFns.tokens(col("text")).as("w"))
+      .filter(size(col("w")) >= SpanN)
+      .select(col("doc_id"),
+        posexplode(TextFns.wordShingleHashLong(col("w"), SpanN)))
+      .select(col("doc_id"), (col("pos") + 1).cast("long").as("p"),
+        col("col").as("gh"))
+    // Cached here (not inside the chain): the df aggregate and the
+    // semi-join probe side both read it, and THIS path derives it from
+    // a fresh scan + tokenize. The fused-corpus path (planParts, d15)
+    // passes a projection of its own cached frame instead — re-running
+    // a posexplode over cached arrays is cheaper than a second cache.
+    // Not primed: the df aggregate and semi-join probe leaves back-fill
+    // idle cores rather than saturate (the [[Tables.prime]] rule).
+    spanPairsFromShared(spanSharedFromOcc(occ0.cache()))
+  }
 
-  /** [[spanTable]] with the df-filter strategy selectable — the
-    * `windowDf = true` form exists ONLY for [[graft.SpanSkewProbe]]'s
-    * side-by-side measurement and must not be shipped in an operator.
+  /** The span chain's df-pruned shared-occurrence CACHE, from (doc_id,
+    * p, gh) gram-occurrence rows. `occ0` must be cached or a cheap
+    * projection of a cached frame: the df filter reads it twice. The
+    * plan family (d17/d19) feeds it from its fused corpus cache and
+    * composes the pair tail itself, so this half and
+    * [[spanPairsFromShared]] stay separate.
     *
     * df filter via PARTIAL-AGG COUNT + SEMI-JOIN, not a count window
     * over gh: d14's join is deliberately corpus-GLOBAL (no lang/source
@@ -1188,79 +1200,23 @@ object Dedup extends OpModule {
     * 2..SpanMaxDf gram list is keys-only, and the one full-occ
     * exchange happens in the semi-join, where AQE's skew-join split
     * CAN spread a hot gram across tasks (a window partition cannot be
-    * split). d4's agg-vs-window measurement does not transfer here:
-    * d4's window rides a BLOCKED key that cannot concentrate, and
-    * saves an exchange its join needs anyway. */
-  private[graft] def spanTableWith(spark: SparkSession, dir: String,
-      dfStrategy: String): DataFrame = {
-    // Fused hash (r14): one codegen'd loop hashes every SpanN-gram
-    // position — no per-position gram string, no md5-hex/conv parse
-    // (same value; the oracle chain is untouched).
-    val occ0 = Tables.spread(Tables.documents(spark, dir))
-      .select(col("doc_id"), TextFns.tokens(col("text")).as("w"))
-      .filter(size(col("w")) >= SpanN)
-      .select(col("doc_id"),
-        posexplode(TextFns.wordShingleHashLong(col("w"), SpanN)))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("p"),
-        col("col").as("gh"))
-    // Cached here (not inside the chain): the df aggregate and the
-    // semi-join probe side both read it, and THIS path derives it from
-    // a fresh scan + tokenize. The fused-corpus path (planParts, d15)
-    // passes a projection of its own cached frame instead — re-running
-    // a posexplode over cached arrays is cheaper than a second cache.
-    // NOT primed (r15, measured): the df aggregate and semi-join probe
-    // leaves race on this cache cold, but an eager build barrier
-    // measured d14 1.78→1.89 s and d15 0.38→0.71 s same-JVM interleaved
-    // — the d2-chain result again (only d4's saturating char-gram
-    // stream wins from a prime).
-    spanTableFromOcc(
-      if (dfStrategy == "window") occ0 else occ0.cache(), dfStrategy)
-  }
-
-  /** The span chain from (doc_id, p, gh) gram-occurrence rows on — the
-    * seam that lets the plan family (d17/d19) and d15 feed the chain
-    * from their fused corpus caches (one scan + tokenize per query, not
-    * one per subtree). `occ0` must be cached or a cheap projection of a
-    * cached frame: the df filter reads it twice. */
-  private def spanTableFromOcc(occ0: DataFrame,
-      dfStrategy: String): DataFrame =
-    spanPairsFromShared(spanSharedFromOcc(occ0, dfStrategy))
-
-  /** The span chain's df-pruned shared-occurrence CACHE — split out of
-    * [[spanTableFromOcc]] (r15) as the seam for a §2.6 thread-overlap
-    * of the plan family's CC window. The overlap itself was measured
-    * and NOT shipped (d17 2.52→3.40 s, d19 2.33→3.17 s — CC's count job
-    * is CPU-saturated, so the prefetch only contends and then barriers
-    * construction); the split stays because it is behavior-identical
-    * (spanTableFromOcc composes the two halves) and keeps the
-    * measurement reproducible. */
-  private def spanSharedFromOcc(occ0: DataFrame,
-      dfStrategy: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-    dfStrategy match {
-      case "window" =>
-        // Measurement-only historical form: single-task per hot gram.
-        occ0.withColumn("dfg", count(lit(1)).over(w.partitionBy("gh")))
-          .cache()
-          .filter(col("dfg") > 1 && col("dfg") <= SpanMaxDf)
-          .select("doc_id", "p", "gh")
-      case "agg" | "aggshj" =>
-        val good = occ0.groupBy("gh").agg(count(lit(1)).as("dfg"))
-          .filter(col("dfg") > 1 && col("dfg") <= SpanMaxDf)
-          .select("gh")
-        val build = if (dfStrategy == "aggshj") good.hint("shuffle_hash") else good
-        // Cached post-join: both self-join sides read gh-partitioned
-        // blocks (the semi-join's output partitioning), so the pair
-        // join adds no exchange — the same zero-extra-exchange property
-        // the window form had via its cached window partitioning.
-        occ0.join(build, Seq("gh"), "leftsemi")
-          .select("doc_id", "p", "gh")
-          .cache()
-    }
+    * split). d4's window form does not transfer here: d4's window rides
+    * a BLOCKED key that cannot concentrate, and saves an exchange its
+    * join needs anyway. */
+  private def spanSharedFromOcc(occ0: DataFrame): DataFrame = {
+    val good = occ0.groupBy("gh").agg(count(lit(1)).as("dfg"))
+      .filter(col("dfg") > 1 && col("dfg") <= SpanMaxDf)
+      .select("gh")
+    // Cached post-join: both self-join sides read gh-partitioned blocks
+    // (the semi-join's output partitioning), so the pair join adds no
+    // exchange.
+    occ0.join(good.hint("shuffle_hash"), Seq("gh"), "leftsemi")
+      .select("doc_id", "p", "gh")
+      .cache()
   }
 
   /** The span chain's pair-join + islands tail over the df-pruned
-    * shared-occurrence cache — the other half of [[spanTableFromOcc]]. */
+    * shared-occurrence cache — the other half of [[spanSharedFromOcc]]. */
   private def spanPairsFromShared(shared: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
     val m = shared.as("a")
@@ -1379,12 +1335,11 @@ object Dedup extends OpModule {
     """))((spark, dir) => {
     // The span table feeds both the interval sweep and the per-doc span
     // count; cache it (tiny — found spans only) so the gram join runs
-    // once, not once per consumer. (A fused (n_tokens, sg) corpus cache
-    // — the r15 planCorpus pattern — was MEASURED here and reverted:
-    // d15's lens branch needs only one narrow column, and the fused
-    // frame's array cache write cost more than the scan it saved,
-    // 0.30 s → 0.37 s same-window. The pattern pays only when three
-    // subtrees share the tokenize, as in d17/d19.)
+    // once, not once per consumer. No fused (n_tokens, sg) corpus cache
+    // here (the planCorpus pattern): d15's lens branch needs only one
+    // narrow column, so the fused frame's array cache write costs more
+    // than the scan it saves. The pattern pays only when three subtrees
+    // share the tokenize, as in d17/d19.
     val spans = spanTable(spark, dir).cache()
     val cuts = spanCuts(spans)
     val nsp = spans
@@ -1715,7 +1670,7 @@ object Dedup extends OpModule {
     pc.filter(col("n_tokens") >= 3).select(col("doc_id"), col("sh"))
 
   /** The span chain's (doc_id, p, gh) occurrence rows from a fused
-    * corpus cache — definitionally [[spanTableWith]]'s occ0. */
+    * corpus cache — definitionally [[spanTable]]'s occ0. */
   private def pcSpanOcc(pc: DataFrame): DataFrame =
     pc.filter(col("n_tokens") >= SpanN)
       .select(col("doc_id"), posexplode(col("sg")))
@@ -1733,14 +1688,11 @@ object Dedup extends OpModule {
     * shingle subtree; the fused frame skips the shingle column. */
   private def planParts(spark: SparkSession, dir: String,
       pairs: DataFrame): PlanParts =
-    // Primed (r15): with the pairs served from storage nothing touches
-    // the fused frame until the final job reads it from several leaf
-    // stages at once (exact groups, span occ, docs) — racing the
-    // tokenize pass; one eager build measured flat at sf0.1
-    // (0.26→0.25) and removes the duplicated tokenize by design. The
-    // inline path stays unprimed: its CC count job materializes the
-    // frame while the cores are otherwise its own (the d2-chain
-    // race-vs-prime measurement applies).
+    // Primed: with the pairs served from storage nothing touches the
+    // fused frame until the final job reads it from several leaf stages
+    // at once (exact groups, span occ, docs), which would race the
+    // tokenize pass. The inline path stays unprimed: its CC count job
+    // materializes the frame while the cores are otherwise its own.
     planPartsFrom(spark, Tables.prime(planCorpus(spark, dir, withShingles = false)),
       pairs)
 
@@ -1754,16 +1706,12 @@ object Dedup extends OpModule {
     val exactLoser = docs.join(mins.hint("shuffle_hash"), Seq("th"))
       .filter(col("doc_id") > col("mn"))
       .select(col("doc_id"), lit(true).as("ex"))
-    // NO span-cache prefetch during connectedComponents (r15, measured):
-    // unlike c5's Lloyd window (driver-blocking collects over a tiny
-    // table — cores idle, prefetch wins −9%), CC's count job IS the
-    // CPU-saturating pairs-chain compute, so a §2.6 overlap thread
-    // forcing the span shared cache here only contends with it and then
-    // barriers construction on its own completion: d17 2.52→3.40 s,
-    // d19 2.33→3.17 s same-JVM interleaved. In the shipped layout the
-    // shared cache materializes inside the final query, concurrently
-    // with the loser subtrees' stages — already overlapped for free.
-    val shared = spanSharedFromOcc(pcSpanOcc(pc), "aggshj")
+    // No span-cache prefetch thread during connectedComponents: CC's
+    // count job is CPU-saturating, so an overlap would only contend and
+    // then barrier construction on its own completion (the
+    // [[Tables.prime]] rule). The shared cache materializes inside the
+    // final query, concurrently with the loser subtrees' stages.
+    val shared = spanSharedFromOcc(pcSpanOcc(pc))
     val comp = connectedComponents(pairs.select("doc_a", "doc_b"))
     val nearLoser = comp
       .join(docs.select("doc_id", "n_chars"), Seq("doc_id"))

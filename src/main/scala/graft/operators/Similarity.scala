@@ -186,10 +186,8 @@ object Similarity extends OpModule {
   /** Cell counts above this use [[withTwoLevelCid]] where the caller
     * opts in (semDeDup's corpus-scaled path); at or below it the flat
     * argmin is both cheaper and exact, and every oracle-pinned geometry
-    * (KC=8, the scale probes' kc≤64 builds) stays on the exact path.
-    * Env-overridable (`GRAFT_TWO_LEVEL_MIN`) for A/B measurement. */
-  private[graft] val TwoLevelMin: Int =
-    sys.env.get("GRAFT_TWO_LEVEL_MIN").map(_.toInt).getOrElse(64)
+    * (KC=8, the scale probes' kc≤64 builds) stays on the exact path. */
+  private[graft] val TwoLevelMin: Int = 64
 
   /** Collect (vec_id, qv) for vec_id < n — the bounded seed/query head
     * of the table. Reads the RAW scan (not the spread/repartitioned

@@ -43,11 +43,13 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("q21: global id assignment is two-phase, no data-wide single-partition window") {
-    val p = plan("q21_group_signature_ids")
-    assert(p.contains("rangepartitioning"), "expected range repartition for two-phase rank")
-    val rnWindows = p.linesIterator.filter(_.contains("row_number()")).toSeq
-    assert(rnWindows.nonEmpty && rnWindows.forall(_.contains("__pid")),
-      "row_number window must be partitioned by __pid, not global:\n" + rnWindows.mkString("\n"))
+    // A window with no PARTITION BY plans as one task that sorts every
+    // row; Ranks.globalRowNumber must number rows without one.
+    val plan = SparkEntry.queries("q21_group_signature_ids")(spark, sf()).queryExecution.optimizedPlan
+    val global = plan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window if w.partitionSpec.isEmpty => w
+    }
+    assert(global.isEmpty, "unpartitioned window:\n" + global.mkString("\n"))
   }
 
   test("d4: gram generation is a generator, not a nested-loop range join") {
@@ -99,7 +101,7 @@ class PlanAuditSpec extends SparkSpecBase {
     // The shipped shape: partial-agg count (hot keys collapse map-side)
     // + a SHUFFLE_HASH semi-join (stream side never sorts; AQE can
     // split a skewed probe partition — a window partition cannot be
-    // split). SpanSkewProbe measures the two forms side by side.
+    // split).
     val p = plan("d14_repeated_spans")
     val dfWindows = p.linesIterator.filter(l =>
       l.contains("Window") && l.contains("gh")).toSeq

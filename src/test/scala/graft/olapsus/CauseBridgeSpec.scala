@@ -100,4 +100,25 @@ class CauseBridgeSpec extends SparkSpecBase {
     // I219 → chave 1 at ordem 1; LINHAII: N40 → 4 at 5, I48 → 2 at 6
     assert(rows == List((1, 1), (4, 5), (2, 6)))
   }
+
+  test("thousands of new groups: bridge ids == signature ids == fact ids == 1..n") {
+    // 2,400 distinct ordered two-code lists over 60 codes, each seen on
+    // eight rows. The bridge rows, the signature rows and the fact
+    // mapping are separate evaluations and must agree on one numbering.
+    val dim = (1 to 60).map(c => (c, f"C$c%03d")).toDF("chave_causa", "codigo_CID")
+    val lists = (0 until 2400).map(i => Seq(f"C${i % 60 + 1}%03d", f"C${i / 60 + 1}%03d"))
+    val r = CauseBridge.resolve(cleanOf(Seq.fill(8)(lists).flatten), dim, seedBridge)
+    def check(what: String, df: DataFrame): Unit = {
+      val ids = df.select("chave_grupo_causa").collect().map(_.getInt(0)).toSeq.distinct.sorted
+      val dense = ids == (1 to lists.size)
+      assert(dense, s"$what ids: ${ids.size} distinct, max ${ids.max}")
+    }
+    check("signature", r.newSignatureRows)
+    assert(r.newSignatureRows.count() == lists.size, "a signature row per new group")
+    check("bridge", r.newBridgeRows)
+    check("fact", r.resolved)
+    def bySig(df: DataFrame) = df.collect().map(x => x.getInt(0) -> x.getString(1)).toMap
+    val same = bySig(CauseBridge.signatures(r.newBridgeRows)) == bySig(r.newSignatureRows)
+    assert(same, "bridge rows and signature rows number the groups differently")
+  }
 }

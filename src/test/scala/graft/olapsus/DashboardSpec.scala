@@ -112,4 +112,24 @@ class DashboardSpec extends SparkSpecBase {
     pool.shutdown()
     bodies.foreach(b => assert(b == want, "concurrent response diverged"))
   }
+
+  test("a stopped server leaves no non-daemon thread behind") {
+    def nonDaemon(): Set[Thread] = {
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive && !t.isDaemon).toSet
+    }
+    wh // seed and ingest before the snapshot
+    val before = nonDaemon()
+    val server = Dashboard.start(wh, 0)
+    val port = server.getAddress.getPort
+    (1 to 4).foreach { _ =>
+      client.send(HttpRequest.newBuilder(URI.create(s"http://localhost:$port/api/rollup2")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+    }
+    server.stop(0)
+    val deadline = System.nanoTime() + 10L * 1000000000L
+    while ((nonDaemon() -- before).nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+    val left = nonDaemon() -- before
+    assert(left.isEmpty, s"non-daemon threads outlive the server: ${left.map(_.getName).mkString(", ")}")
+  }
 }

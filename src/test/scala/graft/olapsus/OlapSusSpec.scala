@@ -96,6 +96,35 @@ class OlapSusSpec extends SparkSpecBase {
     assert(wh.table(Warehouse.Bridge).count() == before)
   }
 
+  // A warehouse of its own: the shared one's tests pin exact row counts.
+  private lazy val malformedWh: Warehouse = {
+    val w = new Warehouse(spark, dir.resolve("wh-malformed").toString)
+    Dims.seedAll(w, municipioCsv, cboCsv, cidCsv)
+    w
+  }
+
+  test("SINASC ingest: an impossible date or a non-numeric code is NULL, not a failed batch") {
+    val csv = Fixtures.write(dir, "sinasc_malformed.csv", Seq(Fixtures.sinasc.head,
+      "01022020;0830;3548906;3503208;25;1;4;2;1;4;2500;1;5;1",
+      "31022020;0830;3548906;3503208;25;1;4;2;1;4;2500;1;5;1", // no 31 Feb: dropped
+      "02022020;0900;3548906;3503208;ab;1;4;2;1;4;3000;1;5;1")) // age 'ab': Ignorado
+    assert(Pipeline.ingestSinasc(malformedWh, csv, "2020-02-01") == 2L)
+    val ages = malformedWh.table("factNascimentos")
+      .join(malformedWh.table("dimDemografia"), "chave_demografia")
+      .select("faixa_etaria").collect().map(_.getString(0)).sorted.toSeq
+    assert(ages.size == 2 && ages.count(_ == "Ignorado") == 1, ages.toString)
+  }
+
+  test("SIM ingest: an impossible date or a non-numeric code is NULL, not a failed batch") {
+    val csv = Fixtures.write(dir, "sim_malformed.csv", Seq(Fixtures.sim.head,
+      "15012020;01011950;1430;1;1;2;3;470;I219;;;;;354890;354890;123456",
+      "30022020;01011950;1430;1;1;2;3;470;I219;;;;;354890;354890;123456", // no 30 Feb
+      "15012020;01011950;1430;1;1;2;3;4ab;I219;;;;;354890;354890;123456", // age '4ab'
+      "15012020;01011950;1430;1;1;2;3;470;I219;;;;;35A890;354890;123456")) // code '35A890'
+    // Each malformed value becomes NULL and na.drop removes its row.
+    assert(Pipeline.ingestSim(malformedWh, csv, "2020-01-15") == 1L)
+  }
+
   test("bridge merge appends only new-group files; existing files untouched") {
     Pipeline.ingestSim(wh, simCsv, "2020-01-15") // idempotent setup if run alone
     val bridgeDir = new java.io.File(dir.resolve("wh").resolve(Warehouse.Bridge).toString)
