@@ -1,7 +1,7 @@
 package graft.olapsus
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 
 /** Dimension resolution + fact load — the join/null-policy/aggregate
   * stage of the two ETLs (SIM: dags/spark_script_sim.py:330-402; SINASC:
@@ -165,6 +165,9 @@ object Pipeline {
   def ingestSinasc(wh: Warehouse, csvGlob: String, dt: String): Long =
     ingestSinascFiles(wh, Seq(csvGlob), dt)
 
+  /** Returns the number of fact rows this call wrote, taken from the
+    * write itself; 0 for a day already logged and for a batch without
+    * data rows (which stays unlogged). */
   def ingestSinascFiles(wh: Warehouse, paths: Seq[String], dt: String): Long = {
     if (paths.isEmpty) return 0L
     // Lease first, manifest check inside it: the manifest-then-append
@@ -178,7 +181,7 @@ object Pipeline {
         val raw = readRaw(wh, paths)
         if (raw.isEmpty) 0L
         else {
-          val fact = resolveSinasc(Transforms.sinasc(raw), wh)
+          val (fact, written) = counted(resolveSinasc(Transforms.sinasc(raw), wh))
           // overwriteDay, not append: a crash between this write and the
           // logIngest row below leaves the day written-but-unlogged, and
           // the replay must REPLACE it, not double it (see the
@@ -187,31 +190,50 @@ object Pipeline {
           wh.overwriteDay("factNascimentos", fact, dt)
           IngestFaults.afterFactWrite(wh.root, "sinasc")
           wh.logIngest("sinasc", dt)
-          fact.count()
+          written()
         }
       }
     }
   }
 
+  /** `df` with a row count observed by the next action on it: the
+    * write reports the rows it wrote, so no second evaluation of the
+    * plan (scan, decode, dim joins, aggregate) is needed to count them.
+    * Read the count only after that action has completed. */
+  private def counted(df: DataFrame): (DataFrame, () => Long) = {
+    val rows = new Observation()
+    (df.observe(rows, count(lit(1)).as("rows")), () => rows.get("rows").asInstanceOf[Long])
+  }
+
   /** Backfill every pending `dt=` day partition under the landing
     * prefix, oldest first — the engine-side equivalent of the
     * reference's daily Airflow loop (dags/spark_dag.py:48-78), driven
-    * by the landing listing plus the ingest manifest: days already
-    * logged are skipped (ingest*Files is idempotent), so re-running
+    * by the landing listing plus the ingest manifest, so re-running
     * backfill after a crash or on a schedule is safe. Returns
-    * (dt, rows) per day processed. */
+    * (dt, rows) per landed day.
+    *
+    * The manifest is read once, before the loop: a day it already logs
+    * is reported as `dt -> 0` without a lease, a listing or a Spark
+    * job (the manifest is append-only, so a logged day stays logged),
+    * and only pending days go through ingest*Files, which re-checks
+    * the manifest inside its lease. The cost of a run is therefore
+    * O(pending days), not O(days ever landed). */
   def backfill(wh: Warehouse, prefix: String, dataset: String): Seq[(String, Long)] = {
     val days = Landing.listGlob(wh.spark, s"$prefix/$dataset/dt=*")
       .map(p => p.substring(p.lastIndexOf("dt=") + 3).stripSuffix("/"))
       .distinct.sorted
+    val logged = if (days.isEmpty) Set.empty[String] else wh.ingestKeys(dataset)
     days.map { dt =>
-      val files = Landing.listDay(wh.spark, prefix, dataset, dt)
-      val n = dataset match {
-        case "sim" => ingestSimFiles(wh, files, dt)
-        case "sinasc" => ingestSinascFiles(wh, files, dt)
-        case other => sys.error(s"unknown dataset $other (sim|sinasc)")
+      if (logged(dt)) dt -> 0L
+      else {
+        val files = Landing.listDay(wh.spark, prefix, dataset, dt)
+        val n = dataset match {
+          case "sim" => ingestSimFiles(wh, files, dt)
+          case "sinasc" => ingestSinascFiles(wh, files, dt)
+          case other => sys.error(s"unknown dataset $other (sim|sinasc)")
+        }
+        dt -> n
       }
-      dt -> n
     }
   }
 
@@ -220,6 +242,8 @@ object Pipeline {
   def ingestSim(wh: Warehouse, csvGlob: String, dt: String): Long =
     ingestSimFiles(wh, Seq(csvGlob), dt)
 
+  /** Returns the number of fact rows written, as [[ingestSinascFiles]]
+    * does. */
   def ingestSimFiles(wh: Warehouse, paths: Seq[String], dt: String): Long = {
     if (paths.isEmpty) return 0L
     // The bridge max+1 merge is the warehouse's most corruption-prone
@@ -254,15 +278,14 @@ object Pipeline {
       wh.appendRows(Warehouse.Bridge, newRows)
       wh.appendRows(Warehouse.Signatures, bridge.newSignatureRows)
     }
-    val fact = resolveSim(bridge.resolved, wh)
+    val (fact, written) = counted(resolveSim(bridge.resolved, wh))
     // Crash-replayable day write — the bridge merge above is already
     // replay-idempotent (signature anti-join); this makes the fact
     // partition match it.
     wh.overwriteDay("factObitos", fact, dt)
     IngestFaults.afterFactWrite(wh.root, "sim")
     wh.logIngest("sim", dt)
-    val n = fact.count()
     newRows.unpersist()
-    n
+    written()
   }
 }

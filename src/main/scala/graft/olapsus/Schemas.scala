@@ -88,6 +88,12 @@ object Schemas {
     "chave_causa_secundaria" -> IntegerType, "chave_ocupacao" -> IntegerType,
     "valor" -> DecimalType(15, 2), "quantidade_procedimentos" -> IntegerType)
 
+  /** A schema's names (lower-cased) and types in column order — the
+    * part of the DDL the warehouse holds tables to. Nullability is not
+    * part of it: parquet round-trips relax it. */
+  def shape(s: StructType): Seq[(String, String)] =
+    s.fields.toSeq.map(f => (f.name.toLowerCase, f.dataType.simpleString))
+
   val all: Map[String, StructType] = Map(
     "dimData" -> dimData, "dimHorario" -> dimHorario,
     "dimMunicipio" -> dimMunicipio, "dimOcupacao" -> dimOcupacao,

@@ -200,22 +200,18 @@ object StreamingIngest {
       .start()
   }
 
-  /** Has THIS RUN of the stream backfill written to day `d`? Its
-    * per-(day, micro-batch) manifest keys are `d#<unitId>` — never a
-    * calendar date, so the batch driver's equality lookups ignore
-    * them. Run-scoped on purpose: a PRIOR run's `#sb` keys (checkpoint
-    * since rebuilt) must read as "someone else completed this day", so
-    * the day falls into the skip arm below instead of being re-appended.
-    * A legacy run (empty token) owns every unscoped `d#sb…` key — there
-    * is only ever one legacy lineage per warehouse. */
-  private def streamTouched(wh: Warehouse, dataset: String, d: String,
-      run: String): Boolean = {
-    import org.apache.spark.sql.functions.{col, lit}
+  /** Has THIS RUN of the stream backfill written to day `d`, per the
+    * manifest keys `logged`? Its per-(day, micro-batch) manifest keys
+    * are `d#<unitId>` — never a calendar date, so the batch driver's
+    * equality lookups ignore them. Run-scoped on purpose: a PRIOR run's
+    * `#sb` keys (checkpoint since rebuilt) must read as "someone else
+    * completed this day", so the day falls into the skip arm below
+    * instead of being re-appended. A legacy run (empty token) owns every
+    * unscoped `d#sb…` key — there is only ever one legacy lineage per
+    * warehouse. */
+  private def streamTouched(logged: Set[String], d: String, run: String): Boolean = {
     val prefix = if (run.isEmpty) s"$d#sb" else s"$d#sb$run-"
-    wh.exists(Warehouse.IngestLog) &&
-      !wh.table(Warehouse.IngestLog)
-        .where(col("dataset") === lit(dataset) && col("dt").startsWith(prefix))
-        .isEmpty
+    logged.exists(_.startsWith(prefix))
   }
 
   /** Streaming twin of [[Pipeline.backfill]]: the whole dt-partitioned
@@ -294,12 +290,17 @@ object StreamingIngest {
         graft.WriterLease.withLease(wh.spark, wh.root,
           graft.WriterLease.processOwner(s"stream-backfill-$dataset"),
           scope = dataset) {
+          // One manifest read per micro-batch, under the lease. The
+          // keys this loop logs for day `d` are `d` and `d#…`, which no
+          // other day's lookup matches, so the snapshot stays exact for
+          // every later day of the batch.
+          val logged = wh.ingestKeys(dataset)
           days.foreach { d =>
             val unit = unitId(run, id)
             val dayBatchKey = s"$d#$unit"
-            val replayed = wh.ingestLogged(dataset, dayBatchKey)
-            val touched = streamTouched(wh, dataset, d, run)
-            val dayLogged = wh.ingestLogged(dataset, d)
+            val replayed = logged(dayBatchKey)
+            val touched = streamTouched(logged, d, run)
+            val dayLogged = logged(d)
             // A day the manifest knows but this run never wrote is a
             // prior writer's COMPLETED work (batch driver or an earlier
             // stream lineage) — skip its files entirely.

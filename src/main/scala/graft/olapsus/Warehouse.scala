@@ -18,7 +18,8 @@ final class Warehouse(val spark: SparkSession, val root: String) {
 
   /** Full-table overwrite (dim seeds, signature bootstrap). A writer
     * like any other: takes the table's lease scope so a seed re-run
-    * cannot race a concurrent compaction of the same table. */
+    * cannot race a concurrent compaction of the same table. A declared
+    * table must be written in its declared shape ([[table]]). */
   def write(table: String, df: DataFrame): Unit =
     graft.WriterLease.withLease(spark, root,
       graft.WriterLease.processOwner("wh-write"),
@@ -30,8 +31,20 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * the table's scope lease (the SIM ingest bootstraps the signature
     * table inside its own `sim` lease; re-acquiring would self-conflict:
     * the lease is not reentrant). */
-  private[olapsus] def writeUnleased(table: String, df: DataFrame): Unit =
+  private[olapsus] def writeUnleased(table: String, df: DataFrame): Unit = {
+    requireDeclaredShape(table, df)
     df.write.mode("overwrite").parquet(path(table))
+  }
+
+  /** [[table]] reads a declared table with its declared schema, and a
+    * column the files lack would read as NULL without any error — so a
+    * writer that drifts from the declaration fails here, before writing. */
+  private def requireDeclaredShape(table: String, df: DataFrame): Unit =
+    Warehouse.Declared.get(table).foreach { declared =>
+      require(Schemas.shape(df.schema) == Schemas.shape(declared),
+        s"$table must be written in its declared shape ${Schemas.shape(declared)}, " +
+          s"got ${Schemas.shape(df.schema)}")
+    }
 
   /** Append one ingest batch under `dt=$dt`. NOT replay-safe on its own
     * (a crashed run's partial files stay); the ingest paths use
@@ -102,10 +115,21 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * rows' files — existing files are never rewritten, so the daily cost
     * is O(new rows), not O(table). The reference does the same
     * (mode("append") to ponteGrupoCausas, spark_script_sim.py:239). */
-  def appendRows(table: String, df: DataFrame): Unit =
+  def appendRows(table: String, df: DataFrame): Unit = {
+    requireDeclaredShape(table, df)
     df.write.mode("append").parquet(path(table))
+  }
 
-  def table(table: String): DataFrame = spark.read.parquet(path(table))
+  /** The unpartitioned tables [[Schemas]] declares (the dims and the
+    * bridge) are read with their declared schema, so a read infers
+    * nothing from file footers (no Spark job); the writers enforce that
+    * declaration ([[write]], [[appendRows]]). Every other table — the
+    * dt-partitioned facts, the signature table, the manifest — is read
+    * with its schema inferred from its files. */
+  def table(table: String): DataFrame = Warehouse.Declared.get(table) match {
+    case Some(schema) => spark.read.schema(schema).parquet(path(table))
+    case None => spark.read.parquet(path(table))
+  }
 
   /** Write a table copy bucketed (and sorted) by the given key into the
     * session catalog as `<table>_bucketed`, backed by files under the
@@ -159,13 +183,22 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * makes per-day batch ingest idempotent: Airflow-style re-runs of a
     * day (the reference would double-append, spark_dag.py:48-78 has no
     * guard) become no-ops. Single-writer, like the bridge merge. */
-  def ingestLogged(dataset: String, dt: String): Boolean = {
+  def ingestLogged(dataset: String, dt: String): Boolean =
+    ingestKeys(dataset)(dt)
+
+  /** Every key the manifest logs for `dataset` — plain days and the
+    * streaming backfill's `day#unit` keys — in one read. Loops that would
+    * ask [[ingestLogged]] once per key take this snapshot once instead.
+    * The manifest is append-only, so a key in the snapshot stays logged;
+    * a key missing from it is only current while the caller holds the
+    * dataset's lease. */
+  def ingestKeys(dataset: String): Set[String] = {
     import org.apache.spark.sql.functions.{col, lit}
-    // Column expressions, not an interpolated where-string: CLI-supplied
+    // A column expression, not an interpolated where-string: CLI-supplied
     // values with quotes must compare as literals, never reparse as SQL.
-    exists(Warehouse.IngestLog) &&
-      !table(Warehouse.IngestLog)
-        .where(col("dataset") === lit(dataset) && col("dt") === lit(dt)).isEmpty
+    if (!exists(Warehouse.IngestLog)) Set.empty
+    else table(Warehouse.IngestLog).where(col("dataset") === lit(dataset))
+      .select("dt").collect().map(_.getString(0)).toSet
   }
 
   def logIngest(dataset: String, dt: String): Unit = {
@@ -237,7 +270,8 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * unit's own replay would: the rows return when the checkpointed
     * micro-batch re-runs. Logged units' files fold in safely — their
     * replay is skipped at the manifest check, never at the prefix
-    * delete. */
+    * delete. The manifest is read once per compaction, and only if a
+    * unit-prefixed file exists. */
   private def dropCrashedUnitFiles(tableName: String,
       partition: Option[String]): Unit =
     Warehouse.unitDataset(tableName).foreach { dataset =>
@@ -245,6 +279,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
       val tableDir = new Path(path(tableName))
       val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(tableDir)) return
+      lazy val logged = ingestKeys(dataset)
       val parts = partition match {
         case Some(p) => Seq(new Path(tableDir, p)).filter(fs.exists(_))
         case None => fs.listStatus(tableDir).toSeq
@@ -261,7 +296,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
           val i = n.lastIndexOf("-part-")
           if (i > 0 && !n.startsWith("_") && !n.startsWith(".")) {
             val unit = n.substring(0, i)
-            if (!ingestLogged(dataset, s"$d#$unit")) fs.delete(f.getPath, false)
+            if (!logged(s"$d#$unit")) fs.delete(f.getPath, false)
           }
         }
       }
@@ -284,6 +319,10 @@ object Warehouse {
   val IngestLog = "_ingest_log"
   val Facts: Seq[String] = Seq("factNascimentos", "factObitos")
   val AllTables: Seq[String] = Dims ++ Seq(Bridge) ++ Facts
+
+  /** The tables read with their declared schema ([[Warehouse.table]]). */
+  val Declared: Map[String, org.apache.spark.sql.types.StructType] =
+    (Dims :+ Bridge).map(t => t -> Schemas.all(t)).toMap
 
   /** Scope of the manifest-append lease — shared by BOTH datasets'
     * `logIngest` and by manifest compaction. */

@@ -499,4 +499,74 @@ class OlapSusSpec extends SparkSpecBase {
       s"size target ignored: ${leafParquetCount()} files across $nPartDirs partitions")
     assert(wh.table(t).collect().map(_.toString).sorted.toSeq == before)
   }
+
+  // A warehouse of its own for the row-count and lease cases: they
+  // compare one day's rows and hold the dataset's lease.
+  private lazy val countWh: Warehouse = {
+    val w = new Warehouse(spark, dir.resolve("wh-counts").toString)
+    Dims.seedAll(w, municipioCsv, cboCsv, cidCsv)
+    w
+  }
+
+  private def dayRows(w: Warehouse, fact: String, dt: String): Long = {
+    import org.apache.spark.sql.functions.col
+    w.table(fact).where(col("dt") === dt).count()
+  }
+
+  /** Fails instead of hanging when `body` does not return. */
+  private def returns[T](body: => T): T = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    Await.result(Future(body)(scala.concurrent.ExecutionContext.global), 2.minutes)
+  }
+
+  test("ingest*Files returns exactly the rows it wrote to the day") {
+    val sinasc = Pipeline.ingestSinascFiles(countWh, Seq(sinascCsv), "2020-03-01")
+    assert(sinasc == 4L && sinasc == dayRows(countWh, "factNascimentos", "2020-03-01"))
+    val sim = Pipeline.ingestSimFiles(countWh, Seq(simCsv), "2020-03-01")
+    assert(sim == 4L && sim == dayRows(countWh, "factObitos", "2020-03-01"))
+  }
+
+  test("ingest*Files: a day whose rows all drop returns 0 and is logged") {
+    val sinascCsv = Fixtures.write(dir, "sinasc_all_dropped.csv", Seq(Fixtures.sinasc.head,
+      ";1200;3543907;3543907;30;3;3;2;1;2;3000;1;5;1")) // no DTNASC
+    assert(returns(Pipeline.ingestSinascFiles(countWh, Seq(sinascCsv), "2020-03-02")) == 0L)
+    assert(dayRows(countWh, "factNascimentos", "2020-03-02") == 0L)
+    assert(countWh.ingestLogged("sinasc", "2020-03-02"))
+    val simCsv = Fixtures.write(dir, "sim_all_dropped.csv", Seq(Fixtures.sim.head,
+      "18012020;04041940;1200;1;3;2;4;501;ZZZ9;;;;;;354890;123456")) // no CODMUNRES
+    assert(returns(Pipeline.ingestSimFiles(countWh, Seq(simCsv), "2020-03-02")) == 0L)
+    assert(dayRows(countWh, "factObitos", "2020-03-02") == 0L)
+    assert(countWh.ingestLogged("sim", "2020-03-02"))
+  }
+
+  test("ingest*Files: a header-only CSV returns 0 and leaves the day unlogged") {
+    val sinascCsv = Fixtures.write(dir, "sinasc_header_only.csv", Seq(Fixtures.sinasc.head))
+    assert(returns(Pipeline.ingestSinascFiles(countWh, Seq(sinascCsv), "2020-03-03")) == 0L)
+    assert(!countWh.ingestLogged("sinasc", "2020-03-03"))
+    val simCsv = Fixtures.write(dir, "sim_header_only.csv", Seq(Fixtures.sim.head))
+    assert(returns(Pipeline.ingestSimFiles(countWh, Seq(simCsv), "2020-03-03")) == 0L)
+    assert(!countWh.ingestLogged("sim", "2020-03-03"))
+  }
+
+  test("a backfill of logged days takes no lease; a pending day still needs it") {
+    val landing = Files.createTempDirectory("landing-noop")
+    def land(dt: String): Unit = {
+      Files.createDirectories(landing.resolve(s"sinasc/dt=$dt"))
+      Fixtures.write(landing.resolve(s"sinasc/dt=$dt"), "part.csv", Fixtures.sinasc)
+    }
+    land("2021-05-01")
+    assert(Pipeline.backfill(countWh, landing.toString, "sinasc") == Seq("2021-05-01" -> 4L))
+    val held = graft.WriterLease.acquire(spark, countWh.root, "other-driver", scope = "sinasc")
+    try {
+      assert(Pipeline.backfill(countWh, landing.toString, "sinasc") == Seq("2021-05-01" -> 0L))
+      land("2021-05-02")
+      val ex = intercept[IllegalStateException] {
+        Pipeline.backfill(countWh, landing.toString, "sinasc")
+      }
+      assert(ex.getMessage.contains("other-driver"), ex.getMessage)
+    } finally held.release()
+    assert(Pipeline.backfill(countWh, landing.toString, "sinasc")
+      == Seq("2021-05-01" -> 0L, "2021-05-02" -> 4L))
+  }
 }
