@@ -60,12 +60,9 @@ object Ingest {
     val wh = new Warehouse(spark, a("warehouse"))
     // FileSystem-resolved listing: --prefix may be s3a://, hdfs://, or a
     // local dir — same code path either way (Landing).
-    val files = Landing.listDay(spark, a("prefix"), a("dataset"), a("date"))
-    val n = a("dataset") match {
-      case "sim" => Pipeline.ingestSimFiles(wh, files, a("date"))
-      case "sinasc" => Pipeline.ingestSinascFiles(wh, files, a("date"))
-      case other => sys.error(s"unknown --dataset $other (sim|sinasc)")
-    }
+    val ds = Pipeline.datasetNamed(a("dataset"))
+    val files = Landing.listDay(spark, a("prefix"), ds.name, a("date"))
+    val n = Pipeline.ingestFiles(wh, ds, files, a("date"))
     println(s"ingested $n fact rows from ${files.size} files under ${a("prefix")}")
     spark.stop()
   }
@@ -73,11 +70,13 @@ object Ingest {
 
 /** `runMain graft.olapsus.Backfill --dataset sim|sinasc --prefix
   * LANDING_DIR --warehouse DIR [--engine batch|stream]` — ingest every
-  * pending `dt=` partition, oldest first. The default batch engine
-  * skips manifest-logged days (re-runs are no-ops); `--engine stream`
-  * drives the same days through [[StreamingIngest.backfill]], where the
-  * stream checkpoint gives file-granular exactly-once across crashes
-  * and completed days land in the manifest too. */
+  * pending `dt=` partition, oldest first. Both engines run the
+  * dataset's one day body. The default batch engine skips
+  * manifest-logged days (re-runs are no-ops) and reads CSV columns by
+  * header name; `--engine stream` drives the same days through
+  * [[StreamingIngest.backfill]], where the stream checkpoint gives
+  * file-granular exactly-once across crashes, completed days land in the
+  * manifest too, and every file must carry exactly the declared header. */
 object Backfill {
   def main(args: Array[String]): Unit = {
     val a = Cli.parseArgs(args)
@@ -91,7 +90,7 @@ object Backfill {
         Pipeline.backfill(wh, a("prefix"), a("dataset")).foreach { case (dt, n) =>
           println(s"dt=$dt: ${if (n == 0) "skipped (logged or empty)" else s"$n fact rows"}")
         }
-      // Fail loudly (like the --dataset arm): silently falling back to
+      // Fail loudly (like an unknown --dataset): silently falling back to
       // batch would hand the user day-granular semantics they didn't ask
       // for.
       case other => sys.error(s"unknown --engine $other (batch|stream)")

@@ -38,7 +38,7 @@ object Fixtures {
     * order (r3), unknown ICD → seeded group 0 but missing CODMUNRES →
     * dropped (r4), unknown age → dropped (r5), no causes → group 0 (r6). */
   val sim: Seq[String] = Seq(
-    "DTOBITO;DTNASC;HORAOBITO;SEXO;RACACOR;ESTCIV;ESC;IDADE;LINHAA;LINHAB;LINHAC;LINHAD;LINHAII;CODMUNRES;CODMUNOCOR;OCUP",
+    Schemas.simHeader,
     "15012020;01011950;1430;1;1;2;3;470;I219;;;;*I48X*N40X;354890;354890;123456",
     "16012020;02021960;2460;M;2;1;2;430;I219;;;;*I48X*N40X;350320;354890;223456",
     "17012020;03031980;0915;2;4;3;;099;I48;I219;;;;354890;999999;",
@@ -50,7 +50,7 @@ object Fixtures {
     * null mother age (null-tolerant band arm), missing DTNASC → dropped,
     * unknown sex/race, unknown municipality → key 0. */
   val sinasc: Seq[String] = Seq(
-    "DTNASC;HORANASC;CODMUNNASC;CODMUNRES;IDADEMAE;RACACORMAE;ESCMAE;ESTCIVMAE;SEXO;RACACOR;PESO;PARTO;GESTACAO;GRAVIDEZ",
+    Schemas.sinascHeader,
     "01022020;0830;3548906;3503208;25;1;4;2;1;4;2500;1;5;1",
     "02022020;;3548906;3548906;;2;2;1;2;1;999;2;3;2",
     ";1200;3543907;3543907;30;3;3;2;1;2;3000;1;5;1",

@@ -3,11 +3,32 @@ package graft.olapsus
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Observation}
 
-/** Dimension resolution + fact load — the join/null-policy/aggregate
-  * stage of the two ETLs (SIM: dags/spark_script_sim.py:330-402; SINASC:
-  * dags/spark_script_sinasc.py:196-274), Parquet warehouse instead of
-  * JDBC.
+/** Test-only fault injection for the crash-replay specs: invoked between
+  * a fact day write and its manifest log row — the exact crash point the
+  * idempotent day write ([[Warehouse.overwriteDay]] /
+  * [[Warehouse.appendUnit]]) must survive. A no-op in production. */
+private[olapsus] object IngestFaults {
+  /** (warehouse root, dataset) — root-scoped so a spec's injected fault
+    * can never fire inside another suite's concurrently-running ingest. */
+  @volatile var afterFactWrite: (String, String) => Unit = (_, _) => ()
+  /** Fires between a backfill day-batch's `d#<unit>` manifest row and
+    * its plain-day row — the window where the day is written and
+    * unit-logged but invisible to the batch driver. */
+  @volatile var afterUnitKeyLog: (String, String) => Unit = (_, _) => ()
+}
+
+/** The two ETLs (SIM: dags/spark_script_sim.py; SINASC:
+  * dags/spark_script_sinasc.py) with a Parquet warehouse instead of JDBC.
+  * Each dataset has ONE day body ([[Pipeline.RawDataset]]): raw rows →
+  * [[Transforms]] → (SIM: the cause-bridge merge) → key resolution →
+  * one fact write. The batch driver ([[Pipeline.ingestFiles]], reading
+  * CSV columns by header name) and the stream backfill
+  * ([[StreamingIngest.backfill]], which requires the exact declared
+  * header) each add their own lease, manifest and fault-hook steps
+  * around it.
   *
+  * Key resolution is the join/null-policy/aggregate stage (SIM:
+  * sim.py:330-402; SINASC: sinasc.py:196-274).
   * All dim joins are broadcast left joins (the reference disables
   * auto-broadcast and hints every dim, spark_dag.py:41 + sim.py:294-304;
   * we hint identically). The demografia/info-nascimento joins are band
@@ -24,39 +45,28 @@ import org.apache.spark.sql.{DataFrame, Observation}
   *    unmatched; fill 0 for ocupacao/grupo-causa; then `na.drop` over
   *    ALL grain keys (sim.py:384-399).
   */
-/** Test-only fault injection for the crash-replay specs: invoked between
-  * a fact day write and its manifest log row — the exact crash point the
-  * idempotent day write ([[Warehouse.overwriteDay]] /
-  * [[Warehouse.appendUnit]]) must survive. A no-op in production. */
-private[olapsus] object IngestFaults {
-  /** (warehouse root, dataset) — root-scoped so a spec's injected fault
-    * can never fire inside another suite's concurrently-running ingest. */
-  @volatile var afterFactWrite: (String, String) => Unit = (_, _) => ()
-  /** Fires between a backfill day-batch's `d#<unit>` manifest row and
-    * its plain-day row — the window where the day is written and
-    * unit-logged but invisible to the batch driver. */
-  @volatile var afterUnitKeyLog: (String, String) => Unit = (_, _) => ()
-}
-
 object Pipeline {
+
+  /** The dimension lookups both facts key against: date →
+    * `chave_data`, `HH:mm:ss` → `chave_tempo` (dimHorario's stored
+    * `tempo`; the sentinel's is NULL and matches nothing), and 6-digit
+    * IBGE code (`cod_mun_6`) → `chave_municipio`. */
+  private def keyLookups(wh: Warehouse): (DataFrame, DataFrame, DataFrame) = (
+    broadcast(wh.table("dimData").select("data", "chave_data")),
+    broadcast(wh.table("dimHorario").select("tempo", "chave_tempo")),
+    broadcast(wh.table("dimMunicipio").select(
+      floor(col("codigo_ibge") / 10).cast("int").as("cod_mun_6"), col("chave_municipio"))))
 
   /** SINASC clean rows → factNascimentos grain. */
   def resolveSinasc(clean: DataFrame, wh: Warehouse): DataFrame = {
-    val dimData = broadcast(wh.table("dimData"))
-    val dimHorario = broadcast(wh.table("dimHorario")
-      .withColumn("tempo_str", format_string("%02d:%02d:%02d", col("hora"), col("minutos"), col("segundos"))))
-    val dimMun = broadcast(wh.table("dimMunicipio")
-      .withColumn("cod_mun_6", floor(col("codigo_ibge") / 10).cast("int")))
+    val (dimData, dimHorario, munLookup) = keyLookups(wh)
     val dimDem = broadcast(wh.table("dimDemografia"))
     val dimInfo = broadcast(wh.table("dimInfoNascimento"))
-
-    val munLookup = dimMun.select(col("cod_mun_6"), col("chave_municipio"))
 
     val joined = clean
       .join(dimData.select(col("data").as("data_nascimento"), col("chave_data")),
         Seq("data_nascimento"), "left")
-      .join(dimHorario.select("tempo_str", "chave_tempo"),
-        col("tempo_nascimento") === col("tempo_str"), "left").drop("tempo_str")
+      .join(dimHorario, col("tempo_nascimento") === col("tempo"), "left").drop("tempo")
       .join(munLookup.withColumnRenamed("chave_municipio", "chave_municipio_nascimento"),
         col("cod_mun_nasc") === col("cod_mun_6"), "left").drop("cod_mun_6")
       .join(munLookup.withColumnRenamed("chave_municipio", "chave_municipio_residencia"),
@@ -101,11 +111,7 @@ object Pipeline {
 
   /** SIM clean rows (with chave_grupo_causa attached) → factObitos grain. */
   def resolveSim(withGroups: DataFrame, wh: Warehouse): DataFrame = {
-    val dimData = broadcast(wh.table("dimData"))
-    val dimHorario = broadcast(wh.table("dimHorario")
-      .withColumn("tempo_str", format_string("%02d:%02d:%02d", col("hora"), col("minutos"), col("segundos"))))
-    val dimMun = broadcast(wh.table("dimMunicipio")
-      .withColumn("cod_mun_6", floor(col("codigo_ibge") / 10).cast("int")))
+    val (dimData, dimHorario, dimMun) = keyLookups(wh)
     val dimOcup = broadcast(wh.table("dimOcupacao"))
     val dimDem = broadcast(wh.table("dimDemografia"))
 
@@ -114,9 +120,8 @@ object Pipeline {
         Seq("data_nascimento"), "left")
       .join(dimData.select(col("data").as("data_obito"), col("chave_data").as("chave_data_obito")),
         Seq("data_obito"), "left")
-      .join(dimHorario.select("tempo_str", "chave_tempo"),
-        col("tempo_obito") === col("tempo_str"), "left")
-      .withColumnRenamed("chave_tempo", "chave_tempo_obito").drop("tempo_str")
+      .join(dimHorario, col("tempo_obito") === col("tempo"), "left")
+      .withColumnRenamed("chave_tempo", "chave_tempo_obito").drop("tempo")
       .join(dimMun.select(col("cod_mun_6").as("cod_mun_res"), col("chave_municipio").as("chave_municipio_residencia")),
         Seq("cod_mun_res"), "left")
       .join(dimMun.select(col("cod_mun_6").as("cod_mun_ocor"), col("chave_municipio").as("chave_municipio_obito")),
@@ -154,6 +159,71 @@ object Pipeline {
       .na.drop(keys)
   }
 
+  /** One raw dataset: the CSV header its landing files carry and its day
+    * body. The body is the dataset's whole ETL for one batch of raw rows
+    * — decode ([[Transforms]]), for SIM the cause-bridge merge, key
+    * resolution, one fact write — and returns the rows it wrote. With
+    * `unit = None` the write replaces the `dt=` partition
+    * ([[Warehouse.overwriteDay]]); with `Some(u)` it is the replayable
+    * per-unit append [[Warehouse.appendUnit]]. The caller holds the
+    * dataset's lease and owns the manifest: the batch driver
+    * ([[ingestFiles]]) and the stream backfill
+    * ([[StreamingIngest.backfill]]) both run this body. */
+  private[olapsus] final case class RawDataset(name: String, header: String,
+      day: (Warehouse, DataFrame, String, Option[String]) => Long)
+
+  private val Sinasc = RawDataset("sinasc", Schemas.sinascHeader, sinascDay)
+  private val Sim = RawDataset("sim", Schemas.simHeader, simDay)
+
+  /** The one place a dataset name picks its header and body. */
+  private[olapsus] def datasetNamed(name: String): RawDataset =
+    Seq(Sinasc, Sim).find(_.name == name)
+      .getOrElse(sys.error(s"unknown dataset $name (sim|sinasc)"))
+
+  private def sinascDay(wh: Warehouse, raw: DataFrame, dt: String, unit: Option[String]): Long =
+    writeDay(wh, "factNascimentos", resolveSinasc(Transforms.sinasc(raw), wh), dt, unit)
+
+  private def simDay(wh: Warehouse, raw: DataFrame, dt: String, unit: Option[String]): Long = {
+    val clean = Transforms.sim(raw.withColumn("row_id", monotonically_increasing_id()))
+    // Incremental signature lookup: bootstrapped from the bridge once,
+    // then maintained by appending each batch's new groups — the merge
+    // never re-derives existing groups' signatures again.
+    if (!wh.exists(Warehouse.Signatures))
+      // Unleased variant: the caller already holds the `sim` scope
+      // lease, which also guards the signature table.
+      wh.writeUnleased(Warehouse.Signatures, CauseBridge.signatures(wh.table(Warehouse.Bridge)))
+    val bridge = CauseBridge.resolve(clean, wh.table("dimCausa"),
+      wh.table(Warehouse.Bridge), Some(wh.table(Warehouse.Signatures)))
+    // Read-before-write single-writer merge (no ON CONFLICT in Parquet;
+    // same assumption as the reference's max+1 id scheme, sim.py:214).
+    // count() fully materializes the new rows into the cache BEFORE the
+    // append below adds files to the directory the lazy plan reads. Only
+    // new groups' rows are appended, and a replay appends none: the
+    // signature anti-join makes the merge replay-idempotent.
+    val newRows = bridge.newBridgeRows.cache()
+    try {
+      if (newRows.count() > 0) {
+        wh.appendRows(Warehouse.Bridge, newRows)
+        wh.appendRows(Warehouse.Signatures, bridge.newSignatureRows)
+      }
+      writeDay(wh, "factObitos", resolveSim(bridge.resolved, wh), dt, unit)
+    } finally newRows.unpersist()
+  }
+
+  /** Writes `fact` as day `dt` (see [[RawDataset]]) and returns the rows
+    * written, observed on the write itself: no second evaluation of the
+    * plan (scan, decode, dim joins, aggregate) is needed to count them. */
+  private def writeDay(wh: Warehouse, table: String, fact: DataFrame, dt: String,
+      unit: Option[String]): Long = {
+    val rows = new Observation()
+    val observed = fact.observe(rows, count(lit(1)).as("rows"))
+    unit match {
+      case None => wh.overwriteDay(table, observed, dt)
+      case Some(u) => wh.appendUnit(table, observed, dt, u)
+    }
+    rows.get("rows").asInstanceOf[Long]
+  }
+
   private def readRaw(wh: Warehouse, paths: Seq[String]): DataFrame =
     wh.spark.read
       .option("header", "true").option("sep", ";").option("inferSchema", "false")
@@ -165,44 +235,52 @@ object Pipeline {
   def ingestSinasc(wh: Warehouse, csvGlob: String, dt: String): Long =
     ingestSinascFiles(wh, Seq(csvGlob), dt)
 
-  /** Returns the number of fact rows this call wrote, taken from the
-    * write itself; 0 for a day already logged and for a batch without
-    * data rows (which stays unlogged). */
-  def ingestSinascFiles(wh: Warehouse, paths: Seq[String], dt: String): Long = {
+  /** Returns the number of fact rows this call wrote; 0 for a day
+    * already logged and for a batch without data rows (which stays
+    * unlogged). */
+  def ingestSinascFiles(wh: Warehouse, paths: Seq[String], dt: String): Long =
+    ingestFiles(wh, Sinasc, paths, dt)
+
+  /** Full SIM ingest: transform → bridge merge (append new groups) →
+    * resolve → day write. */
+  def ingestSim(wh: Warehouse, csvGlob: String, dt: String): Long =
+    ingestSimFiles(wh, Seq(csvGlob), dt)
+
+  /** Returns the number of fact rows written, as [[ingestSinascFiles]]
+    * does. */
+  def ingestSimFiles(wh: Warehouse, paths: Seq[String], dt: String): Long =
+    ingestFiles(wh, Sim, paths, dt)
+
+  /** The batch driver: one `dt=` day of raw CSVs, read by header name
+    * (extra or reordered columns are fine), through the dataset's day
+    * body. */
+  private[olapsus] def ingestFiles(wh: Warehouse, ds: RawDataset, paths: Seq[String],
+      dt: String): Long = {
     if (paths.isEmpty) return 0L
-    // Lease first, manifest check inside it: the manifest-then-append
+    // Lease first, manifest check inside it: the manifest-then-write
     // sequence is the exact read-before-write window a second concurrent
-    // ingest corrupts (double-appended day). A crashed run's lease
-    // expires and the replay converges through the manifest.
+    // ingest corrupts (a double-written day; on SIM, duplicate cause-group
+    // ids, silent and permanent). A crashed run's lease expires and the
+    // replay converges through the manifest.
     graft.WriterLease.withLease(wh.spark, wh.root,
-      graft.WriterLease.processOwner("ingest-sinasc"), scope = "sinasc") {
-      if (wh.ingestLogged("sinasc", dt)) 0L
+      graft.WriterLease.processOwner(s"ingest-${ds.name}"), scope = ds.name) {
+      if (wh.ingestLogged(ds.name, dt)) 0L
       else {
         val raw = readRaw(wh, paths)
         if (raw.isEmpty) 0L
         else {
-          val (fact, written) = counted(resolveSinasc(Transforms.sinasc(raw), wh))
-          // overwriteDay, not append: a crash between this write and the
-          // logIngest row below leaves the day written-but-unlogged, and
-          // the replay must REPLACE it, not double it (see the
-          // crash-replay contract on Warehouse.overwriteDay; forged in
-          // CrashReplaySpec).
-          wh.overwriteDay("factNascimentos", fact, dt)
-          IngestFaults.afterFactWrite(wh.root, "sinasc")
-          wh.logIngest("sinasc", dt)
-          written()
+          // A whole-day overwrite, not an append: a crash between this
+          // write and the logIngest row below leaves the day
+          // written-but-unlogged, and the replay must REPLACE it, not
+          // double it (see the crash-replay contract on
+          // Warehouse.overwriteDay; forged in CrashReplaySpec).
+          val written = ds.day(wh, raw, dt, None)
+          IngestFaults.afterFactWrite(wh.root, ds.name)
+          wh.logIngest(ds.name, dt)
+          written
         }
       }
     }
-  }
-
-  /** `df` with a row count observed by the next action on it: the
-    * write reports the rows it wrote, so no second evaluation of the
-    * plan (scan, decode, dim joins, aggregate) is needed to count them.
-    * Read the count only after that action has completed. */
-  private def counted(df: DataFrame): (DataFrame, () => Long) = {
-    val rows = new Observation()
-    (df.observe(rows, count(lit(1)).as("rows")), () => rows.get("rows").asInstanceOf[Long])
   }
 
   /** Backfill every pending `dt=` day partition under the landing
@@ -215,77 +293,18 @@ object Pipeline {
     * The manifest is read once, before the loop: a day it already logs
     * is reported as `dt -> 0` without a lease, a listing or a Spark
     * job (the manifest is append-only, so a logged day stays logged),
-    * and only pending days go through ingest*Files, which re-checks
+    * and only pending days go through [[ingestFiles]], which re-checks
     * the manifest inside its lease. The cost of a run is therefore
     * O(pending days), not O(days ever landed). */
   def backfill(wh: Warehouse, prefix: String, dataset: String): Seq[(String, Long)] = {
+    val ds = datasetNamed(dataset)
     val days = Landing.listGlob(wh.spark, s"$prefix/$dataset/dt=*")
       .map(p => p.substring(p.lastIndexOf("dt=") + 3).stripSuffix("/"))
       .distinct.sorted
     val logged = if (days.isEmpty) Set.empty[String] else wh.ingestKeys(dataset)
     days.map { dt =>
       if (logged(dt)) dt -> 0L
-      else {
-        val files = Landing.listDay(wh.spark, prefix, dataset, dt)
-        val n = dataset match {
-          case "sim" => ingestSimFiles(wh, files, dt)
-          case "sinasc" => ingestSinascFiles(wh, files, dt)
-          case other => sys.error(s"unknown dataset $other (sim|sinasc)")
-        }
-        dt -> n
-      }
+      else dt -> ingestFiles(wh, ds, Landing.listDay(wh.spark, prefix, dataset, dt), dt)
     }
-  }
-
-  /** Full SIM ingest: transform → bridge merge (append new groups) →
-    * resolve → append fact. */
-  def ingestSim(wh: Warehouse, csvGlob: String, dt: String): Long =
-    ingestSimFiles(wh, Seq(csvGlob), dt)
-
-  /** Returns the number of fact rows written, as [[ingestSinascFiles]]
-    * does. */
-  def ingestSimFiles(wh: Warehouse, paths: Seq[String], dt: String): Long = {
-    if (paths.isEmpty) return 0L
-    // The bridge max+1 merge is the warehouse's most corruption-prone
-    // single-writer contract (duplicate group ids are silent and
-    // permanent) — lease before the manifest check, like the SINASC path.
-    graft.WriterLease.withLease(wh.spark, wh.root,
-      graft.WriterLease.processOwner("ingest-sim"), scope = "sim") {
-      ingestSimLeased(wh, paths, dt)
-    }
-  }
-
-  private def ingestSimLeased(wh: Warehouse, paths: Seq[String], dt: String): Long = {
-    if (wh.ingestLogged("sim", dt)) return 0L
-    val raw = readRaw(wh, paths)
-    if (raw.isEmpty) return 0L
-    val clean = Transforms.sim(raw.withColumn("row_id", monotonically_increasing_id()))
-    // Incremental signature lookup: bootstrapped from the bridge once,
-    // then maintained by appending each batch's new groups — the merge
-    // never re-derives existing groups' signatures again.
-    if (!wh.exists(Warehouse.Signatures))
-      // Unleased variant: this caller already holds the `sim` scope
-      // lease, which also guards the signature table.
-      wh.writeUnleased(Warehouse.Signatures, CauseBridge.signatures(wh.table(Warehouse.Bridge)))
-    val bridge = CauseBridge.resolve(clean, wh.table("dimCausa"),
-      wh.table(Warehouse.Bridge), Some(wh.table(Warehouse.Signatures)))
-    // Read-before-write single-writer merge (no ON CONFLICT in Parquet;
-    // same assumption as the reference's max+1 id scheme, sim.py:214).
-    // count() fully materializes the new rows into the cache BEFORE the
-    // append below adds files to the directory the lazy plan reads.
-    val newRows = bridge.newBridgeRows.cache()
-    if (newRows.count() > 0) {
-      wh.appendRows(Warehouse.Bridge, newRows)
-      wh.appendRows(Warehouse.Signatures, bridge.newSignatureRows)
-    }
-    val (fact, written) = counted(resolveSim(bridge.resolved, wh))
-    // Crash-replayable day write — the bridge merge above is already
-    // replay-idempotent (signature anti-join); this makes the fact
-    // partition match it.
-    wh.overwriteDay("factObitos", fact, dt)
-    IngestFaults.afterFactWrite(wh.root, "sim")
-    wh.logIngest("sim", dt)
-    newRows.unpersist()
-    written()
   }
 }

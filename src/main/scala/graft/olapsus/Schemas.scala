@@ -88,6 +88,15 @@ object Schemas {
     "chave_causa_secundaria" -> IntegerType, "chave_ocupacao" -> IntegerType,
     "valor" -> DecimalType(15, 2), "quantidade_procedimentos" -> IntegerType)
 
+  /** The header rows of the raw landing CSVs (`;`-separated, every value
+    * read as a string), the DATASUS layouts of FIXTURES.md §1–2. The
+    * batch driver reads columns by these names; the stream backfill
+    * requires a file's header to be exactly this row. */
+  val sinascHeader: String =
+    "DTNASC;HORANASC;CODMUNNASC;CODMUNRES;IDADEMAE;RACACORMAE;ESCMAE;ESTCIVMAE;SEXO;RACACOR;PESO;PARTO;GESTACAO;GRAVIDEZ"
+  val simHeader: String =
+    "DTOBITO;DTNASC;HORAOBITO;SEXO;RACACOR;ESTCIV;ESC;IDADE;LINHAA;LINHAB;LINHAC;LINHAD;LINHAII;CODMUNRES;CODMUNOCOR;OCUP"
+
   /** A schema's names (lower-cased) and types in column order — the
     * part of the DDL the warehouse holds tables to. Nullability is not
     * part of it: parquet round-trips relax it. */

@@ -1,111 +1,43 @@
 package graft.olapsus
 
-import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Dataset, Row}
 
 /** Streaming re-expression of the reference's daily ingest loop
   * (SURVEY.md §1.1 optional stretch): instead of Airflow re-running a
-  * batch job per `dt=` partition (dags/spark_dag.py:48-78), the landing
-  * directory IS a file stream — `Trigger.AvailableNow` drains whatever
-  * has arrived and checkpoints progress, so each file is ingested
-  * exactly once across restarts. Each micro-batch goes through the SAME
-  * batch transforms/resolvers (`foreachBatch`), so semantics are
-  * byte-identical to `Pipeline.ingest*`.
+  * batch job per `dt=` partition (dags/spark_dag.py:48-78), the
+  * dt-partitioned landing tree IS a file stream — `Trigger.AvailableNow`
+  * drains whatever has arrived and checkpoints progress, so each file is
+  * ingested exactly once across restarts. Each micro-batch day runs the
+  * dataset's one day body ([[Pipeline.RawDataset]]), the same body the
+  * batch driver runs, so semantics are identical to `Pipeline.ingest*`.
+  *
+  * Unlike the batch driver, which reads CSV columns by header name, the
+  * stream reads with the declared schema ([[Schemas.sinascHeader]],
+  * [[Schemas.simHeader]]) and requires each file's header to be exactly
+  * that row: a file whose header differs fails the micro-batch instead of
+  * mapping its columns by position.
   */
 object StreamingIngest {
 
-  private def schemaOf(header: String): StructType =
-    StructType(header.split(";").map(c => StructField(c, StringType)))
-
-  val sinascSchema: StructType = schemaOf(Fixtures.sinasc.head)
-  val simSchema: StructType = schemaOf(Fixtures.sim.head)
-
-  private def csvStream(wh: Warehouse, dir: String, schema: StructType): DataFrame =
-    wh.spark.readStream
-      .option("header", "true").option("sep", ";")
-      .schema(schema)
-      .csv(dir)
-
-  /** One SINASC micro-batch through the batch resolvers; `label` is the
-    * fact `dt=` partition value. */
-  private[olapsus] def ingestSinascBatch(wh: Warehouse, batch: DataFrame,
-      label: String): Unit =
-    // Per-micro-batch lease: a batch driver run concurrently against the
-    // same warehouse fails fast instead of interleaving appends.
-    graft.WriterLease.withLease(wh.spark, wh.root,
-      graft.WriterLease.processOwner("stream-sinasc"), scope = "sinasc") {
-      ingestSinascBatchLeased(wh, batch, label)
-    }
-
-  /** `unit = None` (the plain stream): the whole `dt=$label` partition is
-    * this micro-batch's — labels are `stream-<id>`, unique per batch —
-    * so [[Warehouse.overwriteDay]] makes a foreachBatch replay after a
-    * crash converge instead of double-appending. `unit = Some(u)` (the
-    * backfill): several micro-batches may land files in the SAME day
-    * partition, so the write is a per-unit replayable append
-    * ([[Warehouse.appendUnit]]) keyed by the micro-batch id. */
-  private def ingestSinascBatchLeased(wh: Warehouse, batch: DataFrame,
-      label: String, unit: Option[String] = None): Unit = {
-    val fact = Pipeline.resolveSinasc(Transforms.sinasc(batch), wh)
-    unit match {
-      case Some(u) => wh.appendUnit("factNascimentos", fact, label, u)
-      case None => wh.overwriteDay("factNascimentos", fact, label)
-    }
-  }
-
-  /** One SIM micro-batch: bridge merge + factObitos append
-    * (single-writer, as in the batch path). */
-  private[olapsus] def ingestSimBatch(wh: Warehouse, batch: DataFrame,
-      label: String): Unit =
-    graft.WriterLease.withLease(wh.spark, wh.root,
-      graft.WriterLease.processOwner("stream-sim"), scope = "sim") {
-      ingestSimBatchLeased(wh, batch, label)
-    }
-
-  /** See the unit-vs-overwrite note on [[ingestSinascBatchLeased]]; the
-    * bridge/signature appends are replay-idempotent by anti-join either
-    * way. */
-  private def ingestSimBatchLeased(wh: Warehouse, batch: DataFrame,
-      label: String, unit: Option[String] = None): Unit = {
-    val clean = Transforms.sim(batch.withColumn("row_id", monotonically_increasing_id()))
-    if (!wh.exists(Warehouse.Signatures))
-      // Caller holds the `sim` scope lease, which guards this table too.
-      wh.writeUnleased(Warehouse.Signatures, CauseBridge.signatures(wh.table(Warehouse.Bridge)))
-    val bridge = CauseBridge.resolve(clean, wh.table("dimCausa"),
-      wh.table(Warehouse.Bridge), Some(wh.table(Warehouse.Signatures)))
-    // Append only the new groups' rows (files of pre-existing groups are
-    // never rewritten) — O(new groups) per micro-batch.
-    val newRows = bridge.newBridgeRows.cache()
-    if (newRows.count() > 0) {
-      wh.appendRows(Warehouse.Bridge, newRows)
-      wh.appendRows(Warehouse.Signatures, bridge.newSignatureRows)
-    }
-    val fact = Pipeline.resolveSim(bridge.resolved, wh)
-    unit match {
-      case Some(u) => wh.appendUnit("factObitos", fact, label, u)
-      case None => wh.overwriteDay("factObitos", fact, label)
-    }
-    newRows.unpersist()
-    ()
-  }
-
   /** Stable token for one checkpoint LIFETIME, stored inside the
     * checkpoint dir itself. Micro-batch ids are unique only within a
-    * checkpoint, so the fact `dt=` labels built from them must die with
-    * it: without the token, deleting the checkpoint (a routine ops
-    * reset) restarts ids at 0 and the new stream's overwriteDay would
-    * REPLACE the old run's `dt=stream-0` partition with unrelated new
-    * data — silent destruction of ingested facts. Same checkpoint →
-    * same token → a crash replay of batch N rewrites its own partition
-    * and converges; new checkpoint → fresh token → disjoint labels, the
-    * prior run's partitions untouched.
+    * checkpoint, so the unit ids built from them ([[unitId]]: manifest
+    * keys `d#<unit>` and [[Warehouse.appendUnit]] file prefixes) must die
+    * with it: without the token, deleting the checkpoint (a routine ops
+    * reset) restarts ids at 0, and the new run's `d#sb0` would collide
+    * with a logged key — its day-batch would read as already applied and
+    * be skipped, and an appendUnit replay would delete the old run's
+    * `sb0-` files. Same checkpoint → same token → a crash replay of
+    * batch N finds its own keys and files and converges; new checkpoint →
+    * fresh token → disjoint keys, the prior run's output untouched.
     *
     * Migration: a checkpoint that already COMMITTED batches but has no
-    * token file predates tokens — its labels / `#sb` unit keys are
+    * token file predates tokens — its `#sb` unit keys and file prefixes are
     * already on disk and in the manifest in the unscoped format, so it
-    * adopts the EMPTY token (and [[streamLabel]]/[[unitId]] keep the
+    * adopts the EMPTY token (and [[unitId]] keeps the
     * unscoped format for it). Minting a token here instead would orphan
     * every logged key and file prefix: the next crash replay could not
     * find its own earlier output and would double-append. Spark writes
@@ -157,12 +89,6 @@ object StreamingIngest {
     }
   }
 
-  /** Fact `dt=` label of a plain-stream micro-batch. Legacy (empty-token)
-    * checkpoints keep the pre-token `stream-<id>` spelling so their
-    * crash replays still overwrite their own partitions. */
-  private[olapsus] def streamLabel(run: String, id: Long): String =
-    if (run.isEmpty) s"stream-$id" else s"stream-$run-$id"
-
   /** Unit id of a backfill micro-batch — BOTH the [[Warehouse.appendUnit]]
     * file prefix and the suffix of the `day#unit` manifest key, so the
     * two stay derivable from each other (compaction's crashed-unit
@@ -171,34 +97,6 @@ object StreamingIngest {
     * disjoint from every logged one. Legacy checkpoints keep `sb<id>`. */
   private[olapsus] def unitId(run: String, id: Long): String =
     if (run.isEmpty) s"sb$id" else s"sb$run-$id"
-
-  /** Drain all available SINASC CSVs from `landingDir` into
-    * factNascimentos; one fact append per micro-batch. */
-  def sinasc(wh: Warehouse, landingDir: String): StreamingQuery = {
-    val cp = s"${wh.root}/.checkpoints/sinasc"
-    val run = runToken(wh, cp)
-    csvStream(wh, landingDir, sinascSchema).writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cp)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        if (!batch.isEmpty) ingestSinascBatch(wh, batch, streamLabel(run, id))
-      }
-      .start()
-  }
-
-  /** Drain all available SIM CSVs: bridge merge + factObitos append per
-    * micro-batch (single-writer, as in the batch path). */
-  def sim(wh: Warehouse, landingDir: String): StreamingQuery = {
-    val cp = s"${wh.root}/.checkpoints/sim"
-    val run = runToken(wh, cp)
-    csvStream(wh, landingDir, simSchema).writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cp)
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        if (!batch.isEmpty) ingestSimBatch(wh, batch, streamLabel(run, id))
-      }
-      .start()
-  }
 
   /** Has THIS RUN of the stream backfill written to day `d`, per the
     * manifest keys `logged`? Its per-(day, micro-batch) manifest keys
@@ -262,24 +160,24 @@ object StreamingIngest {
     * exact. Legacy checkpoints (created before tokens) adopt the
     * unscoped format and keep converging — see [[runToken]]. */
   def backfill(wh: Warehouse, prefix: String, dataset: String): StreamingQuery = {
-    // UNLEASED per-day bodies: the foreachBatch below holds the dataset
-    // lease across the manifest checks AND the appends AND the log rows —
-    // leasing only the append (and checking/logging outside it) would
+    // UNLEASED day body: the foreachBatch below holds the dataset lease
+    // across the manifest checks AND the writes AND the log rows —
+    // leasing only the write (and checking/logging outside it) would
     // re-open the read-before-write window the batch path closes by
     // checking the manifest inside its lease.
-    val (schema, perDay) = dataset match {
-      case "sinasc" =>
-        (sinascSchema,
-          (b: DataFrame, d: String, u: Option[String]) => ingestSinascBatchLeased(wh, b, d, u))
-      case "sim" =>
-        (simSchema,
-          (b: DataFrame, d: String, u: Option[String]) => ingestSimBatchLeased(wh, b, d, u))
-      case other => sys.error(s"unknown dataset $other (sim|sinasc)")
-    }
-    val withDt = StructType(schema.fields :+ StructField("dt", StringType))
+    val ds = Pipeline.datasetNamed(dataset)
+    val schema = StructType((ds.header.split(";") :+ "dt").map(StructField(_, StringType)))
     val cp = s"${wh.root}/.checkpoints/backfill-$dataset"
     val run = runToken(wh, cp)
-    csvStream(wh, s"$prefix/$dataset", withDt).writeStream
+    wh.spark.readStream
+      .option("header", "true").option("sep", ";")
+      // Check each file's header against the declared one (`dt` is the
+      // partition column): by default a declared schema maps columns by
+      // position, so a reordered file would read silently wrong.
+      .option("enforceSchema", "false")
+      .schema(schema)
+      .csv(s"$prefix/$dataset")
+      .writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", cp)
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
@@ -317,7 +215,7 @@ object StreamingIngest {
                 // replay removes its own unit's stale files first
                 // (CrashReplaySpec forges both).
                 val claim = !touched && !dayLogged
-                perDay(batch.filter(col("dt") === d).drop("dt"), d,
+                ds.day(wh, batch.filter(col("dt") === d).drop("dt"), d,
                   if (claim) None else Some(unit))
                 IngestFaults.afterFactWrite(wh.root, s"$dataset-stream")
                 wh.logIngest(dataset, dayBatchKey)

@@ -46,17 +46,6 @@ final class Warehouse(val spark: SparkSession, val root: String) {
           s"got ${Schemas.shape(df.schema)}")
     }
 
-  /** Append one ingest batch under `dt=$dt`. NOT replay-safe on its own
-    * (a crashed run's partial files stay); the ingest paths use
-    * [[overwriteDay]] / [[appendUnit]] instead, which are. Restricted to
-    * this package so the bare-append shape cannot be reached from
-    * application code — every external fact write must go through the
-    * replay-idempotent pair ([[overwriteDay]]/[[appendUnit]] + manifest).
-    * Caller holds the table's scope lease and owns idempotency. */
-  private[olapsus] def append(table: String, df: DataFrame, dt: String): Unit =
-    df.withColumn("dt", org.apache.spark.sql.functions.lit(dt))
-      .write.mode("append").partitionBy("dt").parquet(path(table))
-
   /** Idempotent day write: REPLACES the `dt=$dt` partition with exactly
     * this batch's rows. Dynamic partition overwrite touches only the
     * partitions present in the data — one `lit(dt)` value — so every

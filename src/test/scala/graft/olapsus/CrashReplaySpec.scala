@@ -146,8 +146,6 @@ class CrashReplaySpec extends SparkSpecBase {
     assert(StreamingIngest.runToken(wh, legacyCp) == "")
     // The two formats the token feeds: legacy spellings are unchanged,
     // scoped ones embed the token between the kind tag and the batch id.
-    assert(StreamingIngest.streamLabel("", 3) == "stream-3")
-    assert(StreamingIngest.streamLabel("ab12cd34", 3) == "stream-ab12cd34-3")
     assert(StreamingIngest.unitId("", 3) == "sb3")
     assert(StreamingIngest.unitId("ab12cd34", 3) == "sbab12cd34-3")
   }

@@ -159,43 +159,6 @@ class OlapSusSpec extends SparkSpecBase {
     assert(fromTable.nonEmpty)
   }
 
-  test("streaming ingest (AvailableNow) drains landing dir through the batch resolvers") {
-    val landing = Files.createTempDirectory("sinasc-landing")
-    Fixtures.write(landing, "batch1.csv", Fixtures.sinasc)
-    val before =
-      if (wh.exists("factNascimentos")) wh.table("factNascimentos").count() else 0L
-    StreamingIngest.sinasc(wh, landing.toString).awaitTermination()
-    assert(wh.table("factNascimentos").count() == before + 4) // b3 dropped, as in batch
-    // Restart with no new files: checkpoint prevents re-ingest.
-    StreamingIngest.sinasc(wh, landing.toString).awaitTermination()
-    assert(wh.table("factNascimentos").count() == before + 4)
-
-    // Checkpoint reset (a routine ops action): batch ids restart at 0,
-    // but the per-checkpoint run token keeps the new run's labels
-    // disjoint — everything is visibly RE-ingested into new partitions,
-    // and the old run's partitions are never overwritten with unrelated
-    // data.
-    val facts = () => wh.table("factNascimentos").where("dt LIKE 'stream-%'")
-    val oldDts = facts().select("dt").distinct().collect().map(_.getString(0)).toSet
-    assert(oldDts.nonEmpty)
-    val cp = new org.apache.hadoop.fs.Path(s"${wh.root}/.checkpoints/sinasc")
-    cp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(cp, true)
-    Fixtures.write(landing, "batch2.csv", Fixtures.sinasc)
-    StreamingIngest.sinasc(wh, landing.toString).awaitTermination()
-    val newDts = facts().select("dt").distinct().collect().map(_.getString(0)).toSet
-    assert(oldDts.subsetOf(newDts), "checkpoint reset destroyed a prior run's partitions")
-    assert((newDts -- oldDts).nonEmpty, "reset run produced no fresh labels")
-    oldDts.foreach { d =>
-      assert(wh.table("factNascimentos").where(s"dt = '$d'").count() == 4,
-        s"prior run's partition $d was rewritten after the checkpoint reset")
-    }
-    // Both landing files reprocessed under the fresh checkpoint into one
-    // AvailableNow micro-batch; their identical rows collapse on the
-    // fact GRAIN (groupBy-count), so the new partition carries 4 grain
-    // rows beside the old run's 4.
-    assert(wh.table("factNascimentos").count() == before + 8)
-  }
-
   test("streaming backfill: dt-partitioned tree, crash-resume, batch-driver composition") {
     val landing = Files.createTempDirectory("backfill-landing")
     val day1 = landing.resolve("sinasc/dt=2021-04-01")
@@ -251,6 +214,73 @@ class OlapSusSpec extends SparkSpecBase {
     StreamingIngest.backfill(wh, landing.toString, "sinasc").awaitTermination()
     assert(wh.table("factNascimentos").where("dt = '2021-04-03'").count() == 4,
       "stream re-appended a batch-driver-owned day")
+  }
+
+  // Twin warehouses of their own: one is filled by the stream backfill,
+  // the other by the batch backfill, and they must end up equal.
+  private lazy val streamWh: Warehouse = {
+    val w = new Warehouse(spark, dir.resolve("wh-stream").toString)
+    Dims.seedAll(w, municipioCsv, cboCsv, cidCsv)
+    w
+  }
+  private lazy val batchWh: Warehouse = {
+    val w = new Warehouse(spark, dir.resolve("wh-batch").toString)
+    Dims.seedAll(w, municipioCsv, cboCsv, cidCsv)
+    w
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(org.apache.spark.sql.functions.col): _*)
+      .collect().map(_.mkString("|")).toSeq.sorted
+
+  test("stream backfill: a file whose header differs from the declared one fails; nothing is written") {
+    val landing = Files.createTempDirectory("mismatch-landing")
+    val day = landing.resolve("sinasc/dt=2021-08-01")
+    Files.createDirectories(day)
+    // CODMUNNASC and CODMUNRES swapped in the header and in the values:
+    // read by name this is the fixture's first row, read by position it
+    // swaps the two municipalities.
+    Fixtures.write(day, "part.csv", Seq(
+      Schemas.sinascHeader.replace("CODMUNNASC;CODMUNRES", "CODMUNRES;CODMUNNASC"),
+      "01022020;0830;3503208;3548906;25;1;4;2;1;4;2500;1;5;1"))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamingIngest.backfill(streamWh, landing.toString, "sinasc").awaitTermination()
+    }
+    assert(!streamWh.exists("factNascimentos") ||
+      streamWh.table("factNascimentos").count() == 0L)
+    assert(streamWh.ingestKeys("sinasc").isEmpty)
+  }
+
+  test("SIM stream backfill writes what the batch backfill writes: facts per day, bridge, signatures, manifest") {
+    val days = Seq(
+      "2021-07-01" -> Fixtures.sim,
+      "2021-07-02" -> Seq(Schemas.simHeader,
+        "20012020;07071955;1000;1;1;2;3;460;N40;X999;;;;354890;354890;123456",
+        "21012020;08081945;0700;2;2;1;2;480;I219;;;;*I48X*N40X;350320;354890;223456",
+        "22012020;09091935;2200;1;4;3;4;490;X999;I48;;;;354890;350320;"),
+      "2021-07-03" -> Seq(Schemas.simHeader,
+        "23012020;10101925;0100;2;1;2;5;495;J189;N40;;;;354890;354890;123456",
+        "24012020;11111950;1500;1;3;1;3;455;X999;N40;;;;350320;350320;223456"))
+    val landing = Files.createTempDirectory("sim-landing")
+    days.foreach { case (dt, lines) =>
+      val d = landing.resolve(s"sim/dt=$dt")
+      Files.createDirectories(d)
+      Fixtures.write(d, "part.csv", lines)
+    }
+    StreamingIngest.backfill(streamWh, landing.toString, "sim").awaitTermination()
+    val written = Pipeline.backfill(batchWh, landing.toString, "sim")
+    assert(written.map(_._1) == days.map(_._1) && written.forall(_._2 > 0L), written)
+    days.foreach { case (dt, _) =>
+      val day = (w: Warehouse) => sortedRows(w.table("factObitos").where(s"dt = '$dt'"))
+      assert(day(streamWh) == day(batchWh), s"factObitos differs on $dt")
+    }
+    Seq(Warehouse.Bridge, Warehouse.Signatures).foreach { t =>
+      assert(sortedRows(streamWh.table(t)) == sortedRows(batchWh.table(t)), s"$t differs")
+    }
+    assert(sortedRows(batchWh.table(Warehouse.Bridge)).size > 1, "no cause group was added")
+    val plainDays = (w: Warehouse) => w.ingestKeys("sim").filterNot(_.contains("#"))
+    assert(plainDays(streamWh) == days.map(_._1).toSet)
+    assert(plainDays(batchWh) == days.map(_._1).toSet)
   }
 
   test("bucketed warehouse: fact-dim join and agg on the bucket key plan shuffle-free") {
