@@ -464,7 +464,7 @@ object ScaleCheck {
     // calib_s — base and deep share one controlled process, so the
     // ratio is self-consistent and the wall carries its window's speed.
     // A crashed/hung child falls back to the in-parent measure, tagged
-    // "fresh_jvm":false.
+    // "fresh_jvm":false, and its failure reason goes to stderr.
     val deepLines =
       if (deepFactor <= 0) Seq.empty[String]
       else {
@@ -482,19 +482,21 @@ object ScaleCheck {
           println(line)
           line
         }
-        def deepProbeFresh(name: String): Option[(Double, Double, Double)] =
+        def deepProbeFresh(name: String): Either[String, (Double, Double, Double)] =
           ChildJvm.run("graft.DeepProbe", Seq(sfDir, deepDir, name),
               Map("SPARK_GRAFT_CPUS" -> cpus), timeoutMinutes = 30)
             .flatMap(out =>
               """DEEPPROBE \S+ base=([0-9.]+) deep=([0-9.]+)(?: calib=([0-9.]+))?""".r
                 .findFirstMatchIn(out)
                 .map(m => (m.group(1).toDouble, m.group(2).toDouble,
-                  Option(m.group(3)).map(_.toDouble).getOrElse(-1.0))))
+                  Option(m.group(3)).map(_.toDouble).getOrElse(-1.0)))
+                .toRight(s"no DEEPPROBE line in the child's output (${out.length} chars)"))
         def deepProbe(name: String): String =
           deepProbeFresh(name) match {
-            case Some((base, big, cc)) =>
+            case Right((base, big, cc)) =>
               deepLine(name, base, big, fresh = true, childCalib = cc)
-            case None =>
+            case Left(reason) =>
+              System.err.println(s"[scalecheck] $name: fresh JVM failed ($reason); measuring in-process")
               val fn = SparkEntry.queries(name)
               val base = baseTimes.getOrElse(name,
                 (1 to 2).map(_ => time(fn, sfDir)).min)

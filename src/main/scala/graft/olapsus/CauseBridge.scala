@@ -33,14 +33,13 @@ object CauseBridge {
     * lookup rows) to append for groups not yet in `bridge`.
     *
     * `knownSignatures` is the incrementally-maintained
-    * (chave_grupo_causa, group_signature) lookup table: when supplied,
-    * the merge joins against it directly instead of re-deriving every
-    * existing group's signature from the exploded bridge rows (an
-    * explode + sort + collect_list over ALL groups, every batch). The
-    * recompute path stays as the bootstrap/fallback and the spec
-    * cross-checks the two agree. */
+    * (chave_grupo_causa, group_signature) lookup table, so the merge
+    * joins against it instead of re-deriving every existing group's
+    * signature from the exploded bridge rows (an explode + sort +
+    * collect_list over ALL groups, every batch). It must hold exactly
+    * [[signatures]] of `bridge`. */
   def resolve(clean: DataFrame, dimCausa: DataFrame, bridge: DataFrame,
-      knownSignatures: Option[DataFrame] = None): Result = {
+      knownSignatures: DataFrame): Result = {
     val spark = clean.sparkSession
 
     // Per-row (ordem, codigo) cause list: LINHA A-D are orders 1-4,
@@ -81,9 +80,7 @@ object CauseBridge {
         expr("transform(causes_sorted, x -> x.causa_struct)").as("causes_list"))
 
     val existing = knownSignatures
-      .map(_.select(col("chave_grupo_causa"), col("group_signature")))
-      .getOrElse(signatures(bridge))
-      .withColumnRenamed("chave_grupo_causa", "existing_group_id")
+      .select(col("chave_grupo_causa").as("existing_group_id"), col("group_signature"))
     val nextId: Long = bridge.agg(max("chave_grupo_causa")).head().get(0) match {
       case null => 1L
       case m: Number => m.longValue() + 1
@@ -123,8 +120,7 @@ object CauseBridge {
 
   /** Canonical signature per existing bridge group, derived from the
     * bridge rows (explode + sort + collect_list over every group). Used
-    * to BOOTSTRAP the incrementally-maintained signature lookup table
-    * and as the fallback when none is supplied. */
+    * to BOOTSTRAP the incrementally-maintained signature lookup table. */
   def signatures(bridge: DataFrame): DataFrame =
     bridge.withColumn("item_sig", concat_ws(":", col("chave_causa"), col("ordem_causa")))
       .groupBy("chave_grupo_causa")

@@ -193,7 +193,7 @@ object Pipeline {
       // lease, which also guards the signature table.
       wh.writeUnleased(Warehouse.Signatures, CauseBridge.signatures(wh.table(Warehouse.Bridge)))
     val bridge = CauseBridge.resolve(clean, wh.table("dimCausa"),
-      wh.table(Warehouse.Bridge), Some(wh.table(Warehouse.Signatures)))
+      wh.table(Warehouse.Bridge), wh.table(Warehouse.Signatures))
     // Read-before-write single-writer merge (no ON CONFLICT in Parquet;
     // same assumption as the reference's max+1 id scheme, sim.py:214).
     // count() fully materializes the new rows into the cache BEFORE the

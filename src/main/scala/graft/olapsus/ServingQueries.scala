@@ -129,7 +129,8 @@ object ServingQueries {
         SELECT d2.descricao_familia, d.descricao_subcategoria,
                SUM(f.quantidade_obitos) AS total_obitos,
                ROW_NUMBER() OVER (PARTITION BY d2.descricao_familia
-                                  ORDER BY SUM(f.quantidade_obitos) DESC) AS ranking
+                                  ORDER BY SUM(f.quantidade_obitos) DESC,
+                                           d.descricao_subcategoria) AS ranking
         FROM factobitos f
         JOIN pontegrupocausas p ON p.chave_grupo_causa = f.chave_grupo_causa
         JOIN dimcausa d ON d.chave_causa = p.chave_causa
@@ -140,7 +141,7 @@ object ServingQueries {
       SELECT descricao_familia, descricao_subcategoria, total_obitos
       FROM ClassificacaoCausas
       WHERE ranking <= 10
-      ORDER BY descricao_familia, total_obitos DESC
+      ORDER BY descricao_familia, total_obitos DESC, descricao_subcategoria
       """,
       Map("familia" -> familia))
 }

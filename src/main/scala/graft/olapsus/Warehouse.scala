@@ -109,11 +109,11 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     df.write.mode("append").parquet(path(table))
   }
 
-  /** The unpartitioned tables [[Schemas]] declares (the dims and the
-    * bridge) are read with their declared schema, so a read infers
-    * nothing from file footers (no Spark job); the writers enforce that
-    * declaration ([[write]], [[appendRows]]). Every other table — the
-    * dt-partitioned facts, the signature table, the manifest — is read
+  /** The unpartitioned tables [[Schemas]] declares (the dims, the
+    * bridge and the manifest) are read with their declared schema, so a
+    * read infers nothing from file footers (no Spark job); the writers
+    * enforce that declaration ([[write]], [[appendRows]]). Every other
+    * table — the dt-partitioned facts, the signature table — is read
     * with its schema inferred from its files. */
   def table(table: String): DataFrame = Warehouse.Declared.get(table) match {
     case Some(schema) => spark.read.schema(schema).parquet(path(table))
@@ -311,7 +311,7 @@ object Warehouse {
 
   /** The tables read with their declared schema ([[Warehouse.table]]). */
   val Declared: Map[String, org.apache.spark.sql.types.StructType] =
-    (Dims :+ Bridge).map(t => t -> Schemas.all(t)).toMap
+    (Dims :+ Bridge :+ IngestLog).map(t => t -> Schemas.all(t)).toMap
 
   /** Scope of the manifest-append lease — shared by BOTH datasets'
     * `logIngest` and by manifest compaction. */

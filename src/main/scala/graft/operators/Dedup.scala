@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.{TextFns, VectorFns}
 import graft.{Op, OpModule, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a training-data pipeline:
@@ -55,11 +55,9 @@ object Dedup extends OpModule {
   private val JACCARD_T = 0.5
 
   // Universal-hash family over ONE md5 per shingle: h_j = (a_j·h + b_j)
-  // mod p with p = 2³¹−1 and h = md5-int64 masked to 31 bits. The
-  // previous family salted md5 NH times per shingle — md5 dominated the
-  // minhash stage's cost, and it feeds SEVEN queries (d2/d6/d9/c1-c4)
-  // plus the incremental index. a_j·h < 2⁶² so the arithmetic can't
-  // overflow under ANSI mode on either engine.
+  // mod p with p = 2³¹−1 and h = md5-int64 masked to 31 bits, so a
+  // shingle pays one md5 whatever NH is. a_j·h < 2⁶² so the arithmetic
+  // can't overflow under ANSI mode on either engine.
   private val MinhashP = 2147483647L // 2^31 - 1 (Mersenne prime)
   private val MinhashMask = 2147483647L
   private val MinhashAB: Seq[(Long, Long)] = Seq(
@@ -69,10 +67,9 @@ object Dedup extends OpModule {
   /** Identity of the minhash/LSH hash family, derived from every constant
     * that shapes a band key. Persisted indexes and pair tables stamp this
     * id at build time and refuse appends/reads under a different family:
-    * the round-7 rework (salted md5 per hash → one md5 + universal hashes)
-    * changed every band key, and an unstamped index would have silently
-    * dropped all new-vs-old candidate pairs — the exact nightly-ingest
-    * case the index exists for. */
+    * changing any of these constants changes every band key, and an
+    * unstamped index would silently drop all new-vs-old candidate pairs
+    * — the exact nightly-ingest case the index exists for. */
   private[graft] val hashFamilyId: String =
     s"minhash/3;shingle=word3h31;p=$MinhashP;mask=$MinhashMask;nh=$NH;bands=$BANDS;" +
       s"ab=${MinhashAB.map { case (a, b) => s"$a*h+$b" }.mkString(",")};t=$JACCARD_T"
@@ -184,15 +181,14 @@ object Dedup extends OpModule {
 
   /** The pair chain over a pre-derived (doc_id, sh) shingle frame — the
     * seam that lets a composite query (d17/d19's plan build) derive the
-    * shingles from its own fused corpus cache instead of paying a
-    * second scan + tokenize pass (r15, guide §2.4: the three corpus
-    * subtrees of the plan family each re-read and re-tokenized the
-    * same documents). The frame must be cached or cheap to recompute:
+    * shingles from its own cached corpus frame, so the plan family
+    * scans and tokenizes the documents once. The frame must be cached
+    * or cheap to recompute:
     * the exact-Jaccard rescoring reads it a second time. */
   private[operators] def d2PairsFromShingles(sh: DataFrame): DataFrame = {
     val bands = minhashBands(sh)
       .cache() // both sides of the self-join read this, not the agg
-    val cand = bandedCandidates(bands)
+    val cand = bandedCandidates(bands, Seq("band", "hx", "hy"))
     exactJaccard(cand, sh)
       .filter(col("jac") >= JACCARD_T)
       .select(col("doc_a"), col("doc_b"), col("jac").as("jaccard"))
@@ -225,10 +221,9 @@ object Dedup extends OpModule {
       .select(col("doc_id"), shingleHashCol(col("w")).as("sh"))
 
   /** d2's distinct word-3-gram hash set over a token array — THE one
-    * expression (fused hash r14: every position hashed in one codegen'd
-    * loop, then the longs distinct'd; identical set to the previous
-    * distinct-strings → md5 → distinct-longs form, with zero per-gram
-    * string materialization). Shared by [[shingled]] and the fused
+    * expression: every position hashed in one codegen'd loop, then the
+    * longs distinct'd, with no per-gram string materialized. Shared by
+    * [[shingled]] and the fused
     * corpus frames (d17/d19's planCorpus, Curation's fused c2 frame) so
     * the shingle definition cannot drift between the inline chain and
     * a fused derivation. */
@@ -262,18 +257,55 @@ object Dedup extends OpModule {
         col("bb.hx").as("hx"), col("bb.hy").as("hy"))
   }
 
-  /** d2's candidate stage: the banded self-join producing DISTINCT
-    * (doc_a, doc_b) pairs that collide on at least one band key. ONE
-    * definition shared by d2 and the d16 recall audit — the audit's
-    * premise is that it measures exactly the banding d2 ships, so a
-    * drifted copy would silently measure something else. */
-  private[operators] def bandedCandidates(bands: DataFrame): DataFrame =
+  /** The banded self-join: DISTINCT pairs `a.doc_id < b.doc_id` that
+    * agree on every column of `keys` (the band key and any block),
+    * projected to `doc_a`, `doc_b` and the `carried` columns, which read
+    * the two sides as `a` and `b`. ONE definition for d2, the d16 recall
+    * audit (whose premise is that it measures exactly the banding d2
+    * ships) and [[hammingBandPairs]]. */
+  private[operators] def bandedCandidates(bands: DataFrame, keys: Seq[String],
+      carried: Seq[Column] = Nil): DataFrame =
     bands.as("a")
       .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.hx") === col("b.hx")
-          && col("a.hy") === col("b.hy") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
+          && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a") +: col("b.doc_id").as("doc_b") +: carried: _*)
       .distinct()
+
+  /** Pairs whose `hash` columns differ in at most `maxHamming` bits,
+    * with `doc_a < doc_b` and, when `block` names columns, equal blocks.
+    * Candidates share one of `bands` bands of `bandBits` bits (hashes
+    * must be non-negative); `bit_count(xor)` then keeps the exact
+    * radius. A pair outside every shared band differs in at least one
+    * bit per band, so `maxHamming < bands` loses no pair (pigeonhole).
+    * `cap` skips every (block, band, value) bucket holding more than
+    * `cap` rows before the join: the count is a partial aggregate and
+    * the filter a SHUFFLE_HASH semi-join, never a window partitioned by
+    * the corpus-global bucket key, so one hot bucket cannot become one
+    * unsplittable sort task. Returns (doc_a, doc_b, block..., hamming),
+    * unsorted. */
+  private[operators] def hammingBandPairs(hashed: DataFrame, hash: String,
+      bands: Int, bandBits: Int, maxHamming: Int,
+      block: Seq[String] = Nil, cap: Option[Int] = None): DataFrame = {
+    val carry = (col("doc_id") +: block.map(col)) :+ col(hash)
+    val banded = hashed.select(carry :+
+      explode(array((0 until bands).map(b =>
+        struct(lit(b).as("band"),
+          (shiftright(col(hash), bandBits * b) % (1 << bandBits)).as("bv"))): _*)).as("bb"): _*)
+      .select(carry :+ col("bb.band").as("band") :+ col("bb.bv").as("bv"): _*)
+    val keys = block ++ Seq("band", "bv")
+    val kept = cap.fold(banded) { c =>
+      val small = banded.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("bc")).filter(col("bc") <= c).select(keys.map(col): _*)
+      banded.join(small.hint("SHUFFLE_HASH"), keys, "semi")
+        .select(carry :+ col("band") :+ col("bv"): _*)
+    }
+    val carried = block.map(k => col(s"a.$k").as(k)) :+ col(s"a.$hash").as("ha") :+ col(s"b.$hash").as("hb")
+    bandedCandidates(kept, keys, carried)
+      .withColumn("hamming", bit_count(col("ha") bitwiseXOR col("hb")).cast("int"))
+      .filter(col("hamming") <= maxHamming)
+      .select((Seq("doc_a", "doc_b") ++ block :+ "hamming").map(col): _*)
+  }
 
   /** d2's rescoring stage: exact Jaccard over candidate (doc_a, doc_b)
     * pairs, shingle sets attached from `sh`. Returns (doc_a, doc_b, jac). */
@@ -288,17 +320,32 @@ object Dedup extends OpModule {
 
   private[graft] def jaccardThreshold: Double = JACCARD_T
 
-  /** 16-bit SimHash fingerprint per document (occurrence-weighted). */
-  val d3SimHash: Op = Op(
-    "d3_dedup_simhash", {
-      val hv = TextFns.hex4ToIntSql("substring(md5(word), 1, 4)")
-      val bitSums = (0 until 16).map(b =>
-        s"SUM(CASE WHEN (hv // ${1 << b}) % 2 = 1 THEN 1 ELSE -1 END) AS s$b")
-        .mkString(",\n               ")
-      val hash = (0 until 16).map(b =>
-        s"(CASE WHEN s$b >= 0 THEN ${1 << b} ELSE 0 END)").mkString(" + ")
-      Some(s"""
-      WITH words AS (
+  /** 16-bit occurrence-weighted SimHash per document, (doc_id, simhash):
+    * bit b is set when at least half of the document's word occurrences
+    * have bit b set in the first 16 bits of md5(word). ONE definition for
+    * d3 and d7; its DuckDB mirror is [[duckSimHashCtes]]. */
+  private[operators] def simHash16(docs: DataFrame): DataFrame = {
+    val words = docs
+      .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("word"))
+      .withColumn("hv", TextFns.md5PrefixLong(col("word"), 4)) // == hex4ToInt(substring(md5,1,4))
+    val bitAggs = (0 until 16).map(b =>
+      sum(when(((col("hv") / lit(1 << b)).cast("long") % 2) === 1, 1).otherwise(-1)).as(s"s$b"))
+    val bits = words.groupBy("doc_id").agg(bitAggs.head, bitAggs.tail: _*)
+    val hash = (0 until 16).map(b =>
+      when(col(s"s$b") >= 0, lit(1 << b)).otherwise(lit(0))).reduce(_ + _)
+    bits.select(col("doc_id"), hash.cast("int").as("simhash"))
+  }
+
+  /** DuckDB CTEs ending in `sh(doc_id, simhash)`: [[simHash16]] over
+    * `documents`, shared by the d3 and d7 oracles. */
+  private[operators] lazy val duckSimHashCtes: String = {
+    val hv = TextFns.hex4ToIntSql("substring(md5(word), 1, 4)")
+    val bitSums = (0 until 16).map(b =>
+      s"SUM(CASE WHEN (hv // ${1 << b}) % 2 = 1 THEN 1 ELSE -1 END) AS s$b")
+      .mkString(",\n               ")
+    val hash = (0 until 16).map(b =>
+      s"(CASE WHEN s$b >= 0 THEN ${1 << b} ELSE 0 END)").mkString(" + ")
+    s"""words AS (
         SELECT doc_id, UNNEST(list_filter(string_split(text, ' '), x -> x != '')) AS word
         FROM documents
       ), hv AS (
@@ -307,23 +354,20 @@ object Dedup extends OpModule {
         SELECT doc_id,
                $bitSums
         FROM hv GROUP BY doc_id
-      )
-      SELECT doc_id, CAST($hash AS INTEGER) AS simhash
-      FROM bits
+      ), sh AS (
+        SELECT doc_id, CAST($hash AS INTEGER) AS simhash FROM bits
+      )"""
+  }
+
+  /** 16-bit SimHash fingerprint per document (occurrence-weighted). */
+  val d3SimHash: Op = Op(
+    "d3_dedup_simhash",
+    Some(s"""
+      WITH $duckSimHashCtes
+      SELECT doc_id, simhash FROM sh
       ORDER BY doc_id
-    """)
-    })((spark, dir) => {
-    val words = Tables.spread(Tables.documents(spark, dir))
-      .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("word"))
-      .withColumn("hv", TextFns.md5PrefixLong(col("word"), 4)) // == hex4ToInt(substring(md5,1,4)), fused (r14)
-    val bitAggs = (0 until 16).map(b =>
-      sum(when(((col("hv") / lit(1 << b)).cast("long") % 2) === 1, 1).otherwise(-1)).as(s"s$b"))
-    val bits = words.groupBy("doc_id").agg(bitAggs.head, bitAggs.tail: _*)
-    val hash = (0 until 16).map(b =>
-      when(col(s"s$b") >= 0, lit(1 << b)).otherwise(lit(0))).reduce(_ + _)
-    bits.select(col("doc_id"), hash.cast("int").as("simhash"))
-      .orderBy("doc_id")
-  })
+    """))((spark, dir) =>
+    simHash16(Tables.spread(Tables.documents(spark, dir))).orderBy("doc_id"))
 
   /** Blocked exact char-5-gram Jaccard pairs (block = lang × source ×
     * length-bucket). */
@@ -354,26 +398,15 @@ object Dedup extends OpModule {
     // doc's DISTINCT grams as rows, self-join on (block, gram) — one
     // matched row per shared gram — then count per pair = |A ∩ B|. Same
     // result, but the work is a hash join on a high-cardinality key
-    // (linear in total gram occurrences), not O(pairs × gram-array) —
-    // the shape that survives 100 TB. Pairs sharing no gram have
-    // Jaccard 0 and are (correctly) never materialized.
+    // (linear in total gram occurrences), not O(pairs × gram-array).
+    // Pairs sharing no gram have Jaccard 0 and are never materialized.
     //
-    // Gram positions come from explode(sequence(1, npos)) — a generator
-    // over a per-row primitive int range, O(total_chars) with no global
-    // max and no driver action. (An earlier broadcast range join against
-    // range(1, max(npos)) was O(docs × max_doc_len): every document paid
-    // a probe proportional to the LONGEST document — skew-amplified —
-    // and the max() itself cost a driver action. The old ~30× note was
-    // about explode(transform(...)) over a derived STRING array, which
-    // re-evaluates its child per element; sequence-of-int has no such
-    // problem.)
-    // Fused hash (r14): CharGramHashLong emits every position's blocked
-    // gram key in one codegen'd loop (same md5-prefix value — the
-    // positions-explode + concat_ws + md5-hex + conv chain ran 39 s of
-    // executorRunTime at sf0.1), and array_distinct replaces the
-    // row-level .distinct(): grams are per-document, so the in-row
-    // dedup is the same set with NO distinct exchange (one full
-    // shuffle of the gram stream removed; guide §2.4).
+    // CharGramHashLong emits every position's blocked gram key (the
+    // md5 prefix of block ++ 5-gram) in one codegen'd call per document:
+    // O(total chars), with no range join against the longest document
+    // and no driver action. array_distinct dedups the grams inside the
+    // row — grams are per-document, so the set needs no distinct
+    // exchange over the gram stream.
     val grams = Tables.spread(Tables.documents(spark, dir))
       .select(
         col("doc_id"),
@@ -412,44 +445,49 @@ object Dedup extends OpModule {
       FROM p WHERE cos >= 0.3
       ORDER BY vec_a, vec_b
     """))((spark, dir) => {
-    // Cached: the self-join otherwise re-runs the scan + quantize +
-    // norm + bucket subtree once PER SIDE (fresh expression ids defeat
-    // exchange reuse — the same family as the r9 c4 regression).
-    val n = Tables.spread(Tables.embeddings(spark, dir))
+    // d8's vectors, self-joined on their own bucket: the integer bucket
+    // splits vectors into the same groups as the oracle's bit string.
+    val n = embVectors(spark, dir)
+    cosinePairs(n, "bucket", n)
+      .filter(col("cos") >= 0.3)
+      .select(col("vec_a"), col("vec_b"), col("label"), col("cos").as("cosine"))
+      .orderBy("vec_a", "vec_b")
+  })
+
+  /** (vec_id, label, qv, nrm, bucket) per embedding: quantized vector,
+    * its exact squared norm and its [[EMB_BITS]]-bit integer LSH bucket.
+    * Cached: a pair join reads it on both sides, and uncached the scan +
+    * quantize + norm + bucket work runs once per side (fresh expression
+    * ids defeat exchange reuse). */
+  private def embVectors(spark: SparkSession, dir: String): DataFrame =
+    Tables.spread(Tables.embeddings(spark, dir))
       .select(col("vec_id"), col("label"), VectorFns.quantize(col("embedding")).as("qv"))
       .withColumn("nrm", VectorFns.norm2(col("qv")))
-      .withColumn("bucket", VectorFns.lshBucket8("qv"))
+      .withColumn("bucket", VectorFns.lshBucketInt(col("qv"), EMB_BITS))
       .cache()
-    val p = n.as("a")
+
+  /** (vec_a, vec_b, label, cos) for `a.vec_id < b.vec_id` of one label
+    * whose `a.<key>` equals `b.bucket`; `a` carries vec_id, label, qv
+    * and nrm, `n` is [[embVectors]]. */
+  private def cosinePairs(a: DataFrame, key: String, n: DataFrame): DataFrame =
+    a.as("a")
       .join(n.as("b"),
-        col("a.label") === col("b.label") && col("a.bucket") === col("b.bucket")
+        col("a.label") === col("b.label") && col(s"a.$key") === col("b.bucket")
           && col("a.vec_id") < col("b.vec_id"))
       .select(
         col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"), col("a.label").as("label"),
         VectorFns.cosine(
           VectorFns.dot(col("a.qv"), col("b.qv")), col("a.nrm"), col("b.nrm")).as("cos"))
-    p.filter(col("cos") >= 0.3)
-      .select(col("vec_a"), col("vec_b"), col("label"), col("cos").as("cosine"))
-      .orderBy("vec_a", "vec_b")
-  })
 
-  /** d5 with multi-probe blocks: embedding near-dup pairs where the two
-    * buckets differ by AT MOST ONE sign bit. Single-bucket blocking
-    * (d5) misses any true pair straddling a bucket boundary; expanding
-    * ONE side of the self-join into its bucket plus the 8 Hamming-1
-    * neighbors recovers those pairs while the join stays a (label,
-    * bucket) equi-join — candidates grow ~9×, not quadratically, and
-    * the big side still carries a single bucket column. Pairs found
-    * through two different probes dedupe on DISTINCT. */
   /** d8's pair CTE chain, shared with d11's clustering oracle: `epairs`
     * holds the threshold-filtered multi-probe embedding near-dup pairs. */
   private[operators] lazy val duckEmbPairCtes: String = {
-    val bInt = graft.functions.VectorFns.duckLshBucketInt("qv", EMB_BITS)
+    val bInt = VectorFns.duckLshBucketInt("qv", EMB_BITS)
     s"""v AS (
-        SELECT vec_id, label, ${graft.functions.VectorFns.duckQuantize("embedding")} AS qv
+        SELECT vec_id, label, ${VectorFns.duckQuantize("embedding")} AS qv
         FROM embeddings
       ), n AS (
-        SELECT vec_id, label, qv, ${graft.functions.VectorFns.duckNorm2("qv")} AS nrm,
+        SELECT vec_id, label, qv, ${VectorFns.duckNorm2("qv")} AS nrm,
                $bInt AS bucket
         FROM v
       ), probes AS (
@@ -459,7 +497,7 @@ object Dedup extends OpModule {
         FROM n
       ), p AS (
         SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label AS label,
-               CAST(${graft.functions.VectorFns.duckDot("a.qv", "b.qv")} AS DOUBLE)
+               CAST(${VectorFns.duckDot("a.qv", "b.qv")} AS DOUBLE)
                  / (sqrt(CAST(a.nrm AS DOUBLE)) * sqrt(CAST(b.nrm AS DOUBLE))) AS cos
         FROM probes a JOIN n b
           ON a.label = b.label AND a.probe = b.bucket AND a.vec_id < b.vec_id
@@ -474,39 +512,27 @@ object Dedup extends OpModule {
     d8PairsAndNorms(spark, dir)._1
 
   /** d8's pairs PLUS the cached per-vector (vec_id, nrm) projection the
-    * pair join already computed — d12 re-attaching norms through this
-    * seam reads the cache instead of paying a second scan + quantize +
-    * norm pass over the full embeddings table (the same
-    * fresh-expression-ids-defeat-exchange-reuse family as the r9 c4
-    * regression, one level up). */
+    * pair join already computed, so d12 re-attaches norms from the cache
+    * instead of scanning and quantizing the embeddings a second time. */
   private[operators] def d8PairsAndNorms(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    import graft.functions.VectorFns
-    // Cached: the probe side AND the build side both derive from this
-    // subtree, and uncached the scan + quantize + norm + bucket work
-    // runs once per side (d11/d12 then pay it again through their own
-    // consumers — fresh expression ids defeat exchange reuse).
-    val n = Tables.spread(Tables.embeddings(spark, dir))
-      .select(col("vec_id"), col("label"), VectorFns.quantize(col("embedding")).as("qv"))
-      .withColumn("nrm", VectorFns.norm2(col("qv")))
-      .withColumn("bucket", VectorFns.lshBucketInt(col("qv"), EMB_BITS))
-      .cache()
+    val n = embVectors(spark, dir)
     val probes = n.select(
       col("vec_id"), col("label"), col("qv"), col("nrm"),
       explode(array(col("bucket") +: (0 until EMB_BITS).map(j =>
         expr(s"bucket ^ ${1L << j}")): _*)).as("probe"))
-    val p = probes.as("a")
-      .join(n.as("b"),
-        col("a.label") === col("b.label") && col("a.probe") === col("b.bucket")
-          && col("a.vec_id") < col("b.vec_id"))
-      .select(
-        col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"), col("a.label").as("label"),
-        VectorFns.cosine(
-          VectorFns.dot(col("a.qv"), col("b.qv")), col("a.nrm"), col("b.nrm")).as("cos"))
-      .distinct()
+    // A pair found through two probes dedupes on DISTINCT.
+    val p = cosinePairs(probes, "probe", n).distinct()
     (p.filter(col("cos") >= EMB_COS_T), n.select(col("vec_id"), col("nrm")))
   }
 
+  /** d5 with multi-probe blocks: embedding near-dup pairs where the two
+    * buckets differ by AT MOST ONE sign bit. Single-bucket blocking
+    * (d5) misses any true pair straddling a bucket boundary; expanding
+    * ONE side of the self-join into its bucket plus the 8 Hamming-1
+    * neighbors recovers those pairs while the join stays a (label,
+    * bucket) equi-join — candidates grow ~9×, not quadratically, and
+    * the big side still carries a single bucket column. */
   val d8EmbeddingMultiProbe: Op = Op(
     "d8_dedup_embedding_multiprobe",
     Some(s"""
@@ -697,33 +723,16 @@ object Dedup extends OpModule {
   }
 
   /** SimHash near-dup pairs: Hamming distance ≤ 3 on the 16-bit
-    * fingerprint. Candidates come from 4-bit band collisions — by
-    * pigeonhole, any pair within Hamming 3 shares at least one of the 4
-    * nibbles, so banding loses nothing while cutting the join from
-    * all-pairs to per-bucket. Exact Hamming (bit_count of xor) then
-    * filters candidates. */
+    * fingerprint, through [[hammingBandPairs]] with four 4-bit bands:
+    * a pair within Hamming 3 agrees on at least one nibble, so banding
+    * loses no pair while the join stays per bucket, not all-pairs. */
   val d7SimHashPairs: Op = Op(
     "d7_simhash_hamming_pairs", {
-      val hv = TextFns.hex4ToIntSql("substring(md5(word), 1, 4)")
-      val bitSums = (0 until 16).map(b =>
-        s"SUM(CASE WHEN (hv // ${1 << b}) % 2 = 1 THEN 1 ELSE -1 END) AS s$b")
-        .mkString(", ")
-      val hash = (0 until 16).map(b =>
-        s"(CASE WHEN s$b >= 0 THEN ${1 << b} ELSE 0 END)").mkString(" + ")
       val bandRows = (0 until 4).map(b =>
         s"SELECT doc_id, simhash, $b AS band, (simhash // ${1 << (4 * b)}) % 16 AS nib FROM sh")
         .mkString("\n        UNION ALL ")
       Some(s"""
-      WITH words AS (
-        SELECT doc_id, UNNEST(list_filter(string_split(text, ' '), x -> x != '')) AS word
-        FROM documents
-      ), hv AS (
-        SELECT doc_id, $hv AS hv FROM words
-      ), bits AS (
-        SELECT doc_id, $bitSums FROM hv GROUP BY doc_id
-      ), sh AS (
-        SELECT doc_id, CAST($hash AS INTEGER) AS simhash FROM bits
-      ), bands AS (
+      WITH $duckSimHashCtes, bands AS (
         $bandRows
       ), cand AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -737,36 +746,11 @@ object Dedup extends OpModule {
       WHERE bit_count(xor(ha, hb)) <= 3
       ORDER BY doc_a, doc_b
     """)
-    })((spark, dir) => {
-    val words = Tables.spread(Tables.documents(spark, dir))
-      .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("word"))
-      .withColumn("hv", TextFns.md5PrefixLong(col("word"), 4)) // == hex4ToInt(substring(md5,1,4)), fused (r14)
-    val bitAggs = (0 until 16).map(b =>
-      sum(when(((col("hv") / lit(1 << b)).cast("long") % 2) === 1, 1).otherwise(-1)).as(s"s$b"))
-    val bits = words.groupBy("doc_id").agg(bitAggs.head, bitAggs.tail: _*)
-    val hashExpr = (0 until 16).map(b =>
-      when(col(s"s$b") >= 0, lit(1 << b)).otherwise(lit(0))).reduce(_ + _)
-    val sh = bits.select(col("doc_id"), hashExpr.cast("int").as("simhash")).cache()
-    val bands = sh.select(
-      col("doc_id"), col("simhash"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band"),
-          ((col("simhash") / lit(1 << (4 * b))).cast("int") % 16).as("nib"))): _*)).as("bn"))
-      .select(col("doc_id"), col("simhash"), col("bn.band").as("band"), col("bn.nib").as("nib"))
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.nib") === col("b.nib")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.simhash").as("ha"), col("b.simhash").as("hb"))
-      .distinct()
-    cand
-      .withColumn("hamming", bit_count(expr("ha ^ hb").cast("long")).cast("int"))
-      .filter(col("hamming") <= 3)
-      .select("doc_a", "doc_b", "hamming")
-      .orderBy("doc_a", "doc_b")
-  })
+    })((spark, dir) =>
+    // Cached: both sides of the band self-join read the fingerprints.
+    hammingBandPairs(simHash16(Tables.spread(Tables.documents(spark, dir))).cache(),
+      "simhash", bands = 4, bandBits = 4, maxHamming = 3)
+      .orderBy("doc_a", "doc_b"))
 
   /** Canonical-document selection: the "which copy survives" step that
     * turns d6's clusters into an actionable dedup decision. Within each
@@ -1492,7 +1476,7 @@ object Dedup extends OpModule {
       .withColumn("jaccard", col("inter").cast("double") / col("uni"))
       .filter(col("jaccard") >= JACCARD_T)
     val bands = minhashBands(sh).cache()
-    val cand = bandedCandidates(bands)
+    val cand = bandedCandidates(bands, Seq("band", "hx", "hy"))
     truth
       .join(cand.withColumn("f", lit(true)), Seq("doc_a", "doc_b"), "left")
       .select(col("doc_a"), col("doc_b"), col("jaccard"),

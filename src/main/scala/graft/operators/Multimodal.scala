@@ -346,26 +346,22 @@ object Multimodal extends OpModule {
     * in ≥ 14 bits, so by pigeonhole every pair within Hamming ≤
     * [[PhashThresh]] = 13 shares at least one band (exact recall at the
     * threshold). 13 of 56 bits ≈ 23% of the grid's comparisons — the
-    * usual dHash near-dup band (≈10/64 in the 64-bit folklore); a ≤3
-    * cut would be recall-exact with only 4 wide bands but is INERT on
-    * this corpus (measured: closest non-identical pair sits at 8). */
+    * usual dHash near-dup band (≈10/64 in the 64-bit folklore). */
   private val PhashBands = 14
   private val PhashBandBits = PhashBits / PhashBands // 4
   private val PhashThresh = PhashBands - 1 // 13
   /** Hot-band bucket cap — the d14 df-cap rule applied to m7's banding:
     * a (media_type, band, value) cohort larger than this is SATURATED
-    * 4-bit-key space, not similarity signal (the 64× deep probe
-    * measured the uncapped join super-linear at 276 s / ratio 114:
-    * candidate pairs grow as n²/(bands·16·types) once buckets
-    * saturate, and membership in a 16-value bucket at that density is
-    * pigeonhole noise). Capped buckets are skipped on BOTH engines —
+    * 4-bit-key space, not similarity signal: once buckets saturate,
+    * uncapped candidate pairs grow as n²/(bands·16·types), and
+    * membership in a 16-value bucket at that density is pigeonhole
+    * noise. Capped buckets are skipped on BOTH engines —
     * a pair is lost only when EVERY clean band it has is saturated,
     * i.e. when the 56-bit/4-bit-band geometry itself is exhausted and
     * the honest fix is a wider hash, not a bigger join. Sized above
     * every gate corpus's maximum bucket (sf0.1 max: 392), so oracle
     * values are unchanged where the gate grades them. */
   private[graft] val PhashBandCap = 1024
-
 
   /** Minimum payload length (decoded characters) for a meaningful
     * perceptual hash: shorter than one pixel per grid cell and the
@@ -375,7 +371,8 @@ object Multimodal extends OpModule {
   /** Media near-duplicate pairs via perceptual hash (m7): the m-family's
     * dedup story — every production multimodal pipeline dedups images,
     * and dHash-then-Hamming-band is the standard shape (aHash/dHash per
-    * Krawetz; the banding is d7's pigeonhole machinery on a wider word).
+    * Krawetz; the banding is [[Dedup.hammingBandPairs]], d7's kernel, on
+    * a wider word).
     *
     * The "pixel" source is the deterministic decode stub (the m2 seam):
     * the payload's decoded code points stand in for grayscale pixels, a
@@ -501,16 +498,10 @@ object Multimodal extends OpModule {
       .select(col("doc_id"), col("media_type"),
         decode(col("payload"), "UTF-8").as("t"))
       .filter(col("t").isNotNull && length(col("t")) >= PhashMinLen)
-    // Fused hash (r14): ONE codegen'd call per row
-    // ([[org.apache.spark.sql.graft.PHash56]]) running [[dHash56]] —
-    // the op now IS the JVM definition the decode seam and PhashSpec
-    // pin, over the code-point stream. The former expression-chain form
-    // (split('') → one array element per character → interpreted
-    // transform/aggregate lambdas over 64 slices) produced the same
-    // bits but materialized ~n boxed values per row; it gated the
-    // sweep at ~0.9 s of single-task wall because the hash ran inside
-    // the one-partition scan of the single-file corpus and three
-    // concurrent AQE consumers blocked on the cache-population lock.
+    // ONE codegen'd call per row ([[org.apache.spark.sql.graft.PHash56]])
+    // runs [[dHash56]] over the code-point stream: the op IS the JVM
+    // definition the decode seam and PhashSpec pin, and the scan
+    // projection materializes no per-character values.
     docs
       .select(col("doc_id"), col("media_type"),
         org.apache.spark.sql.graft.Bridge.column(
@@ -519,41 +510,13 @@ object Multimodal extends OpModule {
       .cache()
   }
 
-  /** m7's banding + pair tail over any (doc_id, media_type, ph) frame. */
-  private def phashPairsFrom(ph: DataFrame): DataFrame = {
-    val bandsAll = ph.select(
-      col("doc_id"), col("media_type"), col("ph"),
-      explode(array((0 until PhashBands).map(b =>
-        struct(lit(b).as("band"),
-          (shiftright(col("ph"), PhashBandBits * b) % (1 << PhashBandBits)).as("bv"))): _*)).as("bb"))
-      .select(col("doc_id"), col("media_type"), col("ph"),
-        col("bb.band").as("band"), col("bb.bv").as("bv"))
-    // Bucket sizes via partial-agg count + SHUFFLE_HASH semi-join, never
-    // a window partitioned by the corpus-global bucket key (the d14
-    // hot-key rule: one boilerplate bucket must not become one
-    // unsplittable sort task).
-    val smallBuckets = bandsAll.groupBy("media_type", "band", "bv")
-      .agg(count(lit(1)).as("bc")).filter(col("bc") <= PhashBandCap)
-      .select("media_type", "band", "bv")
-    val bands = bandsAll.join(smallBuckets.hint("SHUFFLE_HASH"),
-      Seq("media_type", "band", "bv"), "semi")
-      .select(col("doc_id"), col("media_type"), col("ph"),
-        col("band"), col("bv"))
-    val cand = bands.as("a")
-      .join(bands.as("b"),
-        col("a.media_type") === col("b.media_type")
-          && col("a.band") === col("b.band") && col("a.bv") === col("b.bv")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.media_type").as("media_type"),
-        col("a.ph").as("pa"), col("b.ph").as("pb"))
-      .distinct()
-    cand
-      .withColumn("hamming", bit_count(expr("pa ^ pb")).cast("int"))
-      .filter(col("hamming") <= PhashThresh)
-      .select("doc_a", "doc_b", "media_type", "hamming")
+  /** m7's banding + pair tail over any (doc_id, media_type, ph) frame:
+    * the shared Hamming-band kernel, blocked by media_type and capped at
+    * [[PhashBandCap]]. */
+  private def phashPairsFrom(ph: DataFrame): DataFrame =
+    Dedup.hammingBandPairs(ph, "ph", PhashBands, PhashBandBits, PhashThresh,
+      block = Seq("media_type"), cap = Some(PhashBandCap))
       .orderBy("doc_a", "doc_b")
-  }
 
   override def ops: Seq[Op] = Seq(m1BinaryMeta, m2Decode, m3FrameSample, m4Resize,
     m5HeaderDecode, m6AudioHeader, m7PhashPairs, m8VideoHeader)

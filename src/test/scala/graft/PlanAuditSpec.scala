@@ -455,6 +455,16 @@ class PlanAuditSpec extends SparkSpecBase {
       "the band cap must filter through a semi join:\n" + p.take(1500))
   }
 
+  test("d7: the simhash banding is a hash join, never all-pairs") {
+    // d7 shares m7's band kernel with no block and no cap: the candidate
+    // join is hash-based on (band, value), never an all-pairs compare.
+    val p = plan("d7_simhash_hamming_pairs")
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+      "simhash pairing degraded to an all-pairs comparison:\n" + p.take(1500))
+    assert("(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)".r.findFirstIn(p).isDefined,
+      "expected a hash-based band join:\n" + p.take(1500))
+  }
+
   test("t32: the gram-overlap join is hash-based with partial aggregation") {
     val p = plan("t32_decontamination")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),

@@ -28,6 +28,10 @@ class CauseBridgeSpec extends SparkSpecBase {
   private def seedBridge: DataFrame =
     Seq((0, 0, 1)).toDF("chave_grupo_causa", "chave_causa", "ordem_causa")
 
+  /** The merge against `bridge`, its signature table recomputed from it. */
+  private def resolve(clean: DataFrame, dim: DataFrame, bridge: DataFrame): CauseBridge.Result =
+    CauseBridge.resolve(clean, dim, bridge, CauseBridge.signatures(bridge))
+
   /** Build a minimal clean-shaped DF: one row per cause list; LINHAA
     * carries the first cause, LINHAII_arr the rest (orders 5+). */
   private def cleanOf(lists: Seq[Seq[String]]): DataFrame = {
@@ -39,9 +43,9 @@ class CauseBridgeSpec extends SparkSpecBase {
 
   test("idempotence: re-resolving the same lists creates no new groups") {
     samples(Gen.listOfN(5, causeList), 5).foreach { lists =>
-      val first = CauseBridge.resolve(cleanOf(lists), dimCausa, seedBridge)
+      val first = resolve(cleanOf(lists), dimCausa, seedBridge)
       val bridgeAfter = seedBridge.unionByName(first.newBridgeRows)
-      val second = CauseBridge.resolve(cleanOf(lists), dimCausa, bridgeAfter)
+      val second = resolve(cleanOf(lists), dimCausa, bridgeAfter)
       assert(second.newBridgeRows.isEmpty, s"new groups on re-resolve of $lists")
     }
   }
@@ -49,12 +53,12 @@ class CauseBridgeSpec extends SparkSpecBase {
   test("same rows get the same group id; id assignment is deterministic") {
     samples(Gen.listOfN(4, causeList), 5).foreach { lists =>
       val dup = lists ++ lists // every list appears twice
-      val r = CauseBridge.resolve(cleanOf(dup), dimCausa, seedBridge)
+      val r = resolve(cleanOf(dup), dimCausa, seedBridge)
       val ids = r.resolved.select("row_id", "chave_grupo_causa")
         .collect().map(x => x.getLong(0) -> x.getInt(1)).toMap
       lists.indices.foreach(i =>
         assert(ids(i.toLong) == ids((i + lists.size).toLong), s"dup rows diverged for $lists"))
-      val r2 = CauseBridge.resolve(cleanOf(dup), dimCausa, seedBridge)
+      val r2 = resolve(cleanOf(dup), dimCausa, seedBridge)
       val ids2 = r2.resolved.select("row_id", "chave_grupo_causa")
         .collect().map(x => x.getLong(0) -> x.getInt(1)).toMap
       assert(ids == ids2, s"non-deterministic ids for $lists")
@@ -63,16 +67,15 @@ class CauseBridgeSpec extends SparkSpecBase {
 
   test("precomputed signature lookup gives identical results to the recompute path") {
     samples(Gen.listOfN(4, causeList), 4).foreach { lists =>
-      val first = CauseBridge.resolve(cleanOf(lists), dimCausa, seedBridge)
+      val first = resolve(cleanOf(lists), dimCausa, seedBridge)
       val bridgeAfter = seedBridge.unionByName(first.newBridgeRows)
       val sigTable = CauseBridge.signatures(seedBridge)
         .unionByName(first.newSignatureRows)
       def ids(r: CauseBridge.Result) = r.resolved
         .select("row_id", "chave_grupo_causa")
         .collect().map(x => x.getLong(0) -> x.getInt(1)).toMap
-      val viaTable = CauseBridge.resolve(
-        cleanOf(lists), dimCausa, bridgeAfter, Some(sigTable))
-      val viaRecompute = CauseBridge.resolve(cleanOf(lists), dimCausa, bridgeAfter)
+      val viaTable = CauseBridge.resolve(cleanOf(lists), dimCausa, bridgeAfter, sigTable)
+      val viaRecompute = resolve(cleanOf(lists), dimCausa, bridgeAfter)
       assert(viaTable.newBridgeRows.isEmpty, s"lookup path re-created groups for $lists")
       assert(ids(viaTable) == ids(viaRecompute), s"paths diverged for $lists")
     }
@@ -80,20 +83,20 @@ class CauseBridgeSpec extends SparkSpecBase {
 
   test("permutation sensitivity: order of causes changes the group") {
     // (A at ordem 1, B at ordem 5) vs (B at ordem 1, A at ordem 5)
-    val r = CauseBridge.resolve(
+    val r = resolve(
       cleanOf(Seq(Seq("I219", "I48"), Seq("I48", "I219"))), dimCausa, seedBridge)
     val ids = r.resolved.select("chave_grupo_causa").collect().map(_.getInt(0)).toSet
     assert(ids.size == 2, "permuted cause lists must land in distinct groups")
   }
 
   test("unknown codes map to cause 0 and single-unknown matches seeded group 0") {
-    val r = CauseBridge.resolve(cleanOf(Seq(Seq("ZZZ9"))), dimCausa, seedBridge)
+    val r = resolve(cleanOf(Seq(Seq("ZZZ9"))), dimCausa, seedBridge)
     assert(r.newBridgeRows.isEmpty)
     assert(r.resolved.head().getAs[Int]("chave_grupo_causa") == 0)
   }
 
   test("bridge rows reproduce each group's full ordered cause list") {
-    val r = CauseBridge.resolve(
+    val r = resolve(
       cleanOf(Seq(Seq("I219", "N40", "I48"))), dimCausa, seedBridge)
     val rows = r.newBridgeRows.orderBy("ordem_causa")
       .collect().map(x => (x.getInt(1), x.getInt(2))).toList
@@ -107,7 +110,7 @@ class CauseBridgeSpec extends SparkSpecBase {
     // mapping are separate evaluations and must agree on one numbering.
     val dim = (1 to 60).map(c => (c, f"C$c%03d")).toDF("chave_causa", "codigo_CID")
     val lists = (0 until 2400).map(i => Seq(f"C${i % 60 + 1}%03d", f"C${i / 60 + 1}%03d"))
-    val r = CauseBridge.resolve(cleanOf(Seq.fill(8)(lists).flatten), dim, seedBridge)
+    val r = resolve(cleanOf(Seq.fill(8)(lists).flatten), dim, seedBridge)
     def check(what: String, df: DataFrame): Unit = {
       val ids = df.select("chave_grupo_causa").collect().map(_.getInt(0)).toSeq.distinct.sorted
       val dense = ids == (1 to lists.size)

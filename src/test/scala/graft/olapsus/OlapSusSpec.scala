@@ -599,4 +599,36 @@ class OlapSusSpec extends SparkSpecBase {
     assert(Pipeline.backfill(countWh, landing.toString, "sinasc")
       == Seq("2021-05-01" -> 0L, "2021-05-02" -> 4L))
   }
+
+  test("top_causes: a tie at 10th place keeps the first causes by name, in that order") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
+    val w = new Warehouse(spark, dir.resolve("wh-ties").toString)
+    def frame(schema: StructType, rows: Seq[Map[String, Any]]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        rows.map(r => Row.fromSeq(schema.fieldNames.toSeq.map(r.getOrElse(_, null))))), schema)
+    // Nine causes above the cut (Tétano and Dengue tied at 50), then
+    // eleven tied at 10 whose first by name, Asma, has neither the
+    // lowest key nor the first row.
+    val causes = Seq("Infarto" -> 90L, "Pneumonia" -> 80L, "Diabetes" -> 70L, "Cirrose" -> 60L,
+      "Tétano" -> 50L, "Dengue" -> 50L, "Sífilis" -> 40L, "Hepatite" -> 30L, "Rubéola" -> 20L) ++
+      Seq("Sepse", "Malária", "Raiva", "Lepra", "Gripe", "Asma", "Sarampo", "Tifo", "Cólera",
+        "Varíola", "Zika").map(_ -> 10L)
+    val keyed = causes.zipWithIndex.map { case ((name, total), i) => (i + 1, name, total) }
+    w.write("dimOcupacao", frame(Schemas.dimOcupacao,
+      Seq(Map("chave_ocupacao" -> 1, "descricao_familia" -> "Médicos"))))
+    w.write("dimCausa", frame(Schemas.dimCausa, keyed.map { case (k, name, _) =>
+      Map("chave_causa" -> k, "codigo_CID" -> f"X$k%02d", "descricao_subcategoria" -> name) }))
+    w.write(Warehouse.Bridge, frame(Schemas.ponteGrupoCausas, keyed.map { case (k, _, _) =>
+      Map("chave_grupo_causa" -> k, "chave_causa" -> k, "ordem_causa" -> 1) }))
+    frame(Schemas.factObitos, keyed.map { case (k, _, total) =>
+      Map("chave_grupo_causa" -> k, "chave_ocupacao" -> 1, "quantidade_obitos" -> total) })
+      .write.parquet(s"${w.root}/factObitos")
+    w.registerViews()
+    val top = ServingQueries.top10CausesByOccupation(w, "Médicos").collect()
+      .map(r => (r.getString(1), r.getLong(2))).toSeq
+    assert(top == Seq("Infarto" -> 90L, "Pneumonia" -> 80L, "Diabetes" -> 70L, "Cirrose" -> 60L,
+      "Dengue" -> 50L, "Tétano" -> 50L, "Sífilis" -> 40L, "Hepatite" -> 30L, "Rubéola" -> 20L,
+      "Asma" -> 10L))
+  }
 }
