@@ -234,9 +234,19 @@ object Dims {
 
   /** Seed the full warehouse (the init.sql bootstrap, §3.3). */
   def seedAll(wh: Warehouse, municipioCsv: String, cboCsv: String, cidCsv: String): Unit = {
+    // SIM/SINASC rows name a municipality by its 6-digit prefix
+    // (codigo_ibge / 10, check digit dropped), so a repeated prefix would
+    // fan every fact of that municipality out to each id sharing it.
+    // Checked before anything is written.
+    val mun = dimMunicipio(wh.spark, municipioCsv)
+    mun.groupBy(floor(col("codigo_ibge") / 10).as("prefix")).count()
+      .filter(col("count") > 1).limit(1).collect().headOption.foreach { r =>
+        throw new IllegalArgumentException(s"$municipioCsv: 6-digit municipality " +
+          s"prefix ${r.getLong(0)} is shared by ${r.getLong(1)} ids; nothing was seeded")
+      }
     wh.write("dimData", dimData(wh.spark))
     wh.write("dimHorario", dimHorario(wh.spark))
-    wh.write("dimMunicipio", dimMunicipio(wh.spark, municipioCsv))
+    wh.write("dimMunicipio", mun)
     wh.write("dimOcupacao", dimOcupacao(wh.spark, cboCsv))
     wh.write("dimCausa", dimCausa(wh.spark, cidCsv))
     wh.write("dimDemografia", dimDemografia(wh.spark))

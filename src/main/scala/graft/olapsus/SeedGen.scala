@@ -39,9 +39,20 @@ object SeedGen {
   val CboRows = 2812
   val CidRows = 12477
 
-  /** 5,571 municípios spread over all 27 UFs. Generated IBGE codes use
-    * the 9xxxx suffix block, disjoint from the fixture rows' real-looking
-    * codes, so ids stay unique. */
+  /** IBGE's municipality check digit over a 6-digit base: weights
+    * 1,2,1,2,1,2, each product's digits summed. */
+  def ibgeCheckDigit(base: Int): Int = {
+    val s = f"$base%06d".zipWithIndex.map { case (d, i) =>
+      val p = (d - '0') * (if (i % 2 == 0) 1 else 2)
+      p / 10 + p % 10
+    }.sum
+    (10 - s % 10) % 10
+  }
+
+  /** 5,571 municípios spread over all 27 UFs. Each generated id is a
+    * unique 6-digit base (`uf * 10000 + 9000 + i`, a block the fixture
+    * rows' bases never reach) plus its check digit, so the 6-digit
+    * prefix SIM/SINASC rows carry names exactly one municipality. */
   lazy val municipio: Seq[String] = {
     val need = MunicipioRows - (Fixtures.municipio.size - 1)
     val perUf = need / ufs.size
@@ -49,7 +60,8 @@ object SeedGen {
     val generated = ufs.zipWithIndex.flatMap { case ((code, sigla, nome, regiao), u) =>
       val n = perUf + (if (u < extra) 1 else 0)
       (0 until n).map { i =>
-        val id = code * 100000 + 90000 + i
+        val base = code * 10000 + 9000 + i
+        val id = base * 10 + ibgeCheckDigit(base)
         val capital = 0
         val rm = if (i % 10 == 0) s"Região Metropolitana $sigla" else ""
         s"$id,Cidade $sigla ${i + 1},$capital,Regional $sigla ${i % 20 + 1},$rm,$sigla,$nome,$regiao"

@@ -3,7 +3,7 @@ package graft.operators
 import graft.functions.VectorFns
 import graft.{Op, OpModule}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -178,6 +178,22 @@ object AnnIndex extends OpModule {
       })
     spark.read.option("basePath", base).schema(sch).parquet(paths: _*)
   }
+
+  /** The live rows of a cell-partitioned codes table in `cells` only,
+    * read through [[readPruned]] so even the listing stays bounded by
+    * the prune set. partitionBy wrote `cid` as a directory key, which
+    * reads back as a down-inferred integer: it is cast back to the
+    * BIGINT the scoring contract (and the oracles' CAST(cid AS BIGINT))
+    * expects. The `cid` isin filter, with the caller's further
+    * predicates, is vacuous over the pruned read but keeps the cell
+    * prune visible as a PartitionFilter in the plan (the audited
+    * property) and guards a caller passing wider paths. */
+  private def readCells(spark: SparkSession, root: String, table: String,
+      cells: Seq[Long], also: Column*): DataFrame =
+    live(spark, root,
+      readPruned(spark, s"$root/$table", cells.map(c => s"cid=$c"))
+        .withColumn("cid", col("cid").cast("long")))
+      .filter((col("cid").isin(cells: _*) +: also).reduce(_ && _))
 
   /** Deterministic per-corpus default root (test/bench convenience;
     * production callers pass their own warehouse path). The md5 suffix
@@ -395,16 +411,10 @@ object AnnIndex extends OpModule {
     Seq("ivf", "ivf_seeded", "pq", "ivfpq", "tombstones", "_has_removes",
       "_built")
       .foreach(t => f.delete(new Path(s"$root/$t"), true))
-    // The labeled twin of Similarity.quantizedQvNrm: the metadata label
-    // rides the build scan so the inverted-list tables can serve
-    // filtered search (s15) without ever touching the raw corpus. The
-    // extra column is inert for training (trainIvf/pqEncode project
-    // what they need) and is dropped from the PQ family writes below.
-    val vecs = graft.Tables.spread(graft.Tables.embeddings(spark, dir))
-      .select(col("vec_id"), col("label"),
-        VectorFns.quantize(col("embedding")).as("qv"))
-      .withColumn("nrm", VectorFns.norm2(col("qv")))
-      .cache()
+    // The label rides the build scan so the inverted-list tables can
+    // serve filtered search (s15) without touching the raw corpus; the
+    // PQ family writes below project it away.
+    val vecs = Similarity.vectorFrame(spark, dir, label = true).cache()
     try {
       // IVF (s5's geometry): Lloyd-trained centroids, full vectors
       // partitioned by cell — the inverted-list layout.
@@ -844,19 +854,12 @@ object AnnIndex extends OpModule {
     // leaves the prune set unless another live query shares it.
     val qcells = live(spark, root, readTable(spark, s"$root/ivf/qhead"))
       .select("cid").distinct().collect().map(_.getLong(0)).toSeq.sorted
-    // Read the query cells' DIRECTORIES only (v8): even the file-index
-    // LISTING stays bounded by the prune set — a whole-table read lists
-    // every (cid, label) file before pruning anything. partitionBy wrote
-    // cid as a directory key, which reads back as a down-inferred
-    // integer — restore the BIGINT the scoring contract (and the
-    // oracle's CAST(cid AS BIGINT)) expects. The isin filter is kept on
-    // top: semantically vacuous over the pruned read, but it keeps the
-    // cell prune visible as a PartitionFilter in the plan (the audited
-    // property) and guards a future caller passing wider paths.
-    val codes = live(spark, root,
-      readPruned(spark, s"$root/ivf/codes", qcells.map(c => s"cid=$c"))
-        .withColumn("cid", col("cid").cast("long")))
-    Similarity.ivfCosineTopK(codes.filter(col("cid").isin(qcells: _*)))
+    // Read the query cells' DIRECTORIES only (v8): a whole-table read
+    // lists every (cid, label) file before pruning anything.
+    val cells = readCells(spark, root, "ivf/codes", qcells)
+    Similarity.cellRanked(Similarity.cosineTopK(cells,
+      Similarity.queryHead(cells, col("cid").as("q_cid")),
+      col("cid") === col("q_cid") && Similarity.NotSelf))
   }
 
   /** Filtered-search probe: exact cosine top-k within the query's cell
@@ -894,12 +897,11 @@ object AnnIndex extends OpModule {
     // the exact label equality is a DATA filter the scan pushes into
     // parquet (row-group stats/dictionary), so rows outside the query
     // labels are skipped before they decode.
-    val codes = live(spark, root,
-      readPruned(spark, s"$root/ivf/codes", qcells.map(c => s"cid=$c"))
-        .withColumn("cid", col("cid").cast("long")))
-    Similarity.ivfCosineTopKFiltered(codes.filter(
-      col("cid").isin(qcells: _*) && col("lb").isin(qbuckets: _*)
-        && col("label").isin(qlabels: _*)))
+    val cells = readCells(spark, root, "ivf/codes", qcells,
+      col("lb").isin(qbuckets: _*), col("label").isin(qlabels: _*))
+    val qs = Similarity.queryHead(cells, col("label").as("q_label"), col("cid").as("q_cid"))
+    Similarity.cellRanked(Similarity.cosineTopK(cells, qs, col("cid") === col("q_cid")
+      && col("label") === col("q_label") && Similarity.NotSelf), col("label"))
   }
 
   /** Seeded-IVF probe (s3's geometry): identical plan shape to
@@ -918,11 +920,10 @@ object AnnIndex extends OpModule {
       .select("qv").collect()
       .map(r => Similarity.nearestIdL(r.getSeq[Long](0).toArray, seeded))
       .distinct.sorted.toSeq
-    val codes = live(spark, root,
-      readPruned(spark, s"$root/ivf_seeded/codes",
-        qcells.map(c => s"cid=$c"))
-        .withColumn("cid", col("cid").cast("long")))
-    Similarity.ivfCosineTopK(codes.filter(col("cid").isin(qcells: _*)))
+    val cells = readCells(spark, root, "ivf_seeded/codes", qcells)
+    Similarity.cellRanked(Similarity.cosineTopK(cells,
+      Similarity.queryHead(cells, col("cid").as("q_cid")),
+      col("cid") === col("q_cid") && Similarity.NotSelf))
   }
 
   /** PQ probe: ADC top-k over `pq/codes` with the persisted codebook.
@@ -949,12 +950,8 @@ object AnnIndex extends OpModule {
       .map(v => Similarity.nearestIdL(v, coarse)).toSeq.distinct.sorted
     // Query cells' directories only (v8): the listing, not just the
     // read, stays bounded by the prune set.
-    val codes = live(spark, root,
-      readPruned(spark, s"$root/ivfpq/codes",
-        qcells.map(c => s"cid=$c"))
-        .withColumn("cid", col("cid").cast("long")))
-      .filter(col("cid").isin(qcells: _*))
-    Similarity.ivfpqAdcTopK("s11", codes, head, coarse, rcb)
+    Similarity.ivfpqAdcTopK("s11", readCells(spark, root, "ivfpq/codes", qcells),
+      head, coarse, rcb)
   }
 
   // ---- declared operations -------------------------------------------
@@ -1038,22 +1035,14 @@ object AnnIndex extends OpModule {
     val fids = cands.map(_.getAs[Long]("fid")).distinct.sorted
     val candDf = broadcast(cands
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-      .toDF("query_id", "neighbor_id", "adc_rnk"))
-    val q = broadcast(head.toSeq.filter(_._1 < Similarity.NQ).sortBy(_._1)
+      .toDF("cand_of", "vec_id", "adc_rnk"))
+    val q = head.toSeq.filter(_._1 < Similarity.NQ).sortBy(_._1)
       .map { case (id, qv) => (id, qv.toSeq, Similarity.dotL(qv, qv)) }
-      .toDF("query_id", "q_qv", "q_nrm"))
+      .toDF("query_id", "q_qv", "q_nrm")
     val codes = readPruned(spark, s"$root/ivf/codes", fids.map(c => s"cid=$c"))
-      .select(col("vec_id").as("neighbor_id"), col("qv"), col("nrm"))
-    val exact = codes
-      .join(candDf, Seq("neighbor_id"))
-      .join(q, Seq("query_id"))
-      .withColumn("cosine", VectorFns.cosine(
-        VectorFns.dot(col("q_qv"), col("qv")), col("q_nrm"), col("nrm")))
-      .select("query_id", "neighbor_id", "adc_rnk", "cosine")
-    Similarity.topKPerQuery(exact, Seq(col("cosine").desc, col("neighbor_id")))
-      .select(col("query_id"), col("neighbor_id"), col("rnk"), col("cosine"),
-        col("adc_rnk"))
-      .orderBy("query_id", "rnk")
+      .select(col("vec_id"), col("qv"), col("nrm"))
+    Similarity.rerankRanked(Similarity.cosineTopK(codes.join(candDf, Seq("vec_id")),
+      q, col("cand_of") === col("query_id")))
   }
 
   val s18PqRerankProbe: Op = Op(
@@ -1079,12 +1068,8 @@ object AnnIndex extends OpModule {
     val rcb = readCodebook(spark, s"$root/ivfpq/codebook")
     val qcells = head.filter(_._1 < Similarity.NQ).values
       .map(v => Similarity.nearestIdL(v, coarse)).toSeq.distinct.sorted
-    val codes = live(spark, root,
-      readPruned(spark, s"$root/ivfpq/codes",
-        qcells.map(c => s"cid=$c"))
-        .withColumn("cid", col("cid").cast("long")))
-      .filter(col("cid").isin(qcells: _*))
-    Similarity.ivfpqAdcTopK("s19", codes, head, coarse, rcb,
+    Similarity.ivfpqAdcTopK("s19", readCells(spark, root, "ivfpq/codes", qcells),
+      head, coarse, rcb,
       pool = Similarity.RerankPool, passthrough = Seq("fid"))
   }
 
@@ -1195,19 +1180,9 @@ object AnnIndex extends OpModule {
           StructField("cell", LongType), StructField("rnk", IntegerType),
           StructField("cosine", DoubleType))))
     val cells = q.map(_._4).distinct.sorted.toSeq
-    val codes = live(spark, root,
-      readPruned(spark, s"$root/ivf/codes", cells.map(c => s"cid=$c"))
-        .withColumn("cid", col("cid").cast("long")))
-      .filter(col("cid").isin(cells: _*))
-    val qDf = broadcast(q.toSeq.toDF("query_id", "q_qv", "q_nrm", "q_cid"))
-    val pairs = codes.join(qDf, col("cid") === col("q_cid"))
-      .withColumn("cos", graft.functions.VectorFns.cosine(
-        graft.functions.VectorFns.dot(col("q_qv"), col("qv")),
-        col("q_nrm"), col("nrm")))
-    Similarity.topKPerQuery(pairs, Seq(col("cos").desc, col("vec_id")), k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("cid").as("cell"), col("rnk"), col("cos").as("cosine"))
-      .orderBy("query_id", "rnk")
+    val qDf = q.toSeq.toDF("query_id", "q_qv", "q_nrm", "q_cid")
+    Similarity.cellRanked(Similarity.cosineTopK(readCells(spark, root, "ivf/codes", cells),
+      qDf, col("cid") === col("q_cid"), k))
   }
 
   /** s20: [[searchIvf]] oracle-checked with DERIVED query vectors —
@@ -1304,23 +1279,12 @@ object AnnIndex extends OpModule {
     val cells = qRows.map(_.getLong(3)).distinct.sorted.toSeq
     val buckets = qRows.map(_.getInt(5)).distinct.sorted.toSeq
     val labels = qRows.map(_.get(4)).distinct.toSeq
-    val codes = live(spark, root,
-      readPruned(spark, s"$root/ivf/codes", cells.map(c => s"cid=$c"))
-        .withColumn("cid", col("cid").cast("long")))
-      .filter(col("cid").isin(cells: _*) && col("lb").isin(buckets: _*)
-        && col("label").isin(labels: _*))
-    val qDf = broadcast(spark.createDataFrame(
-      java.util.Arrays.asList(qRows: _*), qSchema))
-    val pairs = codes.join(qDf,
-        col("cid") === col("q_cid") && col("label") === col("q_label"))
-      .withColumn("cos", graft.functions.VectorFns.cosine(
-        graft.functions.VectorFns.dot(col("q_qv"), col("qv")),
-        col("q_nrm"), col("nrm")))
-    Similarity.topKPerQuery(pairs, Seq(col("cos").desc, col("vec_id")), k)
-      .select(col("query_id"), col("q_label").as("label"),
-        col("vec_id").as("neighbor_id"), col("cid").as("cell"),
-        col("rnk"), col("cos").as("cosine"))
-      .orderBy("query_id", "rnk")
+    val codes = readCells(spark, root, "ivf/codes", cells,
+      col("lb").isin(buckets: _*), col("label").isin(labels: _*))
+    val qDf = spark.createDataFrame(java.util.Arrays.asList(qRows: _*), qSchema)
+    Similarity.cellRanked(Similarity.cosineTopK(codes, qDf,
+        col("cid") === col("q_cid") && col("label") === col("q_label"), k),
+      col("q_label").as("label"))
   }
 
   /** s21: [[searchIvfFiltered]] oracle-checked with the s20 derivation

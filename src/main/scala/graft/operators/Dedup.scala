@@ -454,15 +454,13 @@ object Dedup extends OpModule {
       .orderBy("vec_a", "vec_b")
   })
 
-  /** (vec_id, label, qv, nrm, bucket) per embedding: quantized vector,
-    * its exact squared norm and its [[EMB_BITS]]-bit integer LSH bucket.
-    * Cached: a pair join reads it on both sides, and uncached the scan +
-    * quantize + norm + bucket work runs once per side (fresh expression
-    * ids defeat exchange reuse). */
+  /** (vec_id, label, qv, nrm, bucket) per embedding: the labeled
+    * [[Similarity.vectorFrame]] plus its [[EMB_BITS]]-bit integer LSH
+    * bucket. Cached: a pair join reads it on both sides, and uncached the
+    * scan + quantize + norm + bucket work runs once per side (fresh
+    * expression ids defeat exchange reuse). */
   private def embVectors(spark: SparkSession, dir: String): DataFrame =
-    Tables.spread(Tables.embeddings(spark, dir))
-      .select(col("vec_id"), col("label"), VectorFns.quantize(col("embedding")).as("qv"))
-      .withColumn("nrm", VectorFns.norm2(col("qv")))
+    Similarity.vectorFrame(spark, dir, label = true)
       .withColumn("bucket", VectorFns.lshBucketInt(col("qv"), EMB_BITS))
       .cache()
 
@@ -1936,7 +1934,7 @@ object Dedup extends OpModule {
       kc: Int = 0): DataFrame = {
     // Cached: Lloyd scans it once per round, then assignment + the
     // dominance self-join read it twice more (fresh-expression-id rule).
-    val vecs = Similarity.quantizedQvNrm(spark, dir).cache()
+    val vecs = Similarity.vectorFrame(spark, dir).cache()
     val cells0 = if (kc > 0) kc else semCellCount(vecs.count())
     val cent = Similarity.trainIvf(spark, dir, vecs, cells0)
     // Corpus-scaled cell counts (cells ∝ n) would make the flat argmin
@@ -2081,7 +2079,7 @@ object Dedup extends OpModule {
     * its unrolled oracle). */
   private[graft] def semDeDupMulti(spark: SparkSession, dir: String,
       kc: Int = 0): DataFrame = {
-    val vecs = Similarity.quantizedQvNrm(spark, dir).cache()
+    val vecs = Similarity.vectorFrame(spark, dir).cache()
     val cells0 = if (kc > 0) kc else semCellCount(vecs.count())
     val cent = Similarity.trainIvf(spark, dir, vecs, cells0)
     semDominanceMulti(semCellsMulti(vecs, cent))

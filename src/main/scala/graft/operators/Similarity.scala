@@ -201,55 +201,47 @@ object Similarity extends OpModule {
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
 
-  /** The shared scan front of every ANN operator: (vec_id, qv). */
-  private[operators] def quantizedQv(spark: SparkSession, dir: String): DataFrame =
+  /** The vector frame of the ANN and embedding-dedup families:
+    * (vec_id[, label], qv, nrm), the quantized embedding and its exact
+    * squared norm over the spread scan. `label` rides only for callers
+    * that read it, so a frame a caller caches never holds a column
+    * nobody uses; an uncached frame's unused `nrm` is pruned. */
+  private[operators] def vectorFrame(spark: SparkSession, dir: String,
+      label: Boolean = false): DataFrame =
     Tables.spread(Tables.embeddings(spark, dir))
-      .select(col("vec_id"), VectorFns.quantize(col("embedding")).as("qv"))
+      .select(Seq(col("vec_id")) ++ (if (label) Seq(col("label")) else Nil) :+
+        VectorFns.quantize(col("embedding")).as("qv"): _*)
+      .withColumn("nrm", VectorFns.norm2(col("qv")))
 
-  /** (vec_id, qv, nrm) — the front for cosine-scoring operators. */
-  private[operators] def quantizedQvNrm(spark: SparkSession, dir: String): DataFrame =
-    quantizedQv(spark, dir).withColumn("nrm", VectorFns.norm2(col("qv")))
+  /** The one exact-cosine top-k of the ANN family. The bounded query
+    * side (query_id, q_qv, q_nrm, …) is broadcast and joined to the
+    * candidates (vec_id, qv, nrm, …) on `on`: the caller's cell, bucket,
+    * label or candidate-pair key, plus [[NotSelf]] where a corpus query
+    * must not find itself. Each query keeps its `k` best candidates by
+    * (cos DESC, vec_id), numbered `rnk`; every input column rides
+    * through, and each caller projects and orders its own output. */
+  private[operators] def cosineTopK(cands: DataFrame, queries: DataFrame,
+      on: Column, k: Int = K): DataFrame =
+    topKPerQuery(
+      cands.join(broadcast(queries), on).withColumn("cos", VectorFns.cosine(
+        VectorFns.dot(col("q_qv"), col("qv")), col("q_nrm"), col("nrm"))),
+      Seq(col("cos").desc, col("vec_id")), k)
 
-  /** Shared IVF probe: exact cosine top-k within the query's cell, over
-    * any cell-assigned (vec_id, qv, nrm, cid) relation — s3 (seeded
-    * centroids), s5 (trained centroids) and the persisted-index probe
-    * all end in exactly this block, so their semantics can't drift. */
-  private[operators] def ivfCosineTopK(cells: DataFrame): DataFrame = {
-    val q = cells.filter(col("vec_id") < NQ)
-      .select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
-        col("nrm").as("q_nrm"), col("cid").as("q_cid"))
-    val pairs = cells
-      .join(broadcast(q), col("cid") === col("q_cid") && col("vec_id") =!= col("query_id"))
-      .withColumn("cos", VectorFns.cosine(
-        VectorFns.dot(col("q_qv"), col("qv")), col("q_nrm"), col("nrm")))
-    topKPerQuery(pairs, Seq(col("cos").desc, col("vec_id")))
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"), col("cid").as("cell"),
-        col("rnk"), col("cos").as("cosine"))
+  /** [[cosineTopK]]'s query side for corpus queries: the rows of a
+    * vector frame with vec_id < NQ as (query_id, q_qv, q_nrm, extra…). */
+  private[operators] def queryHead(vecs: DataFrame, extra: Column*): DataFrame =
+    vecs.filter(col("vec_id") < NQ).select(Seq(col("vec_id").as("query_id"),
+      col("qv").as("q_qv"), col("nrm").as("q_nrm")) ++ extra: _*)
+
+  /** Self-exclusion for corpus queries: a query is never its own neighbor. */
+  private[operators] val NotSelf: Column = col("vec_id") =!= col("query_id")
+
+  /** The IVF output of a cell-keyed [[cosineTopK]]:
+    * (query_id, neighbor_id, cell, rnk, cosine) by query and rank. */
+  private[operators] def cellRanked(ranked: DataFrame, label: Column*): DataFrame =
+    ranked.select(Seq(col("query_id")) ++ label ++ Seq(col("vec_id").as("neighbor_id"),
+      col("cid").as("cell"), col("rnk"), col("cos").as("cosine")): _*)
       .orderBy("query_id", "rnk")
-  }
-
-  /** [[ivfCosineTopK]] with a metadata predicate: candidates must share
-    * the query's label as well as its cell — s14's PRE-filter semantics
-    * (the predicate is part of the join condition, so ranking happens
-    * after filtering) composed with the inverted-list read. Input must
-    * carry a `label` column; the s15 probe supplies it from the index
-    * codes table, never the raw corpus. */
-  private[operators] def ivfCosineTopKFiltered(cells: DataFrame): DataFrame = {
-    val q = cells.filter(col("vec_id") < NQ)
-      .select(col("vec_id").as("query_id"), col("label").as("q_label"),
-        col("qv").as("q_qv"), col("nrm").as("q_nrm"), col("cid").as("q_cid"))
-    val pairs = cells
-      .join(broadcast(q), col("cid") === col("q_cid") &&
-        col("label") === col("q_label") && col("vec_id") =!= col("query_id"))
-      .withColumn("cos", VectorFns.cosine(
-        VectorFns.dot(col("q_qv"), col("qv")), col("q_nrm"), col("nrm")))
-    topKPerQuery(pairs, Seq(col("cos").desc, col("vec_id")))
-      .select(
-        col("query_id"), col("label"), col("vec_id").as("neighbor_id"),
-        col("cid").as("cell"), col("rnk"), col("cos").as("cosine"))
-      .orderBy("query_id", "rnk")
-  }
 
   private[operators] def duckVecs(extra: String = ""): String =
     s"""v AS (SELECT vec_id, label, ${VectorFns.duckQuantize("embedding")} AS qv
@@ -275,15 +267,9 @@ object Similarity extends OpModule {
       FROM ranked WHERE rnk <= $K
       ORDER BY query_id, rnk
     """))((spark, dir) => {
-    val vecs = quantizedQvNrm(spark, dir)
-    val q = vecs.filter(col("vec_id") < NQ)
-      .select(col("vec_id").as("query_id"), col("qv").as("q_qv"), col("nrm").as("q_nrm"))
-    val pairs = vecs.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("dot", VectorFns.dot(col("q_qv"), col("qv")))
-      .withColumn("cos", VectorFns.cosine(col("dot"), col("q_nrm"), col("nrm")))
-    topKPerQuery(pairs, Seq(col("cos").desc, col("vec_id")))
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"), col("rnk"),
+    val vecs = vectorFrame(spark, dir)
+    cosineTopK(vecs, queryHead(vecs), NotSelf)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rnk"),
         col("cos").as("cosine"))
       .orderBy("query_id", "rnk")
   })
@@ -309,19 +295,10 @@ object Similarity extends OpModule {
       FROM ranked WHERE rnk <= $K
       ORDER BY query_id, rnk
     """))((spark, dir) => {
-    val vecs = quantizedQvNrm(spark, dir)
-      .withColumn("bucket", VectorFns.lshBucket8("qv"))
-    val q = vecs.filter(col("vec_id") < NQ)
-      .select(
-        col("vec_id").as("query_id"), col("qv").as("q_qv"),
-        col("nrm").as("q_nrm"), col("bucket").as("q_bucket"))
-    val pairs = vecs
-      .join(broadcast(q), col("bucket") === col("q_bucket") && col("vec_id") =!= col("query_id"))
-      .withColumn("dot", VectorFns.dot(col("q_qv"), col("qv")))
-      .withColumn("cos", VectorFns.cosine(col("dot"), col("q_nrm"), col("nrm")))
-    topKPerQuery(pairs, Seq(col("cos").desc, col("vec_id")))
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"), col("bucket"), col("rnk"),
+    val vecs = vectorFrame(spark, dir).withColumn("bucket", VectorFns.lshBucket8("qv"))
+    cosineTopK(vecs, queryHead(vecs, col("bucket").as("q_bucket")),
+        col("bucket") === col("q_bucket") && NotSelf)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("bucket"), col("rnk"),
         col("cos").as("cosine"))
       .orderBy("query_id", "rnk")
   })
@@ -358,18 +335,10 @@ object Similarity extends OpModule {
       ORDER BY query_id, rnk
     """)
     })((spark, dir) => {
-    val vecs = quantizedQvNrm(spark, dir)
-      .withColumn("bucket", VectorFns.lshBucketInt(col("qv"), 8))
-    val q = vecs.filter(col("vec_id") < NQ)
-      .select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
-        col("nrm").as("q_nrm"),
-        explode(array(col("bucket") +: (0 until 8).map(j =>
-          expr(s"bucket ^ ${1L << j}")): _*)).as("probe"))
-    val pairs = vecs
-      .join(broadcast(q), col("bucket") === col("probe") && col("vec_id") =!= col("query_id"))
-      .withColumn("cos", VectorFns.cosine(
-        VectorFns.dot(col("q_qv"), col("qv")), col("q_nrm"), col("nrm")))
-    topKPerQuery(pairs, Seq(col("cos").desc, col("vec_id")))
+    val vecs = vectorFrame(spark, dir).withColumn("bucket", VectorFns.lshBucketInt(col("qv"), 8))
+    val q = queryHead(vecs, explode(array(col("bucket") +: (0 until 8).map(j =>
+      expr(s"bucket ^ ${1L << j}")): _*)).as("probe"))
+    cosineTopK(vecs, q, col("bucket") === col("probe") && NotSelf)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("rnk"),
         col("cos").as("cosine"))
       .orderBy("query_id", "rnk")
@@ -423,9 +392,9 @@ object Similarity extends OpModule {
     // The NC-row codebook lives on the driver; assignment is an inline
     // codegen'd argmin — one narrow scan, no join, no shuffle.
     val cent = collectHead(spark, dir, NC).toSeq.sortBy(_._1)
-    val cells = quantizedQvNrm(spark, dir)
-      .withColumn("cid", nearestId(col("qv"), cent))
-    ivfCosineTopK(cells)
+    val cells = vectorFrame(spark, dir).withColumn("cid", nearestId(col("qv"), cent))
+    cellRanked(cosineTopK(cells, queryHead(cells, col("cid").as("q_cid")),
+      col("cid") === col("q_cid") && NotSelf))
   }
 
   private[graft] val KC = 8       // trained-codebook cells
@@ -533,11 +502,12 @@ object Similarity extends OpModule {
       ORDER BY query_id, rnk
     """)
     })((spark, dir) => {
-    val vecs = quantizedQvNrm(spark, dir)
+    val vecs = vectorFrame(spark, dir)
       .cache() // scanned once per training round + the final probe
     val cent = trainIvf(spark, dir, vecs)
     val cells = vecs.withColumn("cid", nearestId(col("qv"), cent))
-    ivfCosineTopK(cells)
+    cellRanked(cosineTopK(cells, queryHead(cells, col("cid").as("q_cid")),
+      col("cid") === col("q_cid") && NotSelf))
   })
 
   /** Oracle for the s15 filtered-index probe (defined here because the
@@ -622,62 +592,50 @@ object Similarity extends OpModule {
     * argmin per block against the driver-side codebook. */
   private[operators] def pqEncode(vecs: DataFrame,
       cb: Map[Int, Seq[(Long, Array[Long])]]): DataFrame =
-    // One select, not a withColumn per block (r15): each withColumn is
-    // a full Catalyst analysis pass over the literal-heavy tree, and
-    // the PQ family's driver build time was dominated by exactly that.
+    // One select for all blocks: each withColumn would be a full
+    // Catalyst analysis pass over the literal codebook tree.
     vecs.select(col("*") +:
       (0 until PQ_M).map(m => nearestId(pqSubCol(m), cb(m)).as(s"code$m")): _*)
 
+  /** The asymmetric-distance column of s7/s8 and their probes: row
+    * codes `code0..code{M−1}` scored against the query vectors `qs`
+    * (query id → the vector its LUT is built from: the raw query, or
+    * its residual under IVF+PQ) over codebook `cb`, for the query whose
+    * id is in `qid`. Each block's LUT is ONE literal map keyed
+    * (query_id << 32 | code), so the plan carries PQ_M maps rather than
+    * NQ × PQ_M; codes and query ids both stay far below 2³², so the
+    * packed key is exact. Keys are the codebook's own codes, which are
+    * the only codes [[nearestId]] can emit, so duplicate sub-blocks
+    * leave a code unused rather than missing. A code outside the LUT
+    * would make `element_at` NULL and sort FIRST in the ascending top-k,
+    * so it raises instead (the t31 coalesce + raise_error rule). */
+  private def adcDistance(tag: String, qs: Seq[(Long, Array[Long])],
+      cb: Map[Int, Seq[(Long, Array[Long])]], qid: Column): Column =
+    (0 until PQ_M).map { m =>
+      val lut = (for ((q, v) <- qs; (code, csub) <- cb(m))
+        yield ((q << 32) | code) -> d2L(sliceL(v, m), csub)).toMap
+      coalesce(
+        element_at(typedLit(lut), shiftleft(qid, 32).bitwiseOR(col(s"code$m"))),
+        raise_error(format_string(s"$tag ADC: code$m=%s not in query-%s LUT",
+          col(s"code$m"), qid)))
+    }.reduce(_ + _)
+
   /** ADC scoring + top-k over PQ-coded rows (vec_id, code0..code{M−1}):
-    * per-query lookup tables are literal MAPS keyed by the observed code
-    * values (code → partial distance, same Long arithmetic), so each row
-    * sums M map lookups per query inline — no join, no aggregation; the
-    * only shuffled rows are the top-k funnel survivors. Keying by
-    * observed codes (not a dense 0..K−1 array) keeps duplicate seed
-    * sub-blocks benign: ties encode to the lowest code, the higher code
-    * is simply never observed, and the LUT still covers exactly the
-    * codes `nearestId` can emit. Shared by s7 and the index probe. */
+    * every row is exploded against the query ids and scored by
+    * [[adcDistance]] inline — no join, no aggregation; the only shuffled
+    * rows are the top-k funnel survivors. Shared by s7 and the index
+    * probe. */
   private[operators] def pqAdcTopK(tag: String, coded: DataFrame,
       head: Map[Long, Array[Long]],
       cb: Map[Int, Seq[(Long, Array[Long])]], pool: Int = K,
       passthrough: Seq[String] = Nil): DataFrame = {
-    val lut: Map[Long, Array[Map[Long, Long]]] = (0L until NQ.toLong).toSeq
-      .filter(head.contains).map { q =>
-        q -> Array.tabulate(PQ_M) { m =>
-          cb(m).map { case (code, csub) =>
-            code -> d2L(sliceL(head(q), m), csub)
-          }.toMap
-        }
-      }.toMap
-    // Merged LUT (r15): ONE literal map per block keyed
-    // (query_id << 32 | code) instead of NQ separate per-query maps —
-    // the plan carries PQ_M map literals and PQ_M guard towers rather
-    // than NQ × PQ_M (10× smaller expression tree at NQ=10; codes and
-    // query ids are both far below 2³², so the packed key is exact and
-    // collision-free by construction). Values are the identical Long
-    // distances — only the lookup key changed shape.
-    val merged: IndexedSeq[Map[Long, Long]] = (0 until PQ_M).map { m =>
-      (for ((q, tables) <- lut.toSeq; (code, pd) <- tables(m))
-        yield ((q << 32) | code) -> pd).toMap
-    }
-    val qids = lut.keys.toSeq.sorted
-    // A code outside the LUT would make element_at NULL, and a NULL
-    // adc_d2 sorts FIRST under the ascending top-k window — silent
-    // corruption instead of a crash. Unreachable today (nearestId and
-    // the LUT draw from the same codebook entries), so keep the loud
-    // guard explicit (the t31 coalesce+raise_error pattern).
-    val adc = (0 until PQ_M).map(m =>
-      coalesce(
-        element_at(typedLit(merged(m)),
-          shiftleft(col("query_id"), 32).bitwiseOR(col(s"code$m"))),
-        raise_error(format_string(
-          s"$tag ADC: code$m=%s not in query-%s LUT",
-          col(s"code$m"), col("query_id"))))).reduce(_ + _)
+    val qids: Seq[Long] = (0L until NQ.toLong).filter(head.contains)
     val scored = coded
       .withColumn("query_id", explode(typedLit(qids)))
       .filter(col("vec_id") =!= col("query_id"))
       .select(Seq(col("query_id"), col("vec_id").as("neighbor_id"),
-        adc.as("adc_d2")) ++ passthrough.map(col): _*)
+        adcDistance(tag, qids.map(q => q -> head(q)), cb, col("query_id")).as("adc_d2")) ++
+        passthrough.map(col): _*)
     topKPerQuery(scored, Seq(col("adc_d2").asc, col("neighbor_id").asc), pool)
       .select(Seq(col("query_id"), col("neighbor_id"), col("rnk"),
         col("adc_d2")) ++ passthrough.map(col): _*)
@@ -748,7 +706,7 @@ object Similarity extends OpModule {
       FROM ranked WHERE rnk <= $K
       ORDER BY query_id, rnk
     """))((spark, dir) => {
-    val vecs = quantizedQv(spark, dir)
+    val vecs = vectorFrame(spark, dir)
     // Seeds + the query set: the table's bounded head, collected once.
     val head = collectHead(spark, dir, math.max(NQ, PQ_K).toLong)
     val cb = trainPq(vecs, head)
@@ -811,25 +769,23 @@ object Similarity extends OpModule {
     // Cached: trainPq's aggregates, the encode+ADC scan, the rerank
     // fetch and the query head all read this projection (the
     // fresh-expression-id rule).
-    val vecs = quantizedQvNrm(spark, dir).cache()
+    val vecs = vectorFrame(spark, dir).cache()
     val head = collectHead(spark, dir, math.max(NQ, PQ_K).toLong)
     val cb = trainPq(vecs, head)
     val cands = pqAdcTopK("s17", pqEncode(vecs, cb), head, cb, RerankPool)
-      .select(col("query_id"), col("neighbor_id"), col("rnk").as("adc_rnk"))
-    val q = vecs.filter(col("vec_id") < NQ)
-      .select(col("vec_id").as("query_id"),
-        col("qv").as("q_qv"), col("nrm").as("q_nrm"))
-    val exact = vecs.withColumnRenamed("vec_id", "neighbor_id")
-      .join(broadcast(cands), Seq("neighbor_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("cosine", VectorFns.cosine(
-        VectorFns.dot(col("q_qv"), col("qv")), col("q_nrm"), col("nrm")))
-      .select("query_id", "neighbor_id", "adc_rnk", "cosine")
-    topKPerQuery(exact, Seq(col("cosine").desc, col("neighbor_id")))
-      .select(col("query_id"), col("neighbor_id"), col("rnk"), col("cosine"),
-        col("adc_rnk"))
-      .orderBy("query_id", "rnk")
+      .select(col("query_id").as("cand_of"), col("neighbor_id").as("vec_id"),
+        col("rnk").as("adc_rnk"))
+    rerankRanked(cosineTopK(vecs.join(broadcast(cands), Seq("vec_id")),
+      queryHead(vecs), col("cand_of") === col("query_id")))
   })
+
+  /** The rerank output of a candidate-pair [[cosineTopK]] (s17/s18/s19):
+    * candidates arrive as (cand_of, vec_id, adc_rnk) rows joined to their
+    * full vectors and are matched to their own query by `cand_of`. */
+  private[operators] def rerankRanked(ranked: DataFrame): DataFrame =
+    ranked.select(col("query_id"), col("vec_id").as("neighbor_id"), col("rnk"),
+      col("cos").as("cosine"), col("adc_rnk"))
+      .orderBy("query_id", "rnk")
 
   /** The IVF+PQ coarse codebook: the first `pc` raw vectors. `pc` is a
     * BUILD parameter (default PQ_K — the inline s8 definition): at
@@ -881,59 +837,36 @@ object Similarity extends OpModule {
     val cells = vecs
       .withColumn("cid", nearestId(col("qv"), coarse))
       .withColumn("rv", VectorFns.subtract(col("qv"), cvCol))
-    // One select for all blocks (the pqEncode r15 rule): one analysis
-    // pass instead of PQ_M over the literal codebook tree.
+    // One select for all blocks, as in pqEncode.
     cells.select(col("*") +:
       (0 until PQ_M).map(m => nearestId(rsubCol(m), cbEntries(m)).as(s"code$m")): _*)
   }
 
   /** Cell-gated ADC scoring + top-k over IVF+PQ-coded rows
-    * (vec_id, cid, code0..code{M−1}): per-query LUTs over the residual
-    * codebook as literal maps, the query's own cell + residual computed
-    * on the driver in the identical Long arithmetic — no join, no
-    * aggregation. Shared by s8 and the index probe. */
+    * (vec_id, cid, code0..code{M−1}): each query's own cell and residual
+    * are computed on the driver in the same Long arithmetic, rows are
+    * exploded against the (query_id, q_cid) literal pairs and gated to
+    * the query's cell, then scored by [[adcDistance]] over the residual
+    * codebook — no join, no aggregation. Shared by s8 and the index
+    * probe. */
   private[operators] def ivfpqAdcTopK(tag: String, coded: DataFrame,
       head: Map[Long, Array[Long]],
       coarse: Seq[(Long, Array[Long])],
       cbEntries: Map[Int, Seq[(Long, Array[Long])]],
       pool: Int = K, passthrough: Seq[String] = Nil): DataFrame = {
     val coarseMap = coarse.toMap
-    val lut: Seq[(Long, Long, Array[Map[Long, Long]])] = (0L until NQ.toLong).toSeq
-      .filter(head.contains).map { q =>
-        val qcid = nearestIdL(head(q), coarse)
-        val qrv = subL(head(q), coarseMap(qcid))
-        // Keyed by observed code values (as s7): duplicate seed residual
-        // sub-blocks leave a code unobserved, never crash the query.
-        val tables = Array.tabulate(PQ_M) { m =>
-          cbEntries(m).map { case (code, csub) =>
-            code -> d2L(sliceL(qrv, m), csub)
-          }.toMap
-        }
-        (q, qcid, tables)
-      }
-    // Merged LUT (r15, the pqAdcTopK shape): PQ_M maps keyed
-    // (query_id << 32 | code) + one literal (query_id, q_cid) array
-    // replace the NQ × PQ_M per-query map towers. Same Long distances,
-    // same cell gate, 10× smaller expression tree at NQ=10.
-    val merged: IndexedSeq[Map[Long, Long]] = (0 until PQ_M).map { m =>
-      (for ((q, _, tables) <- lut; (code, pd) <- tables(m))
-        yield ((q << 32) | code) -> pd).toMap
+    val qs = (0L until NQ.toLong).filter(head.contains).map { q =>
+      val qcid = nearestIdL(head(q), coarse)
+      (q, qcid, subL(head(q), coarseMap(qcid)))
     }
-    val qcells = lut.map { case (q, qcid, _) => (q, qcid) }
-    // Same loud-NULL guard as s7: an unmapped code must crash, not
-    // sort-first into the top-k.
-    val adc = (0 until PQ_M).map(m =>
-      coalesce(
-        element_at(typedLit(merged(m)),
-          shiftleft(col("qs._1"), 32).bitwiseOR(col(s"code$m"))),
-        raise_error(format_string(
-          s"$tag ADC: code$m=%s not in query-%s LUT",
-          col(s"code$m"), col("qs._1"))))).reduce(_ + _)
+    val qcells = qs.map { case (q, qcid, _) => (q, qcid) }
     val scored = coded
       .withColumn("qs", explode(typedLit(qcells)))
       .filter(col("cid") === col("qs._2") && col("vec_id") =!= col("qs._1"))
       .select(Seq(col("qs._1").as("query_id"), col("vec_id").as("neighbor_id"),
-        col("cid").as("cell"), adc.as("adc_d2")) ++ passthrough.map(col): _*)
+        col("cid").as("cell"),
+        adcDistance(tag, qs.map { case (q, _, rv) => q -> rv }, cbEntries, col("qs._1"))
+          .as("adc_d2")) ++ passthrough.map(col): _*)
     topKPerQuery(scored, Seq(col("adc_d2").asc, col("neighbor_id").asc), pool)
       .select(Seq(col("query_id"), col("neighbor_id"), col("cell"), col("rnk"),
         col("adc_d2")) ++ passthrough.map(col): _*)
@@ -1014,7 +947,7 @@ object Similarity extends OpModule {
       FROM ranked WHERE rnk <= $K
       ORDER BY query_id, rnk
     """))((spark, dir) => {
-    val vecs = quantizedQv(spark, dir)
+    val vecs = vectorFrame(spark, dir)
     val head = collectHead(spark, dir, math.max(NQ, 2 * PQ_K).toLong)
     val coarse = ivfpqCoarse(head)
     val cbEntries = ivfpqResidualCb(head, coarse)
@@ -1298,17 +1231,9 @@ object Similarity extends OpModule {
       FROM ranked WHERE rnk <= $K
       ORDER BY query_id, rnk
     """))((spark, dir) => {
-    val vecs = Tables.spread(Tables.embeddings(spark, dir))
-      .select(col("vec_id"), col("label"), VectorFns.quantize(col("embedding")).as("qv"))
-      .withColumn("nrm", VectorFns.norm2(col("qv")))
-    val q = vecs.filter(col("vec_id") < NQ)
-      .select(col("vec_id").as("query_id"), col("label"),
-        col("qv").as("q_qv"), col("nrm").as("q_nrm"))
-    val pairs = vecs.join(broadcast(q), Seq("label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos", VectorFns.cosine(
-        VectorFns.dot(col("q_qv"), col("qv")), col("q_nrm"), col("nrm")))
-    topKPerQuery(pairs, Seq(col("cos").desc, col("vec_id")))
+    val vecs = vectorFrame(spark, dir, label = true)
+    cosineTopK(vecs, queryHead(vecs, col("label").as("q_label")),
+        col("label") === col("q_label") && NotSelf)
       .select(col("query_id"), col("label"), col("vec_id").as("neighbor_id"),
         col("rnk"), col("cos").as("cosine"))
       .orderBy("query_id", "rnk")
@@ -1403,14 +1328,14 @@ object Similarity extends OpModule {
     // branch's scan canonically IDENTICAL to the scoring branch's —
     // whose self-pair filter infers IsNotNull(doc_id) — so ReuseExchange
     // serves both token passes from ONE parquet read + spread shuffle.
-    // Terms ride as md5-prefix int64 HASHES from the scan on (r14):
+    // Terms ride as md5-prefix int64 HASHES from the scan on:
     // the term value never reaches the output (scores are Σ(n − df)
     // over shared terms), only equality matters, and both engines hash
     // identically (hash-then-distinct on both sides), so df counts and
     // scores are unchanged while the two corpus token passes explode,
     // shuffle and aggregate 8-byte longs instead of term strings — the
     // d2 hashed-shingle-key rule applied to the lexical side.
-    // Collision bound (r15, recorded where the convention is applied):
+    // Collision bound (recorded where the convention is applied):
     // the key is the 60-bit md5 prefix (15 hex chars — the widest value
     // the oracle's signed-BIGINT '0x…' parse admits; 16 would overflow
     // DuckDB's cast), so by the birthday bound distinct-term collisions
@@ -1435,12 +1360,9 @@ object Similarity extends OpModule {
     // every other token at the scan stage, so the agg's exchange
     // carries query-term occurrences, not the corpus vocabulary). The
     // df's then ride the (tiny, query-bounded) qtd broadcast into a
-    // SINGLE scoring pass that aggregates pairs directly. The r11 shape
-    // instead CACHED the query-term occurrence rows (unbounded on
-    // stopword-bearing queries — a memory liability at 100 TB) and
-    // re-read them for a distinct + a second wide join; df-first
-    // measured ~2x faster on the lexical side at sf0.1 (0.81 s vs
-    // 1.83 s warm) and leaves nothing to evict. Net: two corpus token
+    // SINGLE scoring pass that aggregates pairs directly. Nothing
+    // query-term-bounded is cached: the query-term occurrence rows are
+    // unbounded on stopword-bearing queries. Net: two corpus token
     // passes (df, score) and zero corpus-sized state.
     val qset = qterms.select("term").distinct()
     val tdf = toks.join(broadcast(qset), Seq("term"), "leftsemi")
@@ -1455,18 +1377,9 @@ object Similarity extends OpModule {
     val lex = lexScore.withColumn("r_lex", row_number().over(wLex))
       .filter(col("r_lex") <= HybridPool).select("query_id", "doc_id", "r_lex")
 
-    val vecs = quantizedQvNrm(spark, dir)
-    val q = vecs.filter(col("vec_id") < NQ)
-      .select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
-        col("nrm").as("q_nrm"))
-    val wVec = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cos").desc, col("doc_id"))
-    val vec = vecs.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos", VectorFns.cosine(
-        VectorFns.dot(col("q_qv"), col("qv")), col("q_nrm"), col("nrm")))
-      .select(col("query_id"), col("vec_id").as("doc_id"), col("cos"))
-      .withColumn("r_vec", row_number().over(wVec))
-      .filter(col("r_vec") <= HybridPool).select("query_id", "doc_id", "r_vec")
+    val vecs = vectorFrame(spark, dir)
+    val vec = cosineTopK(vecs, queryHead(vecs), NotSelf, HybridPool)
+      .select(col("query_id"), col("vec_id").as("doc_id"), col("rnk").as("r_vec"))
 
     val fused = lex.join(vec, Seq("query_id", "doc_id"), "full_outer")
       .withColumn("rrf",

@@ -512,6 +512,28 @@ class PlanAuditSpec extends SparkSpecBase {
       "t35 must prune the text column from the documents scan")
   }
 
+  test("s1/s2/s6/s14: exact-cosine probes broadcast the query side and group-limit per query") {
+    // s1 has no equi-key (every candidate is scored), so its broadcast
+    // join is a nested loop; s2/s6/s14 join on the bucket, probe or
+    // label and must stay broadcast hash joins. The corpus side is never
+    // shuffled into a join, and every top-k window is the per-query one.
+    for ((name, join) <- Seq(
+        "s1_ann_brute_topk" -> "BroadcastNestedLoopJoin",
+        "s2_ann_lsh_topk" -> "BroadcastHashJoin",
+        "s6_ann_lsh_multiprobe" -> "BroadcastHashJoin",
+        "s14_ann_filtered_topk" -> "BroadcastHashJoin")) {
+      val p = plan(name)
+      assert(p.contains(join), s"$name: expected $join:\n" + p.take(1500))
+      assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
+        s"$name degraded to a shuffled or all-pairs join:\n" + p.take(1500))
+      val windows = p.linesIterator.filter(_.contains("row_number()")).toSeq
+      assert(windows.nonEmpty && windows.forall(_.contains("query_id")),
+        s"$name has a window not partitioned by query_id:\n" + windows.mkString("\n"))
+      assert(p.contains("WindowGroupLimit"),
+        s"$name: top-k lost its group limit:\n" + p.take(1500))
+    }
+  }
+
   test("s13: approximate-vs-exact comparison joins stay broadcast, never shuffled") {
     // Every join in the recall census carries a bounded side (the NQ-row
     // query head, the 50-row top-k sets) — a SortMergeJoin here means a

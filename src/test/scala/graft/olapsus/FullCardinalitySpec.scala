@@ -31,6 +31,28 @@ class FullCardinalitySpec extends SparkSpecBase {
     assert(codes(SeedGen.municipio).distinct.size == SeedGen.MunicipioRows)
     assert(codes(SeedGen.cbo).distinct.size == SeedGen.CboRows)
     assert(codes(SeedGen.cid).distinct.size == SeedGen.CidRows)
+    // SIM/SINASC rows carry the 6-digit prefix; each must name one id.
+    val prefixes = codes(SeedGen.municipio).map(_.toInt / 10).distinct.size
+    assert(prefixes == SeedGen.MunicipioRows)
+    assert(codes(SeedGen.municipio).forall { c =>
+      val id = c.toInt
+      SeedGen.ibgeCheckDigit(id / 10) == id % 10
+    })
+  }
+
+  test("a municipality CSV whose 6-digit prefixes repeat is refused; nothing is written") {
+    val d = Files.createTempDirectory("graft-dupprefix")
+    // 3548906 and 3548907 share the prefix 354890.
+    val csv = Fixtures.write(d, "municipio.csv",
+      Fixtures.municipio :+ "3548907,São Carlos Bis,0,Central do DRS III,,SP,São Paulo,Sudeste")
+    val w = new Warehouse(spark, d.resolve("wh").toString)
+    val e = intercept[IllegalArgumentException] {
+      Dims.seedAll(w, csv, Fixtures.write(d, "cbo.csv", Fixtures.cbo),
+        Fixtures.write(d, "cid.csv", Fixtures.cid))
+    }
+    assert(e.getMessage.contains("354890"), e.getMessage)
+    val written = Option(d.resolve("wh").toFile.listFiles).toSeq.flatten
+    assert(written.isEmpty, s"tables written before the refusal: ${written.mkString(", ")}")
   }
 
   test("dims built from full seeds: cardinality, unique surrogate keys, 27 UFs") {

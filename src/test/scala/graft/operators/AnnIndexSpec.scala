@@ -15,6 +15,20 @@ class AnnIndexSpec extends SparkSpecBase {
 
   private def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
 
+  /** Exact-cosine top-k within each corpus query's own cell — the
+    * inline form of the IVF probes. */
+  private def cellTopK(cells: DataFrame): DataFrame =
+    Similarity.cellRanked(Similarity.cosineTopK(cells,
+      Similarity.queryHead(cells, col("cid").as("q_cid")),
+      col("cid") === col("q_cid") && Similarity.NotSelf))
+
+  /** [[cellTopK]] restricted to candidates sharing the query's label. */
+  private def cellTopKFiltered(cells: DataFrame): DataFrame =
+    Similarity.cellRanked(Similarity.cosineTopK(cells,
+      Similarity.queryHead(cells, col("label").as("q_label"), col("cid").as("q_cid")),
+      col("cid") === col("q_cid") && col("label") === col("q_label") && Similarity.NotSelf),
+      col("label"))
+
   test("probes serve the inline s5/s7/s8 answers from the persisted tables") {
     val root = Files.createTempDirectory("ann-idx").toString
     AnnIndex.build(spark, sf(), root)
@@ -41,7 +55,7 @@ class AnnIndexSpec extends SparkSpecBase {
         math.max(Similarity.NQ, 2 * Similarity.PQ_K).toLong)
       val coarse = Similarity.ivfpqCoarse(head)
       val rcb = Similarity.ivfpqResidualCb(head, coarse)
-      val vecsAll = Similarity.quantizedQvNrm(spark, sf())
+      val vecsAll = Similarity.vectorFrame(spark, sf())
       val cands = Similarity.ivfpqAdcTopK("exp",
           Similarity.ivfpqEncode(vecsAll, coarse, rcb), head, coarse, rcb,
           pool = Similarity.RerankPool)
@@ -84,7 +98,7 @@ class AnnIndexSpec extends SparkSpecBase {
       .cache()
     try {
       val cent = Similarity.trainIvf(spark, sf(), labeled)
-      val exp = Similarity.ivfCosineTopKFiltered(
+      val exp = cellTopKFiltered(
         labeled.withColumn("cid", Similarity.nearestId(col("qv"), cent)))
       val got = rows(AnnIndex.probeIvfFiltered(spark, root))
       assert(got == rows(exp))
@@ -113,11 +127,11 @@ class AnnIndexSpec extends SparkSpecBase {
       all.filter(col("vec_id") >= split).select("vec_id", "label", "embedding"))
     // Expected = the SAME half-trained codebooks applied to the full
     // corpus in one shot, via Similarity's own stages.
-    val vecsA = Similarity.quantizedQvNrm(spark, dirA).cache()
-    val vecsAll = Similarity.quantizedQvNrm(spark, sf())
+    val vecsA = Similarity.vectorFrame(spark, dirA).cache()
+    val vecsAll = Similarity.vectorFrame(spark, sf())
     try {
       val cent = Similarity.trainIvf(spark, dirA, vecsA)
-      val expIvf = Similarity.ivfCosineTopK(
+      val expIvf = cellTopK(
         vecsAll.withColumn("cid", Similarity.nearestId(col("qv"), cent)))
       assert(rows(AnnIndex.probeIvf(spark, root)) == rows(expIvf))
 
@@ -125,7 +139,7 @@ class AnnIndexSpec extends SparkSpecBase {
       // index was built on) applied to the full corpus in one shot.
       val seeded = Similarity.collectHead(spark, dirA, Similarity.NC.toLong)
         .toSeq.sortBy(_._1)
-      val expSeeded = Similarity.ivfCosineTopK(
+      val expSeeded = cellTopK(
         vecsAll.withColumn("cid", Similarity.nearestId(col("qv"), seeded)))
       assert(rows(AnnIndex.probeIvfSeeded(spark, root)) == rows(expSeeded))
 
@@ -175,15 +189,15 @@ class AnnIndexSpec extends SparkSpecBase {
       .withColumn("nrm", graft.functions.VectorFns.norm2(col("qv")))
       .cache()
     try {
-      val vecsA = Similarity.quantizedQvNrm(spark, dirA)
+      val vecsA = Similarity.vectorFrame(spark, dirA)
       val cent = Similarity.trainIvf(spark, dirA, vecsA)
       val assigned = labeledAll.withColumn("cid",
         Similarity.nearestId(col("qv"), cent))
       val gotIvf = rows(AnnIndex.probeIvf(spark, root))
-      assert(gotIvf == rows(Similarity.ivfCosineTopK(assigned)))
+      assert(gotIvf == rows(cellTopK(assigned)))
       assert(gotIvf.exists(_.head == 9L), "query 9 absent from the probe")
       val gotFilt = rows(AnnIndex.probeIvfFiltered(spark, root))
-      assert(gotFilt == rows(Similarity.ivfCosineTopKFiltered(assigned)))
+      assert(gotFilt == rows(cellTopKFiltered(assigned)))
     } finally { labeledAll.unpersist(); () }
   }
 

@@ -16,6 +16,13 @@ class MaintenanceSpec extends SparkSpecBase {
 
   private def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
 
+  /** Exact-cosine top-k within each corpus query's own cell — the
+    * inline form of the IVF probes. */
+  private def cellTopK(cells: DataFrame): DataFrame =
+    Similarity.cellRanked(Similarity.cosineTopK(cells,
+      Similarity.queryHead(cells, col("cid").as("q_cid")),
+      col("cid") === col("q_cid") && Similarity.NotSelf))
+
   private def pairSet(root: String) = NearDupIndex.pairs(spark, root)
     .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
@@ -218,15 +225,15 @@ class MaintenanceSpec extends SparkSpecBase {
     // vector set. For the head-derived families (seeded/pq/ivfpq) this
     // IS a fresh build on the reduced corpus, since their codebooks
     // only read rows below 16.
-    val vecsAll = Similarity.quantizedQvNrm(spark, sf()).cache()
+    val vecsAll = Similarity.vectorFrame(spark, sf()).cache()
     try {
       val reduced = vecsAll.filter(!col("vec_id").isin(goneIds: _*))
       val cent = Similarity.trainIvf(spark, sf(), vecsAll)
-      val expIvf = rows(Similarity.ivfCosineTopK(
+      val expIvf = rows(cellTopK(
         reduced.withColumn("cid", Similarity.nearestId(col("qv"), cent))))
       val seeds = Similarity.collectHead(spark, sf(), Similarity.NC.toLong)
         .toSeq.sortBy(_._1)
-      val expSeeded = rows(Similarity.ivfCosineTopK(
+      val expSeeded = rows(cellTopK(
         reduced.withColumn("cid", Similarity.nearestId(col("qv"), seeds))))
       val headPq = Similarity.collectHead(spark, sf(),
         math.max(Similarity.NQ, Similarity.PQ_K).toLong) - 9L
