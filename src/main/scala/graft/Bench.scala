@@ -50,12 +50,6 @@ object Bench {
     // Locale.ROOT: a comma-decimal default locale would turn the gate
     // line into invalid JSON.
     def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
-    def str(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     def secs(body: => Unit): Double = {
       val t0 = System.nanoTime()
       body
@@ -100,13 +94,13 @@ object Bench {
     val total = results.collect { case (_, Success((_, warm))) => warm }.sum
     val queries = results.map {
       case (name, Success((cold, warm))) =>
-        s"""${str(name)}:{"warm_median":$warm,"cold":$cold,"error":null}"""
+        s"""${Json.str(name)}:{"warm_median":$warm,"cold":$cold,"error":null}"""
       case (name, Failure(e)) =>
-        s"""${str(name)}:{"warm_median":null,"cold":null,""" +
-          s""""error":{"class":${str(e.getClass.getName)},"message":${str(String.valueOf(e.getMessage).take(500))}}}"""
+        s"""${Json.str(name)}:{"warm_median":null,"cold":null,""" +
+          s""""error":{"class":${Json.str(e.getClass.getName)},"message":${Json.str(String.valueOf(e.getMessage).take(500))}}}"""
     }.mkString("{", ",", "}")
     val detail =
-      s"""{"metric":"total_warm","value":$total,"unit":"sec","runs":$runs,"sf":${str(sfDir)},""" +
+      s"""{"metric":"total_warm","value":$total,"unit":"sec","runs":$runs,"sf":${Json.str(sfDir)},""" +
         s""""cpus":${cpus.toInt},"calib_s":${fmt(calib)},"calib_io_s":${fmt(calibIo)},""" +
         s""""calib_sh_s":${fmt(calibSh)},"queries":$queries}"""
     val written = Try(Files.write(Paths.get("BENCH_DETAIL.json"), detail.getBytes(StandardCharsets.UTF_8)))

@@ -24,6 +24,10 @@ object Explain {
     val spark = GraftSession.builder("graft-explain", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>
+      // Each query plans against an empty cache, as Bench and perfbench
+      // run it: a frame an earlier query cached would otherwise show up
+      // as an InMemoryTableScan in place of the scan the query runs.
+      spark.sharedState.cacheManager.clearCache()
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")
     }

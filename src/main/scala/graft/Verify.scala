@@ -11,9 +11,9 @@ object Verify {
     // passes two args and gets the full dump.
     val only = args.drop(2).toSet
     val cpus = GraftSession.envCpus("4")
-    // The shared engine session (r15): Verify previously planned WITHOUT
-    // the bench's AQE/join-strategy config, so the correctness gate ran
-    // different physical plans than the graded bench. One builder now.
+    // The shared engine session: the correctness gate plans with the
+    // bench's AQE/join-strategy config, so it checks the physical plans
+    // the bench times.
     val spark = GraftSession.builder("graft-verify", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
@@ -35,20 +35,8 @@ object Verify {
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

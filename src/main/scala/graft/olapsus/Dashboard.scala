@@ -74,18 +74,10 @@ object Dashboard {
       val rows = df.toJSON.collect().mkString(",")
       s"""{"columns":[$cols],"rows":[$rows]}"""
     }
-    def jsonError(msg: String): String = {
-      // Exception messages routinely carry newlines (Spark embeds plans);
-      // a raw control char inside a JSON string literal is invalid JSON
-      // and turns the error body itself into a client-side parse error.
-      val escaped = String.valueOf(msg).flatMap {
-        case '\\' => "\\\\"
-        case '"'  => "\\\""
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      }
-      s"""{"error":"$escaped"}"""
-    }
+    // Exception messages routinely carry newlines (Spark embeds plans),
+    // which Json.str escapes: the error body stays valid JSON.
+    def jsonError(msg: String): String =
+      s"""{"error":${graft.Json.str(String.valueOf(msg))}}"""
 
     /** One JSON route: runs the query, 400s on missing/invalid params.
       * The JDK server matches contexts by string PREFIX (`/api/pivotfoo`

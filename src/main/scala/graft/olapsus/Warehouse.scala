@@ -355,15 +355,15 @@ object Warehouse {
     * and the re-filing — the physical half of index tombstone purging
     * ([[graft.operators.NearDupIndex.purgeTombstones]] /
     * [[graft.operators.AnnIndex.purgeTombstones]] pass an anti-join on
-    * the tombstone set). Same crash-safe tmp/bak rename protocol and
-    * marker-file carry as compaction; `transform` must be DETERMINISTIC
+    * the tombstone set). Published through [[graft.Persist.publish]]'s
+    * crash-safe tmp/bak swap, markers carried, as compaction; `transform` must be DETERMINISTIC
     * and idempotent on its own output (an anti-join is both), so a
     * crashed rewrite replays to the same state. */
   def rewritePath(spark: SparkSession, dirPath: String,
       targetFileBytes: Long,
       transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Int = {
     import org.apache.hadoop.fs.Path
-    val fs = new Path(dirPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.Persist.fs(spark, dirPath)
     val dir = new Path(dirPath)
     // Hive-style partition dirs, walked to ANY nesting depth
     // (year=/month=/...): compacting with only the top level would
@@ -389,60 +389,50 @@ object Warehouse {
     }
     val bytes = filesUnder(dir)
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    // Siblings of the live dir: same filesystem, same parent — renames
-    // stay atomic directory moves.
-    val tmp = new Path(dir.getParent, s".${dir.getName}_compact_tmp")
-    val bak = new Path(dir.getParent, s".${dir.getName}_compact_bak")
-    fs.delete(tmp, true)
-    fs.delete(bak, true)
-    val df = transform(spark.read.parquet(dir.toString))
-    // Branch on partCols ALONE (discovered relative to the dir being
-    // compacted): compacting a single partition that itself contains
-    // nested `col=value` dirs (e.g. `--partition a=g0` on an a=/b=
-    // table) must restore the DEEPER layout too, or the rewrite demotes
-    // the inner partition column to a data column and flattens its dirs
-    // while sibling partitions keep them — conflicting structures.
-    if (partCols.nonEmpty) {
-      // Cluster by (partition values, bounded hash salt): each partition
-      // dir compacts in parallel into ~ceil(nFiles / #partitions) files,
-      // so targetFileBytes is honored even when one partition holds most
-      // of the table (clustering by partition values ALONE would write
-      // each partition as a single arbitrarily-large file).
-      import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-      val nParts = math.max(1L, df.select(partCols.map(col): _*).distinct().count())
-      val filesPerPart = math.max(1, math.ceil(nFiles.toDouble / nParts).toInt)
-      val dataCols = df.columns.filterNot(partCols.contains)
-      val salt = pmod(hash(dataCols.map(col): _*), lit(filesPerPart))
-      df.repartition(math.max(nFiles, 1), partCols.map(col) :+ salt: _*)
-        .write.mode("overwrite").partitionBy(partCols: _*).parquet(tmp.toString)
-    } else {
-      // A partition dir read drops the dt column (it lives in the path);
-      // files rewritten into the same dir keep the partitioned layout.
-      df.repartition(nFiles).write.mode("overwrite").parquet(tmp.toString)
-    }
-    require(fs.exists(tmp), s"compact: tmp write produced nothing at $tmp")
-    // Carry index metadata markers (top-level `_`-prefixed FILES, e.g.
-    // `_family`) into tmp BEFORE the publish renames, so the new dir is
-    // born complete: carrying them after publish would open a
-    // reader-visible window in which the live dir has data but no
-    // `_family` stamp, making unleased readers (requireFamily, index
-    // probes) fail spuriously with the "rebuild it" error. COPY, not
-    // rename — the live dir keeps serving readers until the swap. The
-    // fresh write's own markers (e.g. `_SUCCESS`) win on name collision.
-    fs.listStatus(dir).filter(s => s.isFile && s.getPath.getName.startsWith("_"))
-      .foreach { s =>
-        val target = new Path(tmp, s.getPath.getName)
-        if (!fs.exists(target))
-          org.apache.hadoop.fs.FileUtil.copy(fs, s.getPath, fs, target,
-            false, spark.sparkContext.hadoopConfiguration)
+    graft.Persist.publish(spark, dirPath, "compact") { tmp =>
+      val df = transform(spark.read.parquet(dirPath))
+      // Branch on partCols ALONE (discovered relative to the dir being
+      // compacted): compacting a single partition that itself contains
+      // nested `col=value` dirs (e.g. `--partition a=g0` on an a=/b=
+      // table) must restore the DEEPER layout too, or the rewrite demotes
+      // the inner partition column to a data column and flattens its dirs
+      // while sibling partitions keep them — conflicting structures.
+      if (partCols.nonEmpty) {
+        // Cluster by (partition values, bounded hash salt): each partition
+        // dir compacts in parallel into ~ceil(nFiles / #partitions) files,
+        // so targetFileBytes is honored even when one partition holds most
+        // of the table (clustering by partition values ALONE would write
+        // each partition as a single arbitrarily-large file).
+        import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+        val nParts = math.max(1L, df.select(partCols.map(col): _*).distinct().count())
+        val filesPerPart = math.max(1, math.ceil(nFiles.toDouble / nParts).toInt)
+        val dataCols = df.columns.filterNot(partCols.contains)
+        val salt = pmod(hash(dataCols.map(col): _*), lit(filesPerPart))
+        df.repartition(math.max(nFiles, 1), partCols.map(col) :+ salt: _*)
+          .write.mode("overwrite").partitionBy(partCols: _*).parquet(tmp)
+      } else {
+        // A partition dir read drops the dt column (it lives in the path);
+        // files rewritten into the same dir keep the partitioned layout.
+        df.repartition(nFiles).write.mode("overwrite").parquet(tmp)
       }
-    if (!fs.rename(dir, bak))
-      throw new java.io.IOException(s"compact: could not move $dir aside")
-    if (!fs.rename(tmp, dir)) {
-      fs.rename(bak, dir) // roll back: old data intact
-      throw new java.io.IOException(s"compact: could not publish $tmp; rolled back")
+      val tp = new Path(tmp)
+      require(fs.exists(tp), s"compact: tmp write produced nothing at $tmp")
+      // Carry index metadata markers (top-level `_`-prefixed FILES, e.g.
+      // `_family`) into tmp BEFORE the publish renames, so the new dir is
+      // born complete: carrying them after publish would open a
+      // reader-visible window in which the live dir has data but no
+      // `_family` stamp, making unleased readers (requireFamily, index
+      // probes) fail spuriously with the "rebuild it" error. COPY, not
+      // rename — the live dir keeps serving readers until the swap. The
+      // fresh write's own markers (e.g. `_SUCCESS`) win on name collision.
+      fs.listStatus(dir).filter(s => s.isFile && s.getPath.getName.startsWith("_"))
+        .foreach { s =>
+          val target = new Path(tp, s.getPath.getName)
+          if (!fs.exists(target))
+            org.apache.hadoop.fs.FileUtil.copy(fs, s.getPath, fs, target,
+              false, spark.sparkContext.hadoopConfiguration)
+        }
     }
-    fs.delete(bak, true)
     nFiles
   }
 }

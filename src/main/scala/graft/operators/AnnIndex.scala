@@ -1,8 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFns
-import graft.{Op, OpModule}
-import org.apache.hadoop.fs.Path
+import graft.{Op, OpModule, Persist}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -113,15 +112,9 @@ object AnnIndex extends OpModule {
     * stays a few hundred MB of parquet, far below executor memory. */
   val DefaultMaxCellRows: Long = 4000000L
 
-  private def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def exists(spark: SparkSession, p: String): Boolean =
-    fs(spark, p).exists(new Path(p))
-
-  /** Schema memo for the index's own parquet tables (r14 optimization):
-    * a schemaless `spark.read.parquet` pays a footer-inference DRIVER
-    * JOB per call, and every probe rep issues 2-4 such reads. Index
+  /** Schema memo for the index's own parquet tables: a schemaless
+    * `spark.read.parquet` pays a footer-inference DRIVER JOB per call,
+    * and every probe rep issues 2-4 such reads. Index
     * table schemas are structurally fixed per layout version (appends,
     * tombstones, purges and rewrites preserve columns; a rebuild
     * publishes a NEW versioned root, i.e. a new key), so the first
@@ -152,10 +145,9 @@ object AnnIndex extends OpModule {
   /** Read ONLY the named partition subdirectories of a partitioned codes
     * table. `spark.read.parquet(tableRoot)` lists the WHOLE table to
     * build its file index — linear in the file count even when partition
-    * filters later prune the actual read, and the (cid, label) layout
-    * multiplies that file count (the v7 lesson: r12's ScaleCheck
-    * measured the s9/s15 probes ~linear at 8× on listing cost alone).
-    * Passing the pruned directories as explicit roots bounds the listing
+    * filters later prune the actual read, so a probe over a
+    * whole-table read costs time linear in the table's file count, not
+    * in the cells it reads. Passing the pruned directories as explicit roots bounds the listing
     * to the query cells' subtrees; `basePath` keeps the partition
     * columns (e.g. cid, lb) in the schema exactly as a whole-table read
     * would. Existence-checked per directory (bounded: ≤ the probe's
@@ -163,8 +155,7 @@ object AnnIndex extends OpModule {
     * never written must not fail the read. */
   private def readPruned(spark: SparkSession, base: String,
       subdirs: Seq[String]): DataFrame = {
-    val f = fs(spark, base)
-    val paths = subdirs.map(d => s"$base/$d").filter(p => f.exists(new Path(p)))
+    val paths = subdirs.map(d => s"$base/$d").filter(Persist.exists(spark, _))
     require(paths.nonEmpty,
       s"none of ${subdirs.size} pruned partition dirs exist under $base — " +
         "index missing or geometry drift (probe prune set vs stored cells)")
@@ -190,41 +181,18 @@ object AnnIndex extends OpModule {
     * property) and guards a caller passing wider paths. */
   private def readCells(spark: SparkSession, root: String, table: String,
       cells: Seq[Long], also: Column*): DataFrame =
-    live(spark, root,
+    tombs(root).live(spark,
       readPruned(spark, s"$root/$table", cells.map(c => s"cid=$c"))
         .withColumn("cid", col("cid").cast("long")))
       .filter((col("cid").isin(cells: _*) +: also).reduce(_ && _))
 
   /** Deterministic per-corpus default root (test/bench convenience;
-    * production callers pass their own warehouse path). The md5 suffix
-    * disambiguates dirs the character-squashing would alias
-    * (`/a/b` vs `/a_b`). */
-  def defaultRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"${System.getProperty("java.io.tmpdir")}/graft_ann_index_v${BuildVersion}_${key}_$h"
-  }
+    * production callers pass their own warehouse path). */
+  def defaultRoot(dir: String): String =
+    Persist.corpusRoot(s"ann_index_v$BuildVersion", dir)
 
-  /** Cheap corpus identity for the build marker: the embeddings table's
-    * file-level metadata (per-file path, length, mtime), hashed. A
-    * FileSystem listing — no Spark job — yet it changes whenever the
-    * corpus files are rewritten, so a regenerated corpus with the SAME
-    * row count still invalidates the index (row count alone would
-    * silently serve stale geometry). */
-  private[operators] def corpusFingerprint(spark: SparkSession, dir: String,
-      table: String = "embeddings.parquet"): String = {
-    val p = new Path(s"$dir/$table")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = (if (f.getFileStatus(p).isDirectory) f.listStatus(p).toSeq
-                 else Seq(f.getFileStatus(p)))
-      .filterNot(_.getPath.getName.startsWith("_"))
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted
-    val h = java.security.MessageDigest.getInstance("MD5")
-    parts.foreach(s => h.update(s.getBytes("UTF-8")))
-    h.digest().map("%02x".format(_)).mkString
-  }
+  /** The corpus the index is built from, fingerprinted in `_built`. */
+  private val Corpus = "embeddings.parquet"
 
   // ---- codebook (de)serialization: bounded ≤ 32-row tables ------------
 
@@ -339,8 +307,7 @@ object AnnIndex extends OpModule {
       maxCellRows: Long = DefaultMaxCellRows): Unit =
     // Single-writer: concurrent build/append against the same root would
     // interleave family writes and commit a marker over mixed geometry.
-    graft.WriterLease.withLease(spark, root,
-      graft.WriterLease.processOwner("ann-build")) {
+    Persist.leased(spark, root, "ann-build") {
       buildLeased(spark, dir, root, nc, kc, pc, maxCellRows)
     }
 
@@ -366,35 +333,19 @@ object AnnIndex extends OpModule {
       nc: Int = Similarity.NC, kc: Int = Similarity.KC,
       pc: Int = Similarity.PQ_K,
       maxCellRows: Long = DefaultMaxCellRows): Unit = {
-    val rp = new Path(root)
-    val f = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(rp.getParent, s".${rp.getName}_rebuild_tmp")
-    val bak = new Path(rp.getParent, s".${rp.getName}_rebuild_bak")
     // Heal the between-renames crash window: root gone, bak holding the
     // old generation — restore it before anything else (readers first).
-    if (!f.exists(rp) && f.exists(bak)) {
-      if (!f.rename(bak, rp))
-        throw new java.io.IOException(s"rebuild: could not restore $bak to $rp")
-    }
+    Persist.heal(spark, root, "rebuild")
     // Rebuilding a root that was never built is just a build — no old
     // generation to keep serving, nothing to swap (and build takes the
     // root lease itself).
-    if (!f.exists(rp)) { build(spark, dir, root, nc, kc, pc, maxCellRows); return }
-    graft.WriterLease.withLease(spark, root,
-      graft.WriterLease.processOwner("ann-rebuild")) {
-      f.delete(tmp, true)
-      f.delete(bak, true)
+    if (!Persist.exists(spark, root)) build(spark, dir, root, nc, kc, pc, maxCellRows)
+    else Persist.leased(spark, root, "ann-rebuild") {
       // A full fresh build into the sibling (its own lease, its own
       // commit marker — tmp is a complete, committed index root before
       // the swap is attempted).
-      build(spark, dir, tmp.toString, nc, kc, pc, maxCellRows)
-      if (!f.rename(rp, bak))
-        throw new java.io.IOException(s"rebuild: could not move $rp aside")
-      if (!f.rename(tmp, rp)) {
-        f.rename(bak, rp) // roll back: old generation keeps serving
-        throw new java.io.IOException(s"rebuild: could not publish $tmp; rolled back")
-      }
-      f.delete(bak, true)
+      Persist.publish(spark, root, "rebuild")(tmp =>
+        build(spark, dir, tmp, nc, kc, pc, maxCellRows))
     }
   }
 
@@ -403,14 +354,13 @@ object AnnIndex extends OpModule {
     // Drop memoized schemas under this root: the build overwrites the
     // tree wholesale (the one writer that could change a table's shape).
     invalidateSchemas(root)
-    val f = fs(spark, root)
     // Clear the index CONTENTS, not the root: the root also holds the
     // writer lease just acquired.
     // tombstones cleared too: a stale tombstone surviving a re-build
     // would silently mask the fresh rows that share its vec_id.
     Seq("ivf", "ivf_seeded", "pq", "ivfpq", "tombstones", "_has_removes",
       "_built")
-      .foreach(t => f.delete(new Path(s"$root/$t"), true))
+      .foreach(t => Persist.delete(spark, s"$root/$t"))
     // The label rides the build scan so the inverted-list tables can
     // serve filtered search (s15) without touching the raw corpus; the
     // PQ family writes below project it away.
@@ -482,15 +432,14 @@ object AnnIndex extends OpModule {
       // the corpus, so a root left behind by an older build or a
       // regenerated corpus (even at identical row count) is rebuilt, not
       // silently served.
-      val out = f.create(new Path(s"$root/_built"), true)
-      out.write(markerContent(nc, kc, pc, corpusFingerprint(spark, dir)).getBytes("UTF-8"))
-      out.close()
-      validated.add(s"$dir|$root|$nc|$kc|$pc")
+      Persist.writeMarker(spark, s"$root/_built",
+        Persist.corpusMarker(spark, dir, Corpus, stamp(nc, kc, pc)))
     } finally vecs.unpersist()
   }
 
-  private def markerContent(nc: Int, kc: Int, pc: Int, fingerprint: String): String =
-    s"v$BuildVersion nc=$nc kc=$kc pc=$pc f=$fingerprint\n"
+  /** The `_built` marker's content ahead of the corpus fingerprint. */
+  private def stamp(nc: Int, kc: Int, pc: Int): String =
+    s"v$BuildVersion nc=$nc kc=$kc pc=$pc "
 
   /** The cell geometry a root was built with, read back from its commit
     * marker: (nc seeded cells, kc trained cells, pc IVF+PQ coarse
@@ -498,45 +447,20 @@ object AnnIndex extends OpModule {
     * The persisted centroid tables carry the same cardinalities — the
     * marker is the cheap, no-Spark-job authority (and the spec pins the
     * two against each other). */
-  def buildParams(spark: SparkSession, root: String): Option[(Int, Int, Int)] = {
-    val marker = s"$root/_built"
-    if (!exists(spark, marker)) None
-    else {
-      val in = fs(spark, marker).open(new Path(marker))
-      val content = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
-      """^v(\d+) nc=(\d+) kc=(\d+) pc=(\d+) f=.*$""".r.findFirstMatchIn(content)
-        .filter(_.group(1).toInt == BuildVersion)
-        .map(m => (m.group(2).toInt, m.group(3).toInt, m.group(4).toInt))
-    }
-  }
-
-  /** Roots this JVM has already built or validated — revalidating the
-    * marker (a FileSystem read + corpus listing) on every probe call
-    * would put constant overhead inside the timed probe path for no
-    * information (single-writer contract: nothing else rewrites the
-    * corpus or the index under a live process). */
-  private val validated = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Test hook: simulate a fresh process (the cache is JVM-local). */
-  private[operators] def resetValidationCacheForTest(): Unit = validated.clear()
+  def buildParams(spark: SparkSession, root: String): Option[(Int, Int, Int)] =
+    Persist.readMarker(spark, s"$root/_built")
+      .flatMap(m => """^v(\d+) nc=(\d+) kc=(\d+) pc=(\d+) f=.*$""".r.findFirstMatchIn(m.trim))
+      .filter(_.group(1).toInt == BuildVersion)
+      .map(m => (m.group(2).toInt, m.group(3).toInt, m.group(4).toInt))
 
   /** Build iff the commit marker is absent or doesn't match this build
     * version + the requested cell geometry + the corpus's current file
-    * fingerprint. Metadata-only: no Spark job on the validation path. */
+    * fingerprint ([[graft.Persist.buildOnce]]). */
   def ensureBuilt(spark: SparkSession, dir: String, root: String,
       nc: Int = Similarity.NC, kc: Int = Similarity.KC,
-      pc: Int = Similarity.PQ_K): Unit = {
-    if (validated.contains(s"$dir|$root|$nc|$kc|$pc")) return
-    val marker = s"$root/_built"
-    val ok = exists(spark, marker) && {
-      val in = fs(spark, marker).open(new Path(marker))
-      val content = scala.io.Source.fromInputStream(in).mkString
-      in.close()
-      content == markerContent(nc, kc, pc, corpusFingerprint(spark, dir))
-    }
-    if (!ok) build(spark, dir, root, nc, kc, pc)
-    validated.add(s"$dir|$root|$nc|$kc|$pc")
-  }
+      pc: Int = Similarity.PQ_K): Unit =
+    Persist.buildOnce(spark, dir, Corpus, s"$root/_built", stamp(nc, kc, pc))(_ =>
+      build(spark, dir, root, nc, kc, pc))
 
   // ---- append: extend the corpus under frozen codebooks ---------------
 
@@ -547,8 +471,7 @@ object AnnIndex extends OpModule {
     * that family while skipping the ones that committed, so replaying a
     * batch after any partial failure converges with no duplicates. */
   def append(spark: SparkSession, root: String, newVecs: DataFrame): Unit =
-    graft.WriterLease.withLease(spark, root,
-      graft.WriterLease.processOwner("ann-append")) {
+    Persist.leased(spark, root, "ann-append") {
       appendLeased(spark, root, newVecs)
     }
 
@@ -557,27 +480,13 @@ object AnnIndex extends OpModule {
     // older layout would commit a partial (ivf-only) append under
     // incompatible geometry before failing on the families that root
     // lacks — refuse up front instead.
-    val marker = s"$root/_built"
-    val ok = exists(spark, marker) && {
-      val in = fs(spark, marker).open(new Path(marker))
-      val content = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-      content.startsWith(s"v$BuildVersion ")
-    }
-    if (!ok) throw new IllegalStateException(
-      s"index at $root has no v$BuildVersion commit marker (unbuilt, crashed " +
-        "build, or an older build layout) — run build() before append().")
-    // Tombstoned ids must not be re-appended before a purge: readers
-    // anti-join tombstones by vec_id, so the new row would be masked by
-    // its predecessor's tombstone. Fail loudly — remove-then-add is an
-    // update and needs purgeTombstones() between the two.
-    tombstoneSet(spark, root).foreach { t =>
-      val n = newVecs.select(col("vec_id"))
-        .join(broadcast(t), Seq("vec_id"), "semi").count()
-      if (n > 0) throw new IllegalStateException(
-        s"ann append: $n batch vector(s) are tombstoned at $root — run " +
-          "purgeTombstones() before re-adding removed ids (re-added rows " +
-          "would be masked by their own tombstones).")
-    }
+    if (!Persist.readMarker(spark, s"$root/_built").exists(_.startsWith(s"v$BuildVersion ")))
+      throw new IllegalStateException(
+        s"index at $root has no v$BuildVersion commit marker (unbuilt, crashed " +
+          "build, or an older build layout) — run build() before append().")
+    // Tombstoned ids must not be re-appended before a purge.
+    val ts = tombs(root)
+    ts.refuse(ts.read(spark), newVecs, "ann append")
     // label is part of the v5 inverted-list layout — an append without
     // it would write null-labeled rows that silently vanish from every
     // filtered probe, so the batch must carry (vec_id, label, embedding).
@@ -641,7 +550,9 @@ object AnnIndex extends OpModule {
 
   // ---- remove: logical deletion, physically applied by purge ----------
 
-  private def tombPath(root: String) = s"$root/tombstones"
+  /** The index's delete-vector, keyed by vec_id ([[graft.Persist
+    * .Tombstones]]): every probe anti-joins it. */
+  private def tombs(root: String) = Persist.Tombstones(root, "vec_id")
 
   /** Permanent "this index has seen deletions" flag — written by the
     * FIRST [[remove]] (before its tombstone append, so a crashed remove
@@ -652,49 +563,13 @@ object AnnIndex extends OpModule {
     * FS stat while the index is deletion-free. */
   private def removesMarker(root: String) = s"$root/_has_removes"
 
-  private def writeRemovesMarker(spark: SparkSession, root: String): Unit = {
-    val out = fs(spark, root).create(new Path(removesMarker(root)), true)
-    try out.write("v1\n".getBytes("UTF-8")) finally out.close()
-  }
-
-  private def tableHasData(spark: SparkSession, p: String): Boolean = {
-    val hp = new Path(p)
-    val f = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.exists(hp) && f.listStatus(hp).exists { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-  }
-
-  /** The live tombstone set (vec_id), or None when nothing is removed —
-    * the common fast path is one existence check per probe. */
-  private def tombstoneSet(spark: SparkSession, root: String): Option[DataFrame] =
-    if (tableHasData(spark, tombPath(root)))
-      Some(readTable(spark, tombPath(root)).select("vec_id").distinct())
-    else None
-
-  /** Drop tombstoned rows from any vec_id-keyed index read. Broadcast:
-    * the tombstone set is bounded by what was removed since the last
-    * purge, never by the corpus. */
-  private def live(spark: SparkSession, root: String, df: DataFrame): DataFrame =
-    tombstoneSet(spark, root)
-      // The trailing select undoes the USING join's column reorder
-      // (join keys move to the front), keeping positional consumers
-      // of the codes tables stable.
-      .map(t => df.join(broadcast(t), Seq("vec_id"), "anti")
-        .select(df.columns.map(col): _*))
-      .getOrElse(df)
-
   /** Tombstoned ids below `bound` — the driver-side filter for the
     * bounded query heads (a removed vector must stop ASKING queries,
     * not just stop answering them). Bounded collect: ≤ bound rows. */
   private def tombstonedBelow(spark: SparkSession, root: String,
       bound: Long): Set[Long] =
-    tombstoneSet(spark, root) match {
-      case None => Set.empty
-      case Some(t) =>
-        t.filter(col("vec_id") < bound).collect().map(_.getLong(0)).toSet
-    }
+    tombs(root).read(spark).fold(Set.empty[Long])(
+      _.filter(col("vec_id") < bound).collect().map(_.getLong(0)).toSet)
 
   /** A collected query head restricted to what the INDEX still asks:
     * tombstoned members drop out, and the query range (vec_id < NQ) is
@@ -709,7 +584,7 @@ object AnnIndex extends OpModule {
     // Deletion-free indexes (no `_has_removes` marker — one FS stat,
     // no Spark job) skip both reads: the pq-family probes are
     // job-floor-bound, so the common path must not grow a job.
-    if (head.isEmpty || !exists(spark, removesMarker(root))) return head
+    if (head.isEmpty || !Persist.exists(spark, removesMarker(root))) return head
     val afterTomb = head -- tombstonedBelow(spark, root, head.keysIterator.max + 1)
     val asking = readTable(spark, s"$root/ivf/qhead")
       .select("vec_id").filter(col("vec_id") < Similarity.NQ)
@@ -727,26 +602,13 @@ object AnnIndex extends OpModule {
     * skipped, so crashed removes replay to the same state. Returns the
     * count of newly tombstoned ids. */
   def remove(spark: SparkSession, root: String, ids: DataFrame): Long =
-    graft.WriterLease.withLease(spark, root,
-      graft.WriterLease.processOwner("ann-remove")) {
+    Persist.leased(spark, root, "ann-remove") {
       require(buildParams(spark, root).isDefined,
         s"index at $root has no v$BuildVersion commit marker — nothing to remove from")
-      val t = ids.select(col(ids.columns.head).cast("long").as("vec_id")).distinct()
-        // Bounded tombstone set: only ids the index holds. pq/codes is
-        // the flat, always-written family — one column-pruned scan.
-        .join(readTable(spark, s"$root/pq/codes").select("vec_id"),
-          Seq("vec_id"), "semi")
-      val fresh = tombstoneSet(spark, root)
-        .map(existing => t.join(broadcast(existing), Seq("vec_id"), "anti"))
-        .getOrElse(t)
-        .cache()
-      val n = fresh.count()
-      if (n > 0) {
-        writeRemovesMarker(spark, root) // BEFORE the append: see its doc
-        fresh.write.mode("append").parquet(tombPath(root))
-      }
-      fresh.unpersist()
-      n
+      // Bounded tombstone set: only ids the index holds. pq/codes is the
+      // flat, always-written family — one column-pruned scan.
+      tombs(root).remove(spark, ids, readTable(spark, s"$root/pq/codes"),
+        () => Persist.writeMarker(spark, removesMarker(root), "v1\n"))
     }
 
   /** Physically apply the tombstone set. Partitioned families rewrite
@@ -759,62 +621,38 @@ object AnnIndex extends OpModule {
     * and the tiny qhead rewrite wholesale (pq has no partitions — a
     * purge there is compaction-class, which is why deletion splits
     * into the cheap logical remove and this maintenance pass). The
-    * tombstone table is deleted LAST — the commit point: a crash
-    * anywhere earlier replays as no-op anti-join rewrites plus the
-    * re-run delete. Returns rows dropped per family. */
+    * tombstones are deleted last ([[graft.Persist.Tombstones.purge]]).
+    * Returns rows dropped per family. */
   def purgeTombstones(spark: SparkSession, root: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Map[String, Long] =
-    graft.WriterLease.withLease(spark, root,
-      graft.WriterLease.processOwner("ann-purge")) {
-      tombstoneSet(spark, root) match {
-        case None => Map.empty
-        case Some(t0) =>
-          val t = t0.cache()
-          t.count() // pin the set before the rewrites mutate anything
-          // Re-select after the USING join: the join key moves to the
-          // front of the output, and a purged file written with
-          // reordered columns would diverge physically from its
-          // untouched siblings (readers merge by name, but one table
-          // should not carry two column layouts).
-          def minus(df: DataFrame): DataFrame =
-            df.join(broadcast(t), Seq("vec_id"), "anti")
-              .select(df.columns.map(col): _*)
-          val f = fs(spark, root)
-          // Partitioned families: rewrite only the touched cid subtrees.
-          val partitioned = Seq("ivf/codes", "ivf_seeded/codes", "ivfpq/codes")
-            .filter(fam => exists(spark, s"$root/$fam"))
-            .map { fam =>
-              val table = s"$root/$fam"
-              val touched = spark.read.parquet(table).select("vec_id", "cid")
-                .join(broadcast(t), Seq("vec_id"), "semi")
-                .groupBy("cid").count().collect()
-                .map(r => r.getAs[Number]("cid").longValue() -> r.getLong(1))
-              touched.foreach { case (cid, _) =>
-                val dir = s"$table/cid=$cid"
-                if (minus(spark.read.option("basePath", table).parquet(dir))
-                    .isEmpty)
-                  f.delete(new Path(dir), true)
-                else
-                  graft.olapsus.Warehouse.rewritePath(spark, dir,
-                    targetFileBytes, minus)
-              }
-              fam -> touched.map(_._2).sum
+    Persist.leased(spark, root, "ann-purge") {
+      val ts = tombs(root)
+      ts.purge(spark) { t =>
+        // Partitioned families: rewrite only the touched cid subtrees.
+        val partitioned = Seq("ivf/codes", "ivf_seeded/codes", "ivfpq/codes")
+          .filter(fam => Persist.exists(spark, s"$root/$fam"))
+          .map { fam =>
+            val table = s"$root/$fam"
+            val touched = spark.read.parquet(table).select("vec_id", "cid")
+              .join(broadcast(t), Seq("vec_id"), "semi")
+              .groupBy("cid").count().collect()
+              .map(r => r.getAs[Number]("cid").longValue() -> r.getLong(1))
+            touched.foreach { case (cid, _) =>
+              val dir = s"$table/cid=$cid"
+              if (ts.minus(spark.read.option("basePath", table).parquet(dir), t).isEmpty)
+                Persist.delete(spark, dir)
+              else
+                graft.olapsus.Warehouse.rewritePath(spark, dir, targetFileBytes,
+                  ts.minus(_, t))
             }
-          // Flat families: full rewrite (qhead is bounded-tiny; pq/codes
-          // is the one unpartitioned full-width table).
-          val flat = Seq("pq/codes", "ivf/qhead")
-            .filter(fam => exists(spark, s"$root/$fam"))
-            .map { fam =>
-              val p = s"$root/$fam"
-              val hit = spark.read.parquet(p)
-                .join(broadcast(t), Seq("vec_id"), "semi").count()
-              if (hit > 0)
-                graft.olapsus.Warehouse.rewritePath(spark, p, targetFileBytes, minus)
-              fam -> hit
-            }
-          t.unpersist()
-          f.delete(new Path(tombPath(root)), true)
-          (partitioned ++ flat).toMap
+            fam -> touched.map(_._2).sum
+          }
+        // Flat families: full rewrite (qhead is bounded-tiny; pq/codes
+        // is the one unpartitioned full-width table).
+        val flat = Seq("pq/codes", "ivf/qhead")
+          .filter(fam => Persist.hasData(spark, s"$root/$fam"))
+          .map(fam => fam -> ts.rewriteFlat(spark, t, s"$root/$fam", targetFileBytes))
+        (partitioned ++ flat).toMap
       }
     }
 
@@ -828,14 +666,8 @@ object AnnIndex extends OpModule {
     * unchanged by construction — compaction only re-files rows. */
   def compact(spark: SparkSession, root: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Map[String, Int] =
-    graft.WriterLease.withLease(spark, root,
-      graft.WriterLease.processOwner("ann-compact")) {
-      Seq("ivf/codes", "ivf_seeded/codes", "pq/codes", "ivfpq/codes")
-        .filter(t => exists(spark, s"$root/$t"))
-        .map(t => t -> graft.olapsus.Warehouse.compactPath(
-          spark, s"$root/$t", targetFileBytes))
-        .toMap
-    }
+    Persist.compact(spark, root, "ann-compact",
+      Seq("ivf/codes", "ivf_seeded/codes", "pq/codes", "ivfpq/codes"), targetFileBytes)
 
   // ---- probes: read ONLY the persisted tables -------------------------
 
@@ -850,9 +682,9 @@ object AnnIndex extends OpModule {
     // Prune set from the qhead table (ONE small file): filtering codes
     // itself for vec_id < NQ would open every file footer — linear in
     // the file count, which the (cid, label) layout multiplies. Read
-    // through live(): a removed query must stop asking, so its cell
-    // leaves the prune set unless another live query shares it.
-    val qcells = live(spark, root, readTable(spark, s"$root/ivf/qhead"))
+    // without the tombstoned rows: a removed query must stop asking, so
+    // its cell leaves the prune set unless another live query shares it.
+    val qcells = tombs(root).live(spark, readTable(spark, s"$root/ivf/qhead"))
       .select("cid").distinct().collect().map(_.getLong(0)).toSeq.sorted
     // Read the query cells' DIRECTORIES only (v8): a whole-table read
     // lists every (cid, label) file before pruning anything.
@@ -885,7 +717,7 @@ object AnnIndex extends OpModule {
     // Bounded collect from qhead (ONE small file): ≤ NQ query rows
     // define the cell, label and label-bucket prune unions (lb is
     // stored in qhead so no driver-side mirror of the bucket hash).
-    val q = live(spark, root, readTable(spark, s"$root/ivf/qhead"))
+    val q = tombs(root).live(spark, readTable(spark, s"$root/ivf/qhead"))
       .select("cid", "label", "lb").distinct().collect()
     val qcells = q.map(_.getLong(0)).distinct.sorted.toSeq
     val qlabels = q.map(_.get(1)).distinct.toSeq
@@ -916,7 +748,7 @@ object AnnIndex extends OpModule {
     // filtered codes for vec_id < NQ, which opened every file footer —
     // the exact listing sweep qhead exists to avoid.
     val seeded = readCentroids(spark, s"$root/ivf_seeded/centroids")
-    val qcells = live(spark, root, readTable(spark, s"$root/ivf/qhead"))
+    val qcells = tombs(root).live(spark, readTable(spark, s"$root/ivf/qhead"))
       .select("qv").collect()
       .map(r => Similarity.nearestIdL(r.getSeq[Long](0).toArray, seeded))
       .distinct.sorted.toSeq
@@ -935,7 +767,7 @@ object AnnIndex extends OpModule {
     val head = liveHead(spark, root, Similarity.collectHead(spark, dir,
       math.max(Similarity.NQ, Similarity.PQ_K).toLong))
     Similarity.pqAdcTopK("s10",
-      live(spark, root, readTable(spark, s"$root/pq/codes")), head, cb)
+      tombs(root).live(spark, readTable(spark, s"$root/pq/codes")), head, cb)
   }
 
   /** IVF+PQ probe: cell-gated ADC over `ivfpq/codes`; the query cells
@@ -1008,7 +840,7 @@ object AnnIndex extends OpModule {
     // job itself is the s10 probe's joinless ADC scan, re-run per
     // invocation like every stage of every op.
     val cands = Similarity.pqAdcTopK("s18",
-        live(spark, root, readTable(spark, s"$root/pq/codes")), head, cb,
+        tombs(root).live(spark, readTable(spark, s"$root/pq/codes")), head, cb,
         Similarity.RerankPool, passthrough = Seq("fid"))
       .select(col("query_id"), col("neighbor_id"), col("rnk").as("adc_rnk"),
         col("fid"))
@@ -1127,7 +959,7 @@ object AnnIndex extends OpModule {
     // tail are BOTH the inline d18's own implementations
     // (Dedup.semCells/semDominance) — the probe ≡ inline guarantee is
     // structural, not a parallel re-implementation.
-    val codes = live(spark, root, readTable(spark, s"$root/ivf/codes"))
+    val codes = tombs(root).live(spark, readTable(spark, s"$root/ivf/codes"))
       .withColumn("cid", col("cid").cast("long"))
     Dedup.semDominance(Dedup.semCells(codes, cent))
   }
@@ -1351,7 +1183,7 @@ object AnnIndex extends OpModule {
     * d22's oracle: same trainer, same corpus, same kc. */
   def probeSemDedupMulti(spark: SparkSession, root: String): DataFrame = {
     val cent = readCentroids(spark, s"$root/ivf/centroids")
-    val codes = live(spark, root, readTable(spark, s"$root/ivf/codes"))
+    val codes = tombs(root).live(spark, readTable(spark, s"$root/ivf/codes"))
       .select("vec_id", "qv", "nrm")
     Dedup.semDominanceMulti(Dedup.semCellsMulti(codes, cent))
   }
@@ -1370,7 +1202,7 @@ object AnnIndex extends OpModule {
     * set-vs-table rule). */
   def probeSemDroppedIds(spark: SparkSession, root: String): DataFrame = {
     val cent = readCentroids(spark, s"$root/ivf/centroids")
-    val codes = live(spark, root, readTable(spark, s"$root/ivf/codes"))
+    val codes = tombs(root).live(spark, readTable(spark, s"$root/ivf/codes"))
       .withColumn("cid", col("cid").cast("long"))
     Dedup.semDominators(Dedup.semCells(codes, cent)).select("vec_id")
   }

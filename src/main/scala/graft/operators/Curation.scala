@@ -204,16 +204,20 @@ object Curation extends OpModule {
     * incremental re-curation) anti-join against the stored table via
     * [[curateAgainstPairs]] instead of re-deriving it per query. */
   def persistNearDupPairs(spark: org.apache.spark.sql.SparkSession, dir: String,
-      tablePath: String): Long = {
+      tablePath: String): Long =
     // Unsorted pair SET: parquet has no meaningful row order and every
     // reader treats the table as a set — d2's ORDER BY would be a
     // table-wide sort paid for nothing.
-    Dedup.d2Pairs(spark, dir)
-      .write.mode("overwrite").parquet(tablePath)
-    // Stamp the hash family AFTER the overwrite (which clears the dir):
-    // a pair table persisted under an older minhash family would
-    // otherwise be consumed silently by curateAgainstPairs.
-    NearDupIndex.writeFamilyStamp(spark, tablePath)
+    persistStamped(spark, Dedup.d2Pairs(spark, dir), tablePath, Dedup.hashFamilyId)
+
+  /** Overwrite `tablePath` with `pairs`, stamp it with the hash `family`
+    * AFTER the overwrite (which clears the dir: a table persisted under
+    * an older family would otherwise be consumed silently), and count
+    * what landed. */
+  private def persistStamped(spark: org.apache.spark.sql.SparkSession,
+      pairs: org.apache.spark.sql.DataFrame, tablePath: String, family: String): Long = {
+    pairs.write.mode("overwrite").parquet(tablePath)
+    graft.Persist.writeMarker(spark, NearDupIndex.familyMarker(tablePath), family)
     spark.read.parquet(tablePath).count()
   }
 
@@ -497,12 +501,8 @@ object Curation extends OpModule {
     * [[persistNearDupPairs]], consumed by [[fromPersisted]] for d12's
     * canonical-vector selection. */
   def persistEmbeddingPairs(spark: org.apache.spark.sql.SparkSession, dir: String,
-      tablePath: String): Long = {
-    Dedup.d8Pairs(spark, dir)
-      .write.mode("overwrite").parquet(tablePath)
-    NearDupIndex.writeFamilyStamp(spark, tablePath, Dedup.embFamilyId)
-    spark.read.parquet(tablePath).count()
-  }
+      tablePath: String): Long =
+    persistStamped(spark, Dedup.d8Pairs(spark, dir), tablePath, Dedup.embFamilyId)
 
   /** Every pair-consuming curation artifact served from PERSISTED pair
     * tables — the production shape at 100 TB, where the pair tables are

@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.{Op, OpModule, Tables}
-import org.apache.hadoop.fs.Path
+import graft.{Op, OpModule, Persist, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,12 +8,12 @@ import org.apache.spark.sql.functions._
   * against the persisted indexes, instead of only describing it.
   *
   * d17 computes per-document decisions (drop_exact / drop_near / trim /
-  * keep) and d19 materializes the cleaned corpus — but through round 13
-  * nothing ever REMOVED those documents from the persisted
-  * [[NearDupIndex]]/[[AnnIndex]] state: the stored bands/shingles/codes
-  * kept serving ghosts of dropped documents after every curation pass.
-  * [[applyPlan]] closes the loop with the standard delete-vector
-  * lifecycle: tombstone the dropped AND trimmed ids (cheap logical
+  * keep) and d19 materializes the cleaned corpus; neither removes those
+  * documents from the persisted [[NearDupIndex]]/[[AnnIndex]] state, whose
+  * stored bands/shingles/codes would keep serving ghosts of dropped
+  * documents after every curation pass. [[applyPlan]] closes the loop
+  * with the standard delete-vector lifecycle: tombstone the dropped AND
+  * trimmed ids (cheap logical
   * remove), purge (physical rewrite of only the touched state), then
   * re-index the trimmed documents under their d19-rebuilt text — after
   * which the index is EQUAL to a fresh build over the cleaned corpus
@@ -29,23 +28,6 @@ import org.apache.spark.sql.functions._
   * [[NearDupIndex.addDocuments]] batch — candidates probe colliding
   * buckets only, never the whole index. */
 object Maintenance extends OpModule {
-
-  private def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def readMarker(spark: SparkSession, p: String): Option[String] = {
-    val f = fs(spark, p)
-    if (!f.exists(new Path(p))) None
-    else {
-      val in = f.open(new Path(p))
-      try Some(scala.io.Source.fromInputStream(in).mkString) finally in.close()
-    }
-  }
-
-  private def writeMarker(spark: SparkSession, p: String, content: String): Unit = {
-    val out = fs(spark, p).create(new Path(p), true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
 
   /** Execute the dedup action plan against a populated near-dup index
     * (and optionally the ANN index for the embedding side): compute
@@ -73,7 +55,7 @@ object Maintenance extends OpModule {
   def applyPlan(spark: SparkSession, dir: String, root: String,
       annRoot: Option[String] = None): Map[String, Long] = {
     val staging = s"$root/_apply_staging"
-    if (!readMarker(spark, s"$staging/_staged").contains(StagedMarker))
+    if (!Persist.readMarker(spark, s"$staging/_staged").contains(StagedMarker))
       stagePlan(spark, dir, root)
     val plan = spark.read.parquet(s"$staging/plan")
     val drops = plan.filter(col("action") =!= "trim").select("doc_id")
@@ -90,7 +72,7 @@ object Maintenance extends OpModule {
       AnnIndex.remove(spark, ar, drops)
       AnnIndex.purgeTombstones(spark, ar)
     }
-    fs(spark, staging).delete(new Path(staging), true)
+    Persist.delete(spark, staging)
     Map("dropped_docs" -> nDrop, "trimmed_docs" -> nTrim,
       "reindex_pairs" -> nNew) ++
       purged.map { case (t, n) => s"purged_$t" -> n }
@@ -116,47 +98,34 @@ object Maintenance extends OpModule {
       .filter(col("action") === "trim")
       .select("doc_id", "text")
       .write.mode("overwrite").parquet(s"$staging/rebuilt")
-    writeMarker(spark, s"$staging/_staged", StagedMarker)
+    Persist.writeMarker(spark, s"$staging/_staged", StagedMarker)
+  }
+
+  /** A per-corpus `root` that `fill` populates once per corpus: wiped
+    * and refilled whenever its `marker` does not carry the current
+    * documents fingerprint, so the artifact amortizes over every query
+    * asked of it and timed repetitions measure the read path. */
+  private def corpusArtifact(spark: SparkSession, dir: String, root: String,
+      marker: String)(fill: String => Unit): String = {
+    Persist.buildOnce(spark, dir, "documents.parquet", s"$root/$marker", "v1 ") { want =>
+      Persist.delete(spark, root)
+      fill(root)
+      Persist.writeMarker(spark, s"$root/$marker", want)
+    }
+    root
   }
 
   /** Deterministic per-corpus root for the APPLIED index (the d21
     * gate artifact — test/bench convenience, production callers manage
     * their own roots). */
-  def appliedRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"${System.getProperty("java.io.tmpdir")}/graft_applied_idx_v1_${key}_$h"
-  }
+  def appliedRoot(dir: String): String = Persist.corpusRoot("applied_idx_v1", dir)
 
-  /** Roots already validated in this JVM — the probe path must not pay
-    * a marker read per timed repetition (the [[AnnIndex.ensureBuilt]]
-    * pattern; single-writer contract: nothing else rewrites the corpus
-    * or the index under a live process). */
-  private val validated = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Test hook: simulate a fresh process. */
-  private[operators] def resetValidationCacheForTest(): Unit = validated.clear()
-
-  /** Build-index-then-apply once per corpus (file-metadata fingerprint,
-    * the ensureBuilt contract): the applied state amortizes over every
-    * query asked of it, so timed repetitions measure the read path. */
-  private def ensureApplied(spark: SparkSession, dir: String): String = {
-    val root = appliedRoot(dir)
-    if (validated.contains(root)) return root
-    val marker = s"$root/_applied"
-    val want =
-      s"v1 f=${AnnIndex.corpusFingerprint(spark, dir, "documents.parquet")}\n"
-    if (!readMarker(spark, marker).contains(want)) {
-      val f = fs(spark, root)
-      f.delete(new Path(root), true)
+  /** Build-index-then-apply once per corpus. */
+  private def ensureApplied(spark: SparkSession, dir: String): String =
+    corpusArtifact(spark, dir, appliedRoot(dir), "_applied") { root =>
       NearDupIndex.addDocuments(spark, Tables.documents(spark, dir), root)
       applyPlan(spark, dir, root)
-      writeMarker(spark, marker, want)
     }
-    validated.add(root)
-    root
-  }
 
   /** d21: the per-document index census AFTER the action plan ran —
     * "curation actually executed" as an oracle-checked fact. One row
@@ -223,29 +192,13 @@ object Maintenance extends OpModule {
 
   /** Deterministic per-corpus root for the persisted d2 pair table
     * (c6's lexical side). */
-  def pairsRoot(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"${System.getProperty("java.io.tmpdir")}/graft_pairs_tbl_v1_${key}_$h"
-  }
+  def pairsRoot(dir: String): String = Persist.corpusRoot("pairs_tbl_v1", dir)
 
-  /** Persist the d2 pair table once per corpus (fingerprint marker) —
-    * the c6 probe's lexical storage artifact. */
-  private def ensurePairsTable(spark: SparkSession, dir: String): String = {
-    val root = pairsRoot(dir)
-    if (validated.contains(root)) return s"$root/pairs"
-    val marker = s"$root/_built_pairs"
-    val want =
-      s"v1 f=${AnnIndex.corpusFingerprint(spark, dir, "documents.parquet")}\n"
-    if (!readMarker(spark, marker).contains(want)) {
-      fs(spark, root).delete(new Path(root), true)
-      Curation.persistNearDupPairs(spark, dir, s"$root/pairs")
-      writeMarker(spark, marker, want)
-    }
-    validated.add(root)
-    s"$root/pairs"
-  }
+  /** Persist the d2 pair table once per corpus — the c6 probe's lexical
+    * storage artifact. */
+  private def ensurePairsTable(spark: SparkSession, dir: String): String =
+    corpusArtifact(spark, dir, pairsRoot(dir), "_built_pairs")(root =>
+      Curation.persistNearDupPairs(spark, dir, s"$root/pairs")) + "/pairs"
 
   /** c6: c5's two-signal semantic curation census served ENTIRELY from
     * storage — the 100 TB path, driver-graded (it shares c5's oracle

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Persist
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,51 +30,12 @@ object NearDupIndex {
 
   private def path(root: String, t: String) = s"$root/$t"
 
-  /** FileSystem-resolved existence (like Landing/compact): the index
-    * root may be hdfs:// or s3a://, where java.io.File would silently
-    * report every table missing and break both probing and replay
-    * idempotency. */
-  private def tableExists(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
-  /** True when `p` holds at least one DATA file: a dir containing only
-    * metadata markers (`_family`, written before any pair is found on a
-    * duplicate-free corpus) must read as the empty table, not crash
-    * parquet schema inference. */
-  private def tableHasData(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(hp) && fs.listStatus(hp).exists { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-  }
-
-  /** Hash-family stamp (`<root>/_family`): band keys from two different
+  /** Hash-family stamp (`<dir>/_family`): band keys from two different
     * minhash families never collide, so mixing them in one index silently
     * loses every new-vs-old pair. The stamp is written when the index is
     * first populated and checked on every subsequent append. Shared with
     * [[Curation.persistNearDupPairs]]'s pair tables. */
-  private[graft] def writeFamilyStamp(spark: SparkSession, dir: String,
-      id: String = Dedup.hashFamilyId): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(s"$dir/_family")
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(hp, true)
-    try out.write(id.getBytes("UTF-8")) finally out.close()
-  }
-
-  private[operators] def readFamilyStamp(spark: SparkSession, dir: String): Option[String] = {
-    val hp = new org.apache.hadoop.fs.Path(s"$dir/_family")
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) None
-    else {
-      val in = fs.open(hp)
-      try Some(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8"))
-      finally in.close()
-    }
-  }
+  private[operators] def familyMarker(dir: String) = s"$dir/_family"
 
   /** Fails fast when `dir` holds data stamped with a different (or no)
     * hash family than `expected` (default: the text-side
@@ -81,7 +43,7 @@ object NearDupIndex {
     * [[Dedup.embFamilyId]]). */
   private[operators] def requireFamily(spark: SparkSession, dir: String, what: String,
       expected: String = Dedup.hashFamilyId): Unit = {
-    val stamp = readFamilyStamp(spark, dir)
+    val stamp = Persist.readMarker(spark, familyMarker(dir))
     if (!stamp.contains(expected))
       throw new IllegalStateException(
         s"$what at $dir was built with hash family " +
@@ -91,100 +53,45 @@ object NearDupIndex {
   }
 
   private def readOrEmpty(spark: SparkSession, p: String, template: DataFrame): DataFrame =
-    if (tableHasData(spark, p)) spark.read.parquet(p)
+    if (Persist.hasData(spark, p)) spark.read.parquet(p)
     else template.limit(0)
 
-  // ---- tombstones: logical deletion, physically applied by purge ------
+  /** The index's delete-vector, keyed by doc_id ([[graft.Persist
+    * .Tombstones]]): every read path (pair probes, append candidate
+    * generation) anti-joins it; [[purgeTombstones]] applies it. */
+  private def tombs(root: String) = Persist.Tombstones(root, "doc_id")
 
-  private def tombPath(root: String) = path(root, "tombstones")
-
-  /** The live tombstone set (doc_id), or None when nothing is
-    * tombstoned — the common fast path is one existence check. */
-  private def tombstoneSet(spark: SparkSession, root: String): Option[DataFrame] =
-    if (tableHasData(spark, tombPath(root)))
-      Some(spark.read.parquet(tombPath(root)).select("doc_id").distinct())
-    else None
-
-  /** Drop tombstoned rows from a table carrying doc ids in `keys`
-    * (shingles/bands key on doc_id; pairs on BOTH sides — a pair whose
-    * either member is deleted no longer exists, exactly as a fresh
-    * build on the reduced corpus would never find it). Broadcast: the
-    * tombstone set is bounded by what was removed since the last purge,
-    * never by the corpus. */
-  private def minusTombstones(df: DataFrame, tomb: DataFrame,
-      keys: Seq[String]): DataFrame =
-    keys.foldLeft(df)((d, k) =>
-      d.join(broadcast(tomb.withColumnRenamed("doc_id", k)), Seq(k), "anti"))
-      // A USING join moves the join column to the FRONT of the output —
-      // positional consumers of pairs() would see (doc_b, doc_a, …).
-      .select(df.columns.map(col): _*)
-
-  /** Logically delete documents from the index: their ids land in an
-    * append-only `tombstones` table and every read path (pair probes,
-    * append candidate generation) anti-joins it — the delete-vector
-    * pattern, so a remove costs O(batch) I/O however large the index
-    * is. [[purgeTombstones]] later applies the deletion physically.
-    * Ids not present in the index are ignored (bounded tombstone set);
+  /** Logically delete documents from the index: O(batch) I/O however
+    * large the index is. Ids not present in the index are ignored;
     * already-tombstoned ids are skipped, so crashed removes replay to
     * the same state. Returns the count of newly tombstoned ids. */
   def remove(spark: SparkSession, root: String, ids: DataFrame): Long =
-    graft.WriterLease.withLease(spark, root,
-      graft.WriterLease.processOwner("neardup-remove")) {
-      if (!tableHasData(spark, path(root, "shingles"))) 0L
+    Persist.leased(spark, root, "neardup-remove") {
+      if (!Persist.hasData(spark, path(root, "shingles"))) 0L
       else {
         requireFamily(spark, root, "near-dup index")
-        val t = ids.select(col(ids.columns.head).cast("long").as("doc_id")).distinct()
-          // bounded: only ids the index actually holds become tombstones
-          .join(spark.read.parquet(path(root, "shingles")).select("doc_id"),
-            Seq("doc_id"), "semi")
-        val fresh = tombstoneSet(spark, root)
-          .map(existing => t.join(broadcast(existing), Seq("doc_id"), "anti"))
-          .getOrElse(t)
-          .cache()
-        val n = fresh.count()
-        if (n > 0) fresh.write.mode("append").parquet(tombPath(root))
-        fresh.unpersist()
-        n
+        tombs(root).remove(spark, ids, spark.read.parquet(path(root, "shingles")))
       }
     }
 
   /** Physically apply the tombstone set: rewrite each subtable without
-    * the deleted rows (crash-safe tmp/bak rename per table, `_family`
-    * markers carried), then delete the tombstone table LAST — the
-    * commit point. A crash anywhere earlier replays safely: the
-    * rewrites are anti-joins against the still-present tombstones, so
-    * re-running them on already-filtered tables is a no-op, and the
-    * final delete re-runs. These subtables are flat (unpartitioned),
-    * so a purge is a full rewrite of each — the same cost class as
-    * [[compact]], which is why deletion is split into the cheap
-    * logical remove and this compaction-cadence physical pass.
-    * Returns rows dropped per table. */
+    * the deleted rows (shingles/bands key on doc_id; pairs on BOTH
+    * sides), then delete the tombstones — the [[Persist.Tombstones
+    * .purge]] commit. These subtables are flat (unpartitioned), so a
+    * purge is a full rewrite of each — the same cost class as
+    * [[compact]], which is why deletion is split into the cheap logical
+    * remove and this compaction-cadence physical pass. Returns rows
+    * dropped per table. */
   def purgeTombstones(spark: SparkSession, root: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Map[String, Long] =
-    graft.WriterLease.withLease(spark, root,
-      graft.WriterLease.processOwner("neardup-purge")) {
-      tombstoneSet(spark, root) match {
-        case None => Map.empty
-        case Some(t0) =>
-          val t = t0.cache()
-          t.count() // pin the set: the rewrites must not re-read a moving table
-          val dropped = Seq(
-            "shingles" -> Seq("doc_id"), "bands" -> Seq("doc_id"),
-            "pairs" -> Seq("doc_a", "doc_b"))
-            .filter { case (tb, _) => tableHasData(spark, path(root, tb)) }
-            .map { case (tb, keys) =>
-              val p = path(root, tb)
-              val all = spark.read.parquet(p)
-              val hit = all.count() - minusTombstones(all, t, keys).count()
-              if (hit > 0)
-                graft.olapsus.Warehouse.rewritePath(spark, p, targetFileBytes,
-                  minusTombstones(_, t, keys))
-              tb -> hit
-            }.toMap
-          t.unpersist()
-          val hp = new org.apache.hadoop.fs.Path(tombPath(root))
-          hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
-          dropped
+    Persist.leased(spark, root, "neardup-purge") {
+      tombs(root).purge(spark) { t =>
+        Seq("shingles" -> Seq("doc_id"), "bands" -> Seq("doc_id"),
+          "pairs" -> Seq("doc_a", "doc_b"))
+          .filter { case (tb, _) => Persist.hasData(spark, path(root, tb)) }
+          .map { case (tb, keys) =>
+            tb -> tombs(root).rewriteFlat(spark, t, path(root, tb), targetFileBytes, keys)
+          }.toMap
       }
     }
 
@@ -196,8 +103,7 @@ object NearDupIndex {
     // shingles appends corrupts silently — fail it fast instead. A
     // crashed writer's lease expires and the replay converges (the
     // commit-order contract below).
-    graft.WriterLease.withLease(spark, root,
-      graft.WriterLease.processOwner("neardup-add")) {
+    Persist.leased(spark, root, "neardup-add") {
       addDocumentsLeased(spark, docs, root)
     }
 
@@ -207,28 +113,17 @@ object NearDupIndex {
     // an empty root gets stamped (re-stamping an empty root is safe — no
     // band keys exist yet to be incompatible with). The pairs subtable is
     // stamped too: it is consumed standalone by Curation.curateAgainstPairs.
-    if (tableExists(spark, path(root, "shingles"))) requireFamily(spark, root, "near-dup index")
-    else {
-      writeFamilyStamp(spark, root)
-      writeFamilyStamp(spark, path(root, "pairs"))
-    }
+    if (Persist.exists(spark, path(root, "shingles")))
+      requireFamily(spark, root, "near-dup index")
+    else Seq(root, path(root, "pairs")).foreach(d =>
+      Persist.writeMarker(spark, familyMarker(d), Dedup.hashFamilyId))
     val newShAll = Dedup.shingled(docs)
     // Tombstoned ids must not be silently re-adopted NOR silently
-    // skipped: a remove-then-add is an UPDATE, and serving it needs the
-    // old rows physically gone first (readers anti-join tombstones by
-    // id, so a re-added row would vanish with its predecessor). Fail
-    // loudly — run purgeTombstones, then re-add.
-    val tomb = tombstoneSet(spark, root)
-    tomb.foreach { t =>
-      val n = newShAll.select("doc_id")
-        .join(broadcast(t), Seq("doc_id"), "semi").count()
-      if (n > 0) throw new IllegalStateException(
-        s"addDocuments: $n batch document(s) are tombstoned in the index at " +
-          s"$root — run purgeTombstones() before re-adding removed ids " +
-          "(re-added rows would be masked by their own tombstones).")
-    }
-    def live(df: DataFrame): DataFrame =
-      tomb.map(t => minusTombstones(df, t, Seq("doc_id"))).getOrElse(df)
+    // skipped: a remove-then-add is an UPDATE — run purgeTombstones,
+    // then re-add.
+    val tomb = tombs(root).read(spark)
+    tombs(root).refuse(tomb, newShAll, "addDocuments")
+    def live(df: DataFrame): DataFrame = tomb.fold(df)(tombs(root).minus(df, _))
     val oldSh = live(
       readOrEmpty(spark, path(root, "shingles"), newShAll.select("doc_id", "sh")))
     // Idempotency: drop docs already in the index.
@@ -286,15 +181,8 @@ object NearDupIndex {
     * warehouse compaction. Returns the per-table new file counts. */
   def compact(spark: SparkSession, root: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Map[String, Int] =
-    graft.WriterLease.withLease(spark, root,
-      graft.WriterLease.processOwner("neardup-compact")) {
-      requireFamily(spark, root, "near-dup index")
-      Seq("pairs", "bands", "shingles")
-        .filter(t => tableHasData(spark, path(root, t)))
-        .map(t => t -> graft.olapsus.Warehouse.compactPath(
-          spark, path(root, t), targetFileBytes))
-        .toMap
-    }
+    Persist.compact(spark, root, "neardup-compact", Seq("pairs", "bands", "shingles"),
+      targetFileBytes, requireFamily(spark, root, "near-dup index"))
 
   /** The accumulated pair table (doc_a, doc_b, jaccard). Read through
     * distinct(): a batch that crashed between its pairs append and its
@@ -304,12 +192,8 @@ object NearDupIndex {
     * joins alike. Tombstoned documents' pairs are filtered out — a
     * [[remove]] is visible immediately, before any [[purgeTombstones]]
     * pass physically drops the rows. */
-  def pairs(spark: SparkSession, root: String): DataFrame = {
-    val p = pairsTable(spark, path(root, "pairs"))
-    tombstoneSet(spark, root)
-      .map(t => minusTombstones(p, t, Seq("doc_a", "doc_b")))
-      .getOrElse(p)
-  }
+  def pairs(spark: SparkSession, root: String): DataFrame =
+    tombs(root).live(spark, pairsTable(spark, path(root, "pairs")), Seq("doc_a", "doc_b"))
 
   /** Read a standalone pair table (the index's `pairs` dir or a
     * [[Curation.persistNearDupPairs]] output) tolerating the data-less
@@ -321,15 +205,11 @@ object NearDupIndex {
     * document with its stored shingle-set size — the d21 gate's view of
     * "what the index holds now" (tombstoned docs excluded, exactly as
     * every other read). */
-  def docStats(spark: SparkSession, root: String): DataFrame = {
-    val sh = readOrEmpty(spark, path(root, "shingles"),
+  def docStats(spark: SparkSession, root: String): DataFrame =
+    tombs(root).live(spark, readOrEmpty(spark, path(root, "shingles"),
       spark.range(0).select(col("id").as("doc_id"),
         array(col("id")).as("sh")))
-      .select(col("doc_id"), size(col("sh")).as("n_shingles"))
-    tombstoneSet(spark, root)
-      .map(t => minusTombstones(sh, t, Seq("doc_id")))
-      .getOrElse(sh)
-  }
+      .select(col("doc_id"), size(col("sh")).as("n_shingles")))
 
   /** As [[pairsTable]] but WITHOUT the exact-duplicate collapse —
     * consumers that project + distinct a single column (the curation
@@ -337,7 +217,7 @@ object NearDupIndex {
     * first. Only safe for set-semantics consumers: replayed crash
     * appends can leave exact-duplicate rows in the raw read. */
   private[operators] def pairsTableRaw(spark: SparkSession, p: String): DataFrame =
-    if (tableHasData(spark, p)) spark.read.parquet(p)
+    if (Persist.hasData(spark, p)) spark.read.parquet(p)
     else spark.range(0).select(
       col("id").as("doc_a"), col("id").as("doc_b"),
       col("id").cast("double").as("jaccard"))

@@ -154,8 +154,8 @@ class CurationSpec extends SparkSpecBase {
     Curation.persistEmbeddingPairs(spark, sf(), embPairs)
     // Forge a family drift: an embedding table restamped under the TEXT
     // family (e.g. a path mixup) and a text table under a stale family.
-    graft.operators.NearDupIndex.writeFamilyStamp(spark, embPairs, "emblsh/0;stale")
-    graft.operators.NearDupIndex.writeFamilyStamp(spark, textPairs, "minhash/1;stale")
+    Persist.writeMarker(spark, s"$embPairs/_family", "emblsh/0;stale")
+    Persist.writeMarker(spark, s"$textPairs/_family", "minhash/1;stale")
     val fp = Curation.fromPersisted(spark, sf(), textPairs, Some(embPairs))
     intercept[IllegalStateException] { fp.census.collect() }
     intercept[IllegalStateException] { fp.canonicalVectors.collect() }

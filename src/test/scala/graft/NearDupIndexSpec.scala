@@ -38,7 +38,7 @@ class NearDupIndexSpec extends SparkSpecBase {
     // different families never collide, so appending would silently lose
     // every new-vs-old pair — the gate must fail fast instead. (Forged
     // through the Hadoop FS so the local checksum sidecar stays valid.)
-    NearDupIndex.writeFamilyStamp(spark, root, "minhash/1;salted-md5-per-hash")
+    Persist.writeMarker(spark, s"$root/_family", "minhash/1;salted-md5-per-hash")
     val ex = intercept[IllegalStateException] {
       NearDupIndex.addDocuments(spark, docs.filter(col("doc_id") % 2 === 1), root)
     }
@@ -49,7 +49,7 @@ class NearDupIndexSpec extends SparkSpecBase {
       NearDupIndex.addDocuments(spark, docs.filter(col("doc_id") % 2 === 1), root)
     }
     // Restoring the current stamp lets the append proceed to convergence.
-    NearDupIndex.writeFamilyStamp(spark, root)
+    Persist.writeMarker(spark, s"$root/_family", Dedup.hashFamilyId)
     NearDupIndex.addDocuments(spark, docs.filter(col("doc_id") % 2 === 1), root)
     assert(indexPairs(root) == fullPairs)
   }
@@ -59,7 +59,7 @@ class NearDupIndexSpec extends SparkSpecBase {
     operators.Curation.persistNearDupPairs(spark, sf(), table)
     // Freshly persisted table carries the current stamp and is accepted.
     assert(operators.Curation.curateAgainstPairs(spark, sf(), table).count() > 0)
-    NearDupIndex.writeFamilyStamp(spark, table, "minhash/1;salted-md5-per-hash")
+    Persist.writeMarker(spark, s"$table/_family", "minhash/1;salted-md5-per-hash")
     intercept[IllegalStateException] {
       operators.Curation.curateAgainstPairs(spark, sf(), table)
     }

@@ -262,14 +262,14 @@ class AnnIndexSpec extends SparkSpecBase {
     // Crash before the commit marker: a half-built root must be rebuilt,
     // never probed. (The JVM-local validation cache is reset the same
     // way a fresh process would start.)
-    AnnIndex.resetValidationCacheForTest()
+    graft.Persist.resetValidationCacheForTest()
     hfs.delete(hp, false)
     AnnIndex.ensureBuilt(spark, sf(), root)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(root, "_built")))
     assert(rows(AnnIndex.probeIvf(spark, root)) == expected)
     // A marker from an older build version (or another corpus) is
     // equally stale: rebuild, don't serve.
-    AnnIndex.resetValidationCacheForTest()
+    graft.Persist.resetValidationCacheForTest()
     val out = hfs.create(hp, true)
     out.write("v1 f=deadbeef\n".getBytes("UTF-8")); out.close()
     // append() must refuse the stale-version root BEFORE writing anything
@@ -302,7 +302,7 @@ class AnnIndexSpec extends SparkSpecBase {
     assert(spark.read.parquet(s"$root/ivfpq/coarse").count() == 4L)
     // ensureBuilt at the DIFFERENT (default) geometry must rebuild, not
     // serve the 4-cell index; afterwards the marker reports the default.
-    AnnIndex.resetValidationCacheForTest()
+    graft.Persist.resetValidationCacheForTest()
     AnnIndex.ensureBuilt(spark, sf(), root)
     assert(AnnIndex.buildParams(spark, root)
       .contains((Similarity.NC, Similarity.KC, Similarity.PQ_K)))
@@ -312,7 +312,7 @@ class AnnIndexSpec extends SparkSpecBase {
     // the probe reads its geometry from the persisted coarse table, so
     // it must return a full top-k answer (pc=4 changes WHICH neighbors
     // — cells are coarser — but never the result shape or coverage).
-    AnnIndex.resetValidationCacheForTest()
+    graft.Persist.resetValidationCacheForTest()
     AnnIndex.build(spark, sf(), root, pc = 4)
     assert(spark.read.parquet(s"$root/ivfpq/coarse").count() == 4L)
     val probe = AnnIndex.probeIvfPq(spark, sf(), root)

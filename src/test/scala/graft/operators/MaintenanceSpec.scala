@@ -270,6 +270,101 @@ class MaintenanceSpec extends SparkSpecBase {
     } finally { vecsAll.unpersist(); () }
   }
 
+  /** Every regular file under `root` with its modification time. */
+  private def fileTimes(root: String): Map[String, Long] = {
+    val out = scala.collection.mutable.Map[String, Long]()
+    java.nio.file.Files.walk(java.nio.file.Paths.get(root)).forEach { f =>
+      if (java.nio.file.Files.isRegularFile(f))
+        out += (f.toString -> java.nio.file.Files.getLastModifiedTime(f).toMillis)
+    }
+    out.toMap
+  }
+
+  /** Runs `purge` so that it leaves the state of a purge that died after
+    * its rewrites and before its commit: `root/tombstones` is copied aside
+    * first and put back afterwards. Returns `answers` as read in between,
+    * once the purge completed. */
+  private def purgeDiedBeforeCommit[A](root: String)(purge: => Unit)(answers: => A): A = {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val tomb = new Path(s"$root/tombstones")
+    val fs = tomb.getFileSystem(conf)
+    val aside = new Path(Files.createTempDirectory("tomb-aside").toString, "tombstones")
+    assert(FileUtil.copy(fs, tomb, fs, aside, false, conf))
+    purge
+    assert(!fs.exists(tomb))
+    val a = answers
+    assert(FileUtil.copy(fs, aside, fs, tomb, false, conf))
+    a
+  }
+
+  test("a purge that died before deleting its tombstones replays as a no-op") {
+    def noop(dropped: Map[String, Long]): Unit =
+      assert(dropped.nonEmpty && dropped.values.forall(_ == 0L), dropped.toString)
+    def tombGone(root: String): Unit =
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "tombstones")))
+    // Near-dup index: the rewritten tables already lack the removed docs.
+    val nd = Files.createTempDirectory("maint-nd-replay").toString
+    NearDupIndex.addDocuments(spark, Tables.documents(spark, sf()), nd)
+    val gone = pairSet(nd).take(3).map(_._1).toSeq
+    assert(NearDupIndex.remove(spark, nd,
+      spark.createDataFrame(gone.map(Tuple1(_))).toDF("doc_id")) == gone.size.toLong)
+    def ndAnswers = (pairSet(nd), rows(NearDupIndex.docStats(spark, nd).orderBy("doc_id")))
+    val ndWant = purgeDiedBeforeCommit(nd)(NearDupIndex.purgeTombstones(spark, nd))(ndAnswers)
+    noop(NearDupIndex.purgeTombstones(spark, nd))
+    assert(ndAnswers == ndWant)
+    tombGone(nd)
+    // ANN index: partitioned and flat families alike.
+    val ann = Files.createTempDirectory("maint-ann-replay").toString
+    AnnIndex.build(spark, sf(), ann)
+    val n = Tables.embeddings(spark, sf()).count()
+    val goneIds = (n - 5 until n).toSeq :+ 9L
+    assert(AnnIndex.remove(spark, ann,
+      spark.createDataFrame(goneIds.map(Tuple1(_))).toDF("vec_id")) == goneIds.size.toLong)
+    def annAnswers = (rows(AnnIndex.probeIvf(spark, ann)), rows(AnnIndex.probePq(spark, sf(), ann)))
+    val annWant = purgeDiedBeforeCommit(ann)(AnnIndex.purgeTombstones(spark, ann))(annAnswers)
+    noop(AnnIndex.purgeTombstones(spark, ann))
+    assert(annAnswers == annWant)
+    tombGone(ann)
+  }
+
+  test("d21 and c6 roots rebuild on a stale corpus marker and stay untouched on a current one") {
+    val dir = sf()
+    val want = s"v1 f=${graft.Persist.corpusFingerprint(spark, dir, "documents.parquet")}\n"
+    val markers = Seq(s"${Maintenance.appliedRoot(dir)}/_applied",
+      s"${Maintenance.pairsRoot(dir)}/_built_pairs")
+    def runBoth(): Unit = {
+      Maintenance.d21AppliedCensus.run(spark, dir).count()
+      Maintenance.c6SemanticCurationServed.run(spark, dir).count()
+      ()
+    }
+    def marker(p: String) = new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
+    def dataFiles(m: String) = fileTimes(new java.io.File(m).getParent)
+    runBoth()
+    markers.foreach(m => assert(marker(m) == want, m))
+    // A current marker in a fresh process: nothing is rewritten.
+    val current = markers.map(dataFiles)
+    graft.Persist.resetValidationCacheForTest()
+    runBoth()
+    assert(markers.map(dataFiles) == current)
+    // A stale corpus fingerprint (forged through the Hadoop FS, which
+    // keeps the checksum sidecar valid): both roots rebuild.
+    graft.Persist.resetValidationCacheForTest()
+    markers.foreach { m =>
+      val hp = new org.apache.hadoop.fs.Path(m)
+      val out = hp.getFileSystem(spark.sparkContext.hadoopConfiguration).create(hp, true)
+      try out.write("v1 f=deadbeef\n".getBytes("UTF-8")) finally out.close()
+    }
+    val stale = markers.map(dataFiles)
+    runBoth()
+    markers.zip(stale).foreach { case (m, before) =>
+      assert(marker(m) == want, m)
+      def parquet(fs: Map[String, Long]) = fs.keySet.filter(_.endsWith(".parquet"))
+      assert(parquet(dataFiles(m)) != parquet(before), s"$m: root not rebuilt")
+    }
+  }
+
   test("purge rewrites ONLY the touched cid directories") {
     val root = Files.createTempDirectory("maint-ann-io").toString
     AnnIndex.build(spark, sf(), root)
