@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The engine-owned Spark session configuration: one definition for
   * every main that plans or serves declared queries (Bench, QBench,
-  * Explain, StageProf, Verify, ScaleCheck, demos and the serving
+  * Explain, StageProf, Verify, demos and the serving
   * surfaces). Planner behavior is engine policy, so what the bench
   * measures is what every other surface ships.
   *

@@ -61,32 +61,23 @@ object AnnIndex extends OpModule {
     * served index-only — an old root would silently return zero rows
     * for every filtered probe. v6: `ivf/codes` is partitioned by
     * (cid, label) instead of cid alone, so filtered probes prune label
-    * DIRECTORIES the way plain probes prune cells (v5 read every cell
-    * row and filtered labels inside the join). v7: adds `ivf/qhead` —
-    * the bounded vec_id < NQ query rows as their own tiny table. The
-    * probes' plan-build step (collect the query cells/labels to prune
-    * to) otherwise filters vec_id over EVERY codes file, and the v6
-    * (cid, label) layout multiplied the file count by the label
-    * cardinality: ScaleCheck measured the s9/s15 probes going from
-    * ~flat to ~linear at 8× (0.47→3.8 s / 0.33→2.9 s) purely on that
-    * footer sweep. qhead restored the plan-BUILD step's boundedness, but
-    * the data read still listed the whole table (ScaleCheck r12: s9/s15
-    * at 3.9×/3.3× for 8× data, pure listing cost). v8 closes that
-    * residual two ways: probes read ONLY the pruned partition
-    * DIRECTORIES (explicit cid= paths under a basePath, so listing cost
-    * is bounded by the query cells' subtrees, never the (cid × label)
-    * file count), and `ivfpq/codes` carries `fid` — the row's ivf-family
+    * DIRECTORIES the way plain probes prune cells. v7: adds `ivf/qhead`
+    * — the bounded vec_id < NQ query rows as their own tiny table — so
+    * the probes' plan-build step (collect the query cells/labels to
+    * prune to) reads one small file, never a vec_id filter over every
+    * codes file footer. v8: probes read ONLY the pruned partition
+    * DIRECTORIES (explicit cid= paths under a basePath), so listing
+    * cost is bounded by the query cells' subtrees, never the table's
+    * file count; and `ivfpq/codes` carries `fid` — the row's ivf-family
     * (full-vector store) cell id — so a rerank fetch after an IVFPQ
     * stage 1 partition-prunes `ivf/codes` to the candidates' cells
     * (s19) instead of scanning the table behind a broadcast filter.
     * v9: `ivf/codes` partitions by (cid, lb) — lb a FIXED-width hash
     * bucket of the label — instead of (cid, label). Partitioning by the
-    * raw label bounds nothing: a cell's directory/file count equals its
-    * label cardinality (unbounded in the corpus — the r13 probe measured
-    * 442 near-empty files across ten query cells whose ROW count was
-    * constant, and probe wall tracked the file count, not the rows).
-    * With [[LabelBuckets]] buckets a cell is at most 16 files however
-    * many labels it holds; the label itself stays a DATA column, so
+    * raw label bounds nothing: a cell's directory/file count would equal
+    * its label cardinality, unbounded in the corpus, while its row
+    * count stays constant. With [[LabelBuckets]] buckets a cell is at
+    * most 16 files however many labels it holds; the label itself stays a DATA column, so
     * filtered probes prune (cid, bucket-of-label) directories and push
     * the exact label equality into the parquet scan (row-group stats /
     * dictionary pruning) — the standard bucketed-partitioning answer to
