@@ -115,10 +115,10 @@ object Maintain {
       val n = wh.compact(table, target, a.get("partition"))
       println(s"compacted $table${a.get("partition").fold("")(p => s"/$p")} -> $n file(s)")
     }
-    if (wh.exists(Warehouse.IngestLog)) {
+    val logged = Seq("sim", "sinasc").flatMap(d => wh.ingestKeys(d).toSeq.sorted.map(d -> _))
+    if (logged.nonEmpty) {
       println("ingest manifest:")
-      wh.table(Warehouse.IngestLog).orderBy("dataset", "dt")
-        .collect().foreach(r => println(s"  ${r.getString(0)} dt=${r.getString(1)}"))
+      logged.foreach { case (d, dt) => println(s"  $d dt=$dt") }
     }
     spark.stop()
   }

@@ -224,10 +224,13 @@ object Pipeline {
     rows.get("rows").asInstanceOf[Long]
   }
 
-  private def readRaw(wh: Warehouse, paths: Seq[String]): DataFrame =
-    wh.spark.read
-      .option("header", "true").option("sep", ";").option("inferSchema", "false")
-      .csv(paths: _*)
+  /** One batch's raw rows, every column a string and named by the files'
+    * header ([[Landing.batchSchema]], read on the driver); None when no
+    * file has a data row. */
+  private def readRaw(wh: Warehouse, paths: Seq[String]): Option[DataFrame] =
+    Landing.batchSchema(wh.spark, paths).map(wh.spark.read.schema(_)
+      .option("header", "true").option("sep", ";")
+      .csv(paths: _*))
 
   /** Full SINASC ingest of one `dt=` batch of raw CSVs (header, `;`,
     * no inference — sinasc.py:192). Paths may be globs or concrete
@@ -253,7 +256,9 @@ object Pipeline {
 
   /** The batch driver: one `dt=` day of raw CSVs, read by header name
     * (extra or reordered columns are fine), through the dataset's day
-    * body. */
+    * body. The manifest check, the header and the emptiness check are
+    * driver-side file reads, so the only Spark jobs a batch runs are
+    * its day body's. */
   private[olapsus] def ingestFiles(wh: Warehouse, ds: RawDataset, paths: Seq[String],
       dt: String): Long = {
     if (paths.isEmpty) return 0L
@@ -265,20 +270,16 @@ object Pipeline {
     graft.WriterLease.withLease(wh.spark, wh.root,
       graft.WriterLease.processOwner(s"ingest-${ds.name}"), scope = ds.name) {
       if (wh.ingestLogged(ds.name, dt)) 0L
-      else {
-        val raw = readRaw(wh, paths)
-        if (raw.isEmpty) 0L
-        else {
-          // A whole-day overwrite, not an append: a crash between this
-          // write and the logIngest row below leaves the day
-          // written-but-unlogged, and the replay must REPLACE it, not
-          // double it (see the crash-replay contract on
-          // Warehouse.overwriteDay; forged in CrashReplaySpec).
-          val written = ds.day(wh, raw, dt, None)
-          IngestFaults.afterFactWrite(wh.root, ds.name)
-          wh.logIngest(ds.name, dt)
-          written
-        }
+      else readRaw(wh, paths).fold(0L) { raw =>
+        // A whole-day overwrite, not an append: a crash between this
+        // write and the logIngest marker below leaves the day
+        // written-but-unlogged, and the replay must REPLACE it, not
+        // double it (see the crash-replay contract on
+        // Warehouse.overwriteDay; forged in CrashReplaySpec).
+        val written = ds.day(wh, raw, dt, None)
+        IngestFaults.afterFactWrite(wh.root, ds.name)
+        wh.logIngest(ds.name, dt)
+        written
       }
     }
   }
@@ -291,8 +292,8 @@ object Pipeline {
     * (dt, rows) per landed day.
     *
     * The manifest is read once, before the loop: a day it already logs
-    * is reported as `dt -> 0` without a lease, a listing or a Spark
-    * job (the manifest is append-only, so a logged day stays logged),
+    * is reported as `dt -> 0` without a lease or a day listing (the
+    * manifest is append-only, so a logged day stays logged),
     * and only pending days go through [[ingestFiles]], which re-checks
     * the manifest inside its lease. The cost of a run is therefore
     * O(pending days), not O(days ever landed). */

@@ -88,13 +88,11 @@ object Schemas {
     "chave_causa_secundaria" -> IntegerType, "chave_ocupacao" -> IntegerType,
     "valor" -> DecimalType(15, 2), "quantidade_procedimentos" -> IntegerType)
 
-  /** The ingest manifest: one row per ingested day (or `day#unit`). */
-  val ingestLog: StructType = st("dataset" -> StringType, "dt" -> StringType)
-
   /** The header rows of the raw landing CSVs (`;`-separated, every value
     * read as a string), the DATASUS layouts of FIXTURES.md §1–2. The
-    * batch driver reads columns by these names; the stream backfill
-    * requires a file's header to be exactly this row. */
+    * batch driver reads columns by these names, taking each batch's
+    * header from its files ([[Landing.batchSchema]]); the stream
+    * backfill requires a file's header to be exactly this row. */
   val sinascHeader: String =
     "DTNASC;HORANASC;CODMUNNASC;CODMUNRES;IDADEMAE;RACACORMAE;ESCMAE;ESTCIVMAE;SEXO;RACACOR;PESO;PARTO;GESTACAO;GRAVIDEZ"
   val simHeader: String =
@@ -113,5 +111,5 @@ object Schemas {
     "dimInfoNascimento" -> dimInfoNascimento,
     "ponteGrupoCausas" -> ponteGrupoCausas,
     "factNascimentos" -> factNascimentos, "factObitos" -> factObitos,
-    "factInternacoes" -> factInternacoes, "_ingest_log" -> ingestLog)
+    "factInternacoes" -> factInternacoes)
 }

@@ -3,6 +3,8 @@ package graft.olapsus
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
+import scala.collection.immutable.ListMap
+
 /** Raw-CSV cleaning/decoding for the two DATASUS datasets — exact
   * behavioral ports of the reference transforms (SIM:
   * dags/spark_script_sim.py:31-128; SINASC:
@@ -60,59 +62,64 @@ object Transforms {
     else base.otherwise(c.try_cast("int"))
   }
 
-  /** SINASC (births) raw → clean. */
+  /** SINASC (births) raw → clean: one projection. */
   def sinasc(df: DataFrame): DataFrame =
-    df.withColumn("data_nascimento", try_to_date(col("DTNASC").cast("string"), "ddMMyyyy"))
-      .withColumn("tempo_nascimento", normalizeHora(col("HORANASC"), blankInvalid = true))
-      .withColumn("cod_mun_nasc", blankToNullInt(col("CODMUNNASC"), digits6 = true))
-      .withColumn("cod_mun_res", blankToNullInt(col("CODMUNRES"), digits6 = true))
-      .withColumn("idade_mae", col("IDADEMAE").try_cast("int"))
-      .withColumn("raca_mae_desc", decodeMap(col("RACACORMAE"), racaMap, "Ignorado"))
-      .withColumn("esc_mae_desc", decodeMap(col("ESCMAE"), escolaridadeMap, "Ignorado"))
-      .withColumn("estciv_mae_desc", decodeMap(col("ESTCIVMAE"), estadoCivilMap, "Ignorado"))
-      .withColumn("sexo_rn_desc",
-        when(col("SEXO") === "1", "M").when(col("SEXO") === "2", "F").otherwise("I"))
-      .withColumn("raca_rn_desc", decodeMap(col("RACACOR"), racaMap, "Ignorado"))
-      .withColumn("peso_gramas", col("PESO").try_cast("int"))
-      .withColumn("parto_desc", decodeMap(col("PARTO"), partoMap, "Ignorado"))
-      .withColumn("gestacao_desc", decodeMap(col("GESTACAO"), gestacaoMap, "Ignorado"))
-      .withColumn("gravidez_desc", decodeMap(col("GRAVIDEZ"), gravidezMap, "Ignorado"))
+    df.withColumns(ListMap(
+      "data_nascimento" -> try_to_date(col("DTNASC").cast("string"), "ddMMyyyy"),
+      "tempo_nascimento" -> normalizeHora(col("HORANASC"), blankInvalid = true),
+      "cod_mun_nasc" -> blankToNullInt(col("CODMUNNASC"), digits6 = true),
+      "cod_mun_res" -> blankToNullInt(col("CODMUNRES"), digits6 = true),
+      "idade_mae" -> col("IDADEMAE").try_cast("int"),
+      "raca_mae_desc" -> decodeMap(col("RACACORMAE"), racaMap, "Ignorado"),
+      "esc_mae_desc" -> decodeMap(col("ESCMAE"), escolaridadeMap, "Ignorado"),
+      "estciv_mae_desc" -> decodeMap(col("ESTCIVMAE"), estadoCivilMap, "Ignorado"),
+      "sexo_rn_desc" ->
+        when(col("SEXO") === "1", "M").when(col("SEXO") === "2", "F").otherwise("I"),
+      "raca_rn_desc" -> decodeMap(col("RACACOR"), racaMap, "Ignorado"),
+      "peso_gramas" -> col("PESO").try_cast("int"),
+      "parto_desc" -> decodeMap(col("PARTO"), partoMap, "Ignorado"),
+      "gestacao_desc" -> decodeMap(col("GESTACAO"), gestacaoMap, "Ignorado"),
+      "gravidez_desc" -> decodeMap(col("GRAVIDEZ"), gravidezMap, "Ignorado")))
 
-  /** SIM (mortality) raw → clean. Requires a `row_id` column upstream
-    * (the bridge keys on it, sim.py:323). */
+  /** SIM (mortality) raw → clean: one projection, the dependent steps
+    * (age from its unit and value digits, the LINHAII cleanup chain)
+    * nested. Requires a `row_id` column upstream (the bridge keys on it,
+    * sim.py:323). */
   def sim(df: DataFrame): DataFrame = {
-    val withBase = df
-      .withColumn("data_obito", try_to_date(col("DTOBITO").cast("string"), "ddMMyyyy"))
-      .withColumn("data_nascimento", try_to_date(col("DTNASC").cast("string"), "ddMMyyyy"))
-      .withColumn("tempo_obito", normalizeHora(col("HORAOBITO"), blankInvalid = false))
-      .withColumn("sexo_desc",
-        when(col("SEXO") === "1" || col("SEXO") === "M", "Masculino")
-          .when(col("SEXO") === "2" || col("SEXO") === "F", "Feminino")
-          .otherwise("Ignorado"))
-      .withColumn("raca_desc", decodeMap(col("RACACOR"), racaMap, "Ignorado"))
-      .withColumn("estciv_desc", decodeMap(col("ESTCIV"), estadoCivilMap, "Ignorado"))
-      .withColumn("esc_desc", decodeMap(col("ESC"), escolaridadeMap, "Ignorado"))
-      // Coded age (sim.py:91-102): unit digit <4 ⇒ 0 years, 4 ⇒ value,
-      // 5 ⇒ value+100, else unknown.
-      .withColumn("id_unid", substring(lpad(col("IDADE"), 3, "0"), 1, 1).try_cast("int"))
-      .withColumn("id_val", substring(lpad(col("IDADE"), 3, "0"), 2, 2).try_cast("int"))
-      .withColumn("idade_anos",
-        when(col("id_unid") < 4, 0)
-          .when(col("id_unid") === 4, col("id_val"))
-          .when(col("id_unid") === 5, col("id_val") + 100)
-          .otherwise(lit(null)))
+    // Coded age (sim.py:91-102): unit digit <4 ⇒ 0 years, 4 ⇒ value,
+    // 5 ⇒ value+100, else unknown.
+    val idUnid = substring(lpad(col("IDADE"), 3, "0"), 1, 1).try_cast("int")
+    val idVal = substring(lpad(col("IDADE"), 3, "0"), 2, 2).try_cast("int")
     // ICD cleanup (sim.py:106-115): strip non-alphanumerics and a
     // trailing X; LINHAII is *-separated multi-cause.
-    val withCauses = Seq("LINHAA", "LINHAB", "LINHAC", "LINHAD").foldLeft(withBase) { (d, c) =>
-      d.withColumn(c, regexp_replace(regexp_replace(col(c), "[^A-Z0-9]", ""), "X$", ""))
+    val linhaIIClean = regexp_replace(col("LINHAII"), "[^A-Z0-9*]", "")
+    val causes = Seq("LINHAA", "LINHAB", "LINHAC", "LINHAD").map { c =>
+      c -> regexp_replace(regexp_replace(col(c), "[^A-Z0-9]", ""), "X$", "")
     }
-    withCauses
-      .withColumn("LINHAII_clean", regexp_replace(col("LINHAII"), "[^A-Z0-9*]", ""))
-      .withColumn("LINHAII_arr", split(col("LINHAII_clean"), "\\*"))
-      .withColumn("LINHAII_arr", expr("filter(LINHAII_arr, x -> x != '')"))
-      .withColumn("LINHAII_arr", expr("transform(LINHAII_arr, x -> regexp_replace(x, 'X$', ''))"))
-      .withColumn("cod_mun_res", blankToNullInt(col("CODMUNRES"), digits6 = false))
-      .withColumn("cod_mun_ocor", blankToNullInt(col("CODMUNOCOR"), digits6 = false))
-      .withColumn("ocupacao_cbo", trim(col("OCUP")))
+    df.withColumns(ListMap(
+      "data_obito" -> try_to_date(col("DTOBITO").cast("string"), "ddMMyyyy"),
+      "data_nascimento" -> try_to_date(col("DTNASC").cast("string"), "ddMMyyyy"),
+      "tempo_obito" -> normalizeHora(col("HORAOBITO"), blankInvalid = false),
+      "sexo_desc" ->
+        when(col("SEXO") === "1" || col("SEXO") === "M", "Masculino")
+          .when(col("SEXO") === "2" || col("SEXO") === "F", "Feminino")
+          .otherwise("Ignorado"),
+      "raca_desc" -> decodeMap(col("RACACOR"), racaMap, "Ignorado"),
+      "estciv_desc" -> decodeMap(col("ESTCIV"), estadoCivilMap, "Ignorado"),
+      "esc_desc" -> decodeMap(col("ESC"), escolaridadeMap, "Ignorado"),
+      "id_unid" -> idUnid,
+      "id_val" -> idVal,
+      "idade_anos" ->
+        when(idUnid < 4, 0)
+          .when(idUnid === 4, idVal)
+          .when(idUnid === 5, idVal + 100)
+          .otherwise(lit(null))) ++ causes ++ ListMap(
+      "LINHAII_clean" -> linhaIIClean,
+      "LINHAII_arr" -> transform(
+        filter(split(linhaIIClean, "\\*"), x => x =!= ""),
+        x => regexp_replace(x, "X$", "")),
+      "cod_mun_res" -> blankToNullInt(col("CODMUNRES"), digits6 = false),
+      "cod_mun_ocor" -> blankToNullInt(col("CODMUNOCOR"), digits6 = false),
+      "ocupacao_cbo" -> trim(col("OCUP"))))
   }
 }

@@ -1,5 +1,6 @@
 package graft.olapsus
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parquet-backed star-schema warehouse replacing the reference's Postgres
@@ -77,7 +78,6 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * table's scope lease (the delete-by-prefix is only safe
     * single-writer). */
   def appendUnit(table: String, df: DataFrame, dt: String, unit: String): Unit = {
-    import org.apache.hadoop.fs.Path
     require(unit.matches("[A-Za-z0-9_.-]+"), s"unit must be path-safe: $unit")
     val tableDir = new Path(path(table))
     val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -109,8 +109,8 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     df.write.mode("append").parquet(path(table))
   }
 
-  /** The unpartitioned tables [[Schemas]] declares (the dims, the
-    * bridge and the manifest) are read with their declared schema, so a
+  /** The unpartitioned tables [[Schemas]] declares (the dims and the
+    * bridge) are read with their declared schema, so a
     * read infers nothing from file footers (no Spark job); the writers
     * enforce that declaration ([[write]], [[appendRows]]). Every other
     * table — the dt-partitioned facts, the signature table — is read
@@ -153,7 +153,7 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * report "not ingested" on an object-store warehouse and re-append
     * the same day (the exact bug `ingestLogged` exists to prevent). */
   def exists(table: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path(table))
+    val p = new Path(path(table))
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
@@ -176,39 +176,52 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     ingestKeys(dataset)(dt)
 
   /** Every key the manifest logs for `dataset` — plain days and the
-    * streaming backfill's `day#unit` keys — in one read. Loops that would
-    * ask [[ingestLogged]] once per key take this snapshot once instead.
-    * The manifest is append-only, so a key in the snapshot stays logged;
-    * a key missing from it is only current while the caller holds the
-    * dataset's lease. */
+    * streaming backfill's `day#unit` keys — in one directory listing,
+    * no Spark job. Loops that would ask [[ingestLogged]] once per key
+    * take this snapshot once instead. The manifest is append-only, so a
+    * key in the snapshot stays logged; a key missing from it is only
+    * current while the caller holds the dataset's lease. */
   def ingestKeys(dataset: String): Set[String] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    // A column expression, not an interpolated where-string: CLI-supplied
-    // values with quotes must compare as literals, never reparse as SQL.
-    if (!exists(Warehouse.IngestLog)) Set.empty
-    else table(Warehouse.IngestLog).where(col("dataset") === lit(dataset))
-      .select("dt").collect().map(_.getString(0)).toSet
+    val (fs, dir) = manifestDir(dataset)
+    if (!fs.exists(dir)) Set.empty
+    else fs.listStatus(dir).iterator.map(_.getPath.getName)
+      .filterNot(n => n.startsWith(".") || n.startsWith("_"))
+      .map(Warehouse.keyOfMarker).toSet
   }
 
-  def logIngest(dataset: String, dt: String): Unit = {
-    import spark.implicits._
-    // The manifest is the ONE table every dataset's ingest appends to:
-    // per-dataset lease scoping deliberately lets the SIM and SINASC
-    // drivers run concurrently, but two Spark jobs appending to the same
-    // directory share its _temporary staging dir — one job's commit
-    // cleanup can wipe the other's in-flight attempt and silently lose
-    // its manifest row (which later re-appends that day). A short
-    // manifest-scoped lease serializes just this tiny append — and it
-    // BLOCKS with bounded retry rather than failing fast: logIngest runs
-    // AFTER the fact write succeeded, so a throw here (because the other
-    // dataset's driver is mid-append) would leave the day
-    // written-but-unlogged. Contention on this scope is always another
-    // sub-second manifest append, never a long job, so waiting is right.
+  /** Logs `dt` (a day or a `day#unit` key) for `dataset`: creates its
+    * empty marker file. Idempotent, and a crash leaves the key either
+    * logged or not, never half-logged. Callers write the batch first and
+    * log it second, so a crash in between leaves the batch written but
+    * unlogged and its replay converges (CrashReplaySpec).
+    *
+    * Both datasets' drivers take the manifest-scoped lease here. It
+    * BLOCKS with bounded retry rather than failing fast: this runs after
+    * the fact write succeeded, and a throw would leave the day
+    * written-but-unlogged. */
+  def logIngest(dataset: String, dt: String): Unit =
     graft.WriterLease.withLeaseRetry(spark, root,
       graft.WriterLease.processOwner("manifest-append"),
       scope = Warehouse.ManifestScope) {
-      appendRows(Warehouse.IngestLog, Seq((dataset, dt)).toDF("dataset", "dt"))
+      val (fs, dir) = manifestDir(dataset)
+      fs.create(new Path(dir, Warehouse.markerOfKey(dt)), true).close()
     }
+
+  /** `_ingest_log/<dataset>`: the manifest holds one directory per
+    * dataset and one empty file per logged key in it. A file directly
+    * under `_ingest_log/` is the Parquet manifest of earlier versions;
+    * reading it as "nothing logged" would re-ingest every landed day, so
+    * it fails here, before anything is read or written. */
+  private def manifestDir(dataset: String): (FileSystem, Path) = {
+    val top = new Path(path(Warehouse.IngestLog))
+    val fs = top.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(top) && fs.listStatus(top).exists(_.isFile))
+      throw new IllegalStateException(s"$top holds a Parquet ingest manifest, " +
+        "the format before one marker file per key; it is not read as empty, since " +
+        "that would re-ingest every landed day. Convert it: for each (dataset, dt) " +
+        s"row create an empty file $top/<dataset>/<dt, URL-encoded>, then delete " +
+        "the Parquet files.")
+    (fs, new Path(top, dataset))
   }
 
   /** Rewrite a table's (or one fact `dt=` partition's) accumulated
@@ -235,6 +248,8 @@ final class Warehouse(val spark: SparkSession, val root: String) {
     * delete happens only after the new files are live. */
   def compact(tableName: String, targetFileBytes: Long = 128L * 1024 * 1024,
       partition: Option[String] = None): Int = {
+    require(tableName != Warehouse.IngestLog, s"$tableName is the ingest manifest, " +
+      "one empty marker file per logged key: there is nothing to compact")
     val rel = partition.map(p => s"$tableName/$p").getOrElse(tableName)
     // Compaction is a writer too: a Maintain run racing an ingest would
     // rewrite files the ingest is appending around. Scoped to the
@@ -264,7 +279,6 @@ final class Warehouse(val spark: SparkSession, val root: String) {
   private def dropCrashedUnitFiles(tableName: String,
       partition: Option[String]): Unit =
     Warehouse.unitDataset(tableName).foreach { dataset =>
-      import org.apache.hadoop.fs.Path
       val tableDir = new Path(path(tableName))
       val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(tableDir)) return
@@ -305,29 +319,43 @@ object Warehouse {
     "dimDemografia", "dimInfoNascimento")
   val Bridge = "ponteGrupoCausas"
   val Signatures = "ponteAssinaturas"
+  /** The ingest manifest's directory ([[Warehouse.logIngest]]). */
   val IngestLog = "_ingest_log"
   val Facts: Seq[String] = Seq("factNascimentos", "factObitos")
   val AllTables: Seq[String] = Dims ++ Seq(Bridge) ++ Facts
 
   /** The tables read with their declared schema ([[Warehouse.table]]). */
   val Declared: Map[String, org.apache.spark.sql.types.StructType] =
-    (Dims :+ Bridge :+ IngestLog).map(t => t -> Schemas.all(t)).toMap
+    (Dims :+ Bridge).map(t => t -> Schemas.all(t)).toMap
 
-  /** Scope of the manifest-append lease — shared by BOTH datasets'
-    * `logIngest` and by manifest compaction. */
+  /** Scope of the lease both datasets' `logIngest` take. */
   val ManifestScope = "manifest"
 
   /** Single-writer lease scope per table: tables written by the same
     * ingest share one scope (a compaction can't race its own writer),
     * while the two reference DAGs — SIM and SINASC, disjoint fact sets —
-    * stay mutually concurrent, as the reference's Airflow deploys them.
-    * The manifest gets its own scope: both datasets append to it. */
+    * stay mutually concurrent, as the reference's Airflow deploys them. */
   def leaseScope(table: String): String = table match {
     case "factNascimentos" => "sinasc"
     case "factObitos" | Bridge | Signatures => "sim"
-    case IngestLog => ManifestScope
     case t => t
   }
+
+  /** A manifest key's marker file name: UTF-8 percent-encoding of every
+    * byte outside `[A-Za-z0-9-]`, so `day#unit` keys, `/`, `%`, `.` and
+    * spaces survive any FileSystem, and no name starts with `.` or `_`
+    * (hidden names, checksum sidecars). A plain day stays readable:
+    * `2021-07-03`. */
+  private def markerOfKey(key: String): String =
+    key.getBytes(java.nio.charset.StandardCharsets.UTF_8).map { b =>
+      val c = (b & 0xff).toChar
+      if ((c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
+        || c == '-') c.toString
+      else f"%%${b & 0xff}%02X"
+    }.mkString
+
+  private def keyOfMarker(name: String): String =
+    java.net.URLDecoder.decode(name, java.nio.charset.StandardCharsets.UTF_8)
 
   /** The manifest dataset whose `day#unit` keys govern a table's
     * unit-prefixed appends — only the fact tables the streaming backfill
@@ -362,7 +390,6 @@ object Warehouse {
   def rewritePath(spark: SparkSession, dirPath: String,
       targetFileBytes: Long,
       transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.hadoop.fs.Path
     val fs = graft.Persist.fs(spark, dirPath)
     val dir = new Path(dirPath)
     // Hive-style partition dirs, walked to ANY nesting depth

@@ -600,6 +600,147 @@ class OlapSusSpec extends SparkSpecBase {
       == Seq("2021-05-01" -> 0L, "2021-05-02" -> 4L))
   }
 
+  // A warehouse of its own for the header and job-count cases: they
+  // compare whole days and count every job a backfill runs.
+  private lazy val dayWh: Warehouse = {
+    val w = new Warehouse(spark, dir.resolve("wh-days").toString)
+    Dims.seedAll(w, municipioCsv, cboCsv, cidCsv)
+    w
+  }
+
+  private def sinascDay(w: Warehouse, dt: String): Seq[String] = {
+    import org.apache.spark.sql.functions.col
+    sortedRows(w.table("factNascimentos").where(col("dt") === dt).drop("dt"))
+  }
+
+  test("batch ingest reads columns by header name: reordered with an extra column, quoted, or a glob") {
+    assert(Pipeline.ingestSinascFiles(dayWh, Seq(sinascCsv), "2022-01-01") == 4L)
+    val canonical = sinascDay(dayWh, "2022-01-01")
+    // Every line reversed, with an extra column after the fifth field.
+    val fields = Fixtures.sinasc.map(_.split(";", -1).toSeq)
+    def reorder(f: Seq[String], extra: String) = {
+      val r = f.reverse
+      ((r.take(5) :+ extra) ++ r.drop(5)).mkString(";")
+    }
+    val reordered = Fixtures.write(dir, "sinasc_reordered.csv",
+      reorder(fields.head, "EXTRA") +: fields.tail.map(reorder(_, "x")))
+    val quoted = Fixtures.write(dir, "sinasc_quoted.csv",
+      fields.head.map(n => "\"" + n + "\"").mkString(";") +: Fixtures.sinasc.tail)
+    val globDir = Files.createDirectories(dir.resolve("sinasc-glob"))
+    Fixtures.write(globDir, "part-0.csv", Fixtures.sinasc)
+    Seq("2022-01-02" -> reordered, "2022-01-03" -> quoted, "2022-01-04" -> s"$globDir/*.csv")
+      .foreach { case (dt, p) =>
+        assert(Pipeline.ingestSinasc(dayWh, p, dt) == 4L, p)
+        assert(sinascDay(dayWh, dt) == canonical, p)
+      }
+    // The header-derived schema is the one Spark's header inference gives.
+    def inferred(f: String) = spark.read.option("header", "true").option("sep", ";").csv(f).schema
+    Seq(sinascCsv, simCsv, reordered, quoted).foreach { f =>
+      assert(Landing.batchSchema(spark, Seq(f)).contains(inferred(f)), f)
+    }
+    // A header-only or blank file gives no data row: the next file's
+    // rows count, and a batch of only such files has no schema.
+    val headerOnly = Fixtures.write(dir, "sinasc_header_only_2.csv", Seq(Fixtures.sinasc.head))
+    val blank = Fixtures.write(dir, "blank.csv", Seq("", "  "))
+    assert(Landing.batchSchema(spark, Seq(blank, headerOnly, sinascCsv)).contains(inferred(sinascCsv)))
+    assert(Landing.batchSchema(spark, Seq(blank, headerOnly)).isEmpty)
+  }
+
+  test("manifest: each key is one marker file and round-trips; a Parquet manifest fails loudly") {
+    val w = new Warehouse(spark, dir.resolve("wh-manifest").toString)
+    val keys = Seq("2021-07-03", "2021-07-03#sb0", "2021-07-03#sb1a2b3c4d-7",
+      "it's", "a/b", "100%", "two words", ".hidden", "_x", "ação")
+    assert(w.ingestKeys("sinasc").isEmpty)
+    keys.foreach(w.logIngest("sinasc", _))
+    w.logIngest("sinasc", "2021-07-03") // logging a key again changes nothing
+    assert(w.ingestKeys("sinasc") == keys.toSet)
+    keys.foreach(k => assert(w.ingestLogged("sinasc", k), k))
+    assert(!w.ingestLogged("sinasc", "2021-07-04"))
+    assert(w.ingestKeys("sim").isEmpty)
+    val markers = new java.io.File(s"${w.root}/${Warehouse.IngestLog}/sinasc").listFiles()
+      .filterNot(_.getName.startsWith("."))
+    assert(markers.length == keys.size && markers.forall(_.length == 0L))
+    assert(markers.exists(_.getName == "2021-07-03"))
+    val refused = intercept[IllegalArgumentException](w.compact(Warehouse.IngestLog))
+    assert(refused.getMessage.contains("manifest"), refused.getMessage)
+
+    // The Parquet manifest of earlier versions: reading it as "nothing
+    // logged" would re-ingest every landed day.
+    val legacy = new Warehouse(spark, dir.resolve("wh-legacy-manifest").toString)
+    val legacyDir = s"${legacy.root}/${Warehouse.IngestLog}"
+    import spark.implicits._
+    Seq(("sinasc", "2021-03-01")).toDF("dataset", "dt").write.parquet(legacyDir)
+    val landing = Files.createTempDirectory("landing-legacy")
+    Files.createDirectories(landing.resolve("sinasc/dt=2021-03-01"))
+    Fixtures.write(landing.resolve("sinasc/dt=2021-03-01"), "part.csv", Fixtures.sinasc)
+    Seq(() => legacy.ingestKeys("sinasc"), () => Pipeline.backfill(legacy, landing.toString, "sinasc"))
+      .foreach { call =>
+        val ex = intercept[IllegalStateException](call())
+        assert(ex.getMessage.contains(legacyDir), ex.getMessage)
+      }
+    assert(!legacy.exists("factNascimentos"))
+    assert(!new java.io.File(s"$legacyDir/sinasc").exists())
+  }
+
+  /** `body`'s result and the number of Spark jobs that started while it
+    * ran, counted by a test-local listener between two sentinel jobs
+    * (the listener bus delivers job starts in order). */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val sentinel = "graft.spec.sentinel"
+    val l = new SparkListener {
+      val ended = new CountDownLatch(1)
+      @volatile var counting = false
+      @volatile var jobs = 0
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(sentinel))) match {
+          case Some("start") => counting = true
+          case Some(_) => counting = false; ended.countDown()
+          case None => if (counting) jobs += 1
+        }
+    }
+    def mark(phase: String): Unit = {
+      sc.setLocalProperty(sentinel, phase)
+      try sc.parallelize(Seq(0), 1).count() finally sc.setLocalProperty(sentinel, null)
+    }
+    sc.addSparkListener(l)
+    try {
+      mark("start")
+      val r = body
+      mark("end")
+      assert(l.ended.await(2, TimeUnit.MINUTES), "the listener bus did not drain")
+      (r, l.jobs)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("a pending day runs only its fact plan's jobs; a backfill of logged days runs none") {
+    val landing = Files.createTempDirectory("landing-jobs")
+    def land(dataset: String, dt: String, lines: Seq[String]): Unit =
+      Fixtures.write(Files.createDirectories(landing.resolve(s"$dataset/dt=$dt")), "part.csv", lines)
+    // Uncounted first days: each fact's first write, SIM's signature
+    // bootstrap and its new cause groups' appends.
+    land("sinasc", "2022-02-01", Fixtures.sinasc)
+    land("sim", "2022-02-01", Fixtures.sim)
+    Seq("sinasc", "sim").foreach(Pipeline.backfill(dayWh, landing.toString, _))
+    land("sinasc", "2022-02-02", Fixtures.sinasc)
+    land("sim", "2022-02-02", Fixtures.sim)
+    val (sinasc, sinascJobs) = jobsDuring(Pipeline.backfill(dayWh, landing.toString, "sinasc"))
+    assert(sinasc == Seq("2022-02-01" -> 0L, "2022-02-02" -> 4L))
+    // Five dimension broadcasts (the municipio lookup is built once for
+    // both of its joins), the aggregate's map stage and the day write.
+    assert(sinascJobs == 7)
+    // The same rows again, so no cause group is new and nothing is
+    // appended to the bridge: only the bridge merge's count of new rows
+    // and the fact plan run jobs.
+    val (sim, simJobs) = jobsDuring(Pipeline.backfill(dayWh, landing.toString, "sim"))
+    assert(sim == Seq("2022-02-01" -> 0L, "2022-02-02" -> 4L))
+    assert(simJobs == 21)
+    val (_, idle) = jobsDuring(Seq("sinasc", "sim").map(Pipeline.backfill(dayWh, landing.toString, _)))
+    assert(idle == 0)
+  }
+
   test("top_causes: a tie at 10th place keeps the first causes by name, in that order") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.StructType

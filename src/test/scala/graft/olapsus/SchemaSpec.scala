@@ -30,11 +30,10 @@ class SchemaSpec extends SparkSpecBase {
     val wh = new Warehouse(spark, dir.resolve("wh-seeded").toString)
     Dims.seedAll(wh, Fixtures.write(dir, "municipio.csv", Fixtures.municipio),
       Fixtures.write(dir, "cbo.csv", Fixtures.cbo), Fixtures.write(dir, "cid.csv", Fixtures.cid))
-    wh.logIngest("sinasc", "2020-01-01")
     // Footer schemas, not wh.table: that read applies the declaration.
     // Covers the three dims built from seed CSVs (dimMunicipio,
-    // dimOcupacao, dimCausa), whose types come from casts, and the
-    // manifest.
+    // dimOcupacao, dimCausa), whose types come from casts. The ingest
+    // manifest is marker files, not a table, and is not declared.
     def onDisk(t: String) = shape(spark.read.parquet(s"${wh.root}/$t").schema)
     Warehouse.Declared.foreach { case (t, s) => assert(onDisk(t) == shape(s), t) }
   }
